@@ -5,3 +5,7 @@ JinghanMa98/EastStorm_SearchEngine (reference read-only at
 """
 
 __version__ = "0.1.0"
+
+from . import worker_guard as _worker_guard
+
+_worker_guard.install()

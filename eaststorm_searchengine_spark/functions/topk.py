@@ -35,6 +35,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import worker_guard
+
 
 def local_group_topk(
     df: DataFrame,
@@ -66,6 +68,7 @@ def local_group_topk(
         )
 
     def gen(batches):
+        worker_guard.install()
         acc = None
         for pdf in batches:
             if not len(pdf):

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.udfs import extract_title_udf, host_udf
 
 
@@ -112,7 +113,7 @@ def systematic_sample(df: DataFrame, order_col: str, step: int) -> DataFrame:
         offsets.append((pid, acc))
         acc += n
     off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+        local_frame(spark, offsets or [(0, 0)], "_pid int, _off long")
     )
     w = Window.partitionBy("_pid").orderBy(F.asc(order_col))
     return (

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import textproc
 from ..functions import sqltok
+from ..functions.frames import local_frame
 from ..functions.hashing import term_bucket
 from . import codec
 from .index_build import IndexPaths
@@ -316,7 +317,7 @@ class BM25Index:
 
         out_schema = "query_id int, doc_id long, score double"
         if not all_terms:
-            empty = self.spark.createDataFrame([], out_schema)
+            empty = local_frame(self.spark, [], out_schema)
             return self._rank(empty, k, score_round, final_rank)
 
         # df resolved driver-side (one-time cached map / bounded
@@ -324,7 +325,7 @@ class BM25Index:
         dfs = self._term_dfs(all_terms)
         present_terms = [t for t in all_terms if t in dfs]
         if not present_terms:
-            empty = self.spark.createDataFrame([], out_schema)
+            empty = local_frame(self.spark, [], out_schema)
             return self._rank(empty, k, score_round, final_rank)
         buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
         # driver-merge queries run through the one-job serving session
@@ -462,7 +463,7 @@ class BM25Index:
             "rarest_term string, rarest_df long, rarest_chunk_postings long"
         )
         if not all_terms:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
         stats = self._stats_df.filter(F.col("term").isin(all_terms)).select("term", "df")
         meta = (
@@ -490,7 +491,7 @@ class BM25Index:
                         dfs[rarest], int(present[rarest]["n"].sum()),
                     )
                 )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def phrase_search(
         self,
@@ -512,14 +513,14 @@ class BM25Index:
         all_terms = sorted({t for ts in pterms.values() for t in ts})
         out_schema = "query_id int, doc_id long, score double"
         if not all_terms:
-            return self._rank(self.spark.createDataFrame([], out_schema), k, score_round)
+            return self._rank(local_frame(self.spark, [], out_schema), k, score_round)
 
         # df resolved driver-side, same as search() (r8): no per-query
         # broadcast-join job on the phrase path either
         dfs = self._term_dfs(all_terms)
         present_terms = [t for t in all_terms if t in dfs]
         if not present_terms:
-            return self._rank(self.spark.createDataFrame([], out_schema), k, score_round)
+            return self._rank(local_frame(self.spark, [], out_schema), k, score_round)
         buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
         segs = (
             self._segs_df
@@ -620,28 +621,17 @@ class BM25Index:
                     if score_round is not None:
                         s = _round_half_up(s, score_round)
                     out.append((r["query_id"], rk, int(r["doc_id"]), s))
-            if not out:
-                return self.spark.createDataFrame(
-                    [], "query_id int, rank long, doc_id long, score double"
-                )
-            # the VALUES text below renders scores via repr(): NaN/inf
-            # would neither parse as SQL nor sort correctly above —
-            # unreachable with BM25 math, but fail loudly if a future
-            # scorer produces one (ADVICE r03 #5)
+            # NaN/inf would not sort correctly above — unreachable with
+            # BM25 math, but fail loudly if a future scorer produces one
             assert all(math.isfinite(s) for _, _, _, s in out), (
                 "non-finite score in driver-side rank merge"
             )
-            # inline VALUES → Catalyst LocalRelation: the caller's
-            # collect() is served from the driver, NO job — a
-            # parallelize here would fan the ≤ queries×k rows into
-            # defaultParallelism near-empty tasks and task scheduling
-            # would dwarf the data
-            vals = ", ".join(
-                f"({q}, {r}L, {d}L, CAST({s!r} AS DOUBLE))" for q, r, d, s in out
-            )
-            return self.spark.sql(
-                "SELECT col1 AS query_id, col2 AS rank, col3 AS doc_id, "
-                f"col4 AS score FROM VALUES {vals}"
+            # LocalRelation: the caller's collect() is served from the
+            # driver, NO job — a parallelize here would fan the
+            # ≤ queries×k rows into defaultParallelism near-empty tasks
+            # and task scheduling would dwarf the data
+            return local_frame(
+                self.spark, out, "query_id int, rank long, doc_id long, score double"
             )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -845,8 +835,8 @@ def bm25_score_dataframe(
         for t in sorted(set(textproc.tokenize(q.lower()))):
             qrows.append((qid, t))
     if not qrows:
-        return spark.createDataFrame([], "query_id int, rank long, doc_id long, score double")
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+        return local_frame(spark, [], "query_id int, rank long, doc_id long, score double")
+    qdf = local_frame(spark, qrows, "query_id int, term string")
 
     scored = (
         F.broadcast(qdf)

@@ -34,6 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import textproc
+from ..functions.frames import local_frame
 
 
 def _candidates(html: str | None, base_url: str) -> list[str]:
@@ -128,10 +129,10 @@ def crawl_frontier(
     spark = pages.sparkSession
     web = pages.select("url", "html")
     robots_allowed = _robots_gate(spark, robots_map) if robots_map else None
-    frontier = spark.createDataFrame(
-        [(textproc.normalize_seed(s),) for s in seeds], "url string"
+    frontier = local_frame(
+        spark, [(textproc.normalize_seed(s),) for s in seeds], "url string"
     ).distinct()
-    crawled = spark.createDataFrame([], "url string, depth int")
+    crawled = local_frame(spark, [], "url string, depth int")
     for depth in range(max_iters):
         # the gate applies to EVERY url before it is attempted — seeds
         # included, like the reference's pre-HEAD check (Crawler.java:361)

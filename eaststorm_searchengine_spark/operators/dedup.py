@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .. import worker_guard
+from ..functions.frames import local_frame, spread_for_udf
+
 # ---- exact -------------------------------------------------------------
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -228,39 +231,6 @@ def minhash_udf(text: pd.Series) -> pd.Series:
     # shifted into signed-long range for Spark LongType
 
 
-def _spread_for_udf(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
-    """Spread a narrow input across the cores before an expensive
-    Python-side signature pass (r10, guide §2.6/§4): a small corpus
-    parquet arrives as ONE scan partition, which serialized the whole
-    minhash/simhash UDF onto a single core (measured 8.3 s of an
-    11 s entry at 50k docs).  Callers project to the needed columns
-    first, so the repartition shuffles only (id, text).
-
-    Two no-op guards keep this scale-adaptive rather than tuned to one
-    shape: inputs that already have scan parallelism are left alone
-    (no shuffle), and inputs below ``min_bytes`` (plan-statistics
-    estimate; env ``EASTSTORM_SPREAD_MIN_BYTES``, default 2 MB) keep
-    their single-partition plan — at a few thousand rows the
-    repartition's fixed shuffle/stage cost exceeds the single-core UDF
-    time it saves (measured 1.3-2.6× regressions at the 5k-doc scale
-    before the gate)."""
-    import os
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("EASTSTORM_SPREAD_MIN_BYTES", str(2 << 20)))
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = min_bytes  # unknown → assume large (spread)
-    if size < min_bytes:
-        return df
-    return df.repartition(par * 2)
-
-
 def minhash_candidates(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_bands: int = N_BANDS, max_bucket_docs: int = 256,
@@ -290,7 +260,7 @@ def minhash_candidates(
     Pass ``metrics={}`` to learn whether capping engaged
     (``metrics["overcap_buckets"]`` — see :func:`star_capped_pairs`)."""
     rows_per_band = N_HASHES // n_bands
-    sigs = _spread_for_udf(
+    sigs = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", minhash_udf(F.col("text")).alias("sig"))
     bands = sigs.select(
@@ -342,7 +312,7 @@ def simhash_buckets(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
                     prefix_bits: int = 16) -> DataFrame:
     """Near-dup buckets by SimHash prefix (cheap blocking stage; the
     within-bucket hamming check runs on bounded groups)."""
-    sh = _spread_for_udf(
+    sh = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
     return (
@@ -388,7 +358,7 @@ def simhash_near_dups(
     k = max_hamming
     n_blocks = k + 1
     width = 64 // n_blocks
-    sh = _spread_for_udf(
+    sh = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", simhash_udf(F.col("text")).alias("sh"))
     block_cols = []
@@ -458,11 +428,12 @@ def _gram_explode(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
             StructField("n_grams", IntegerType()),
         ]
     )
-    src = _spread_for_udf(
+    src = spread_for_udf(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     )
 
     def gen(batches):
+        worker_guard.install()
         for b in batches:
             ids: list = []
             grams: list = []
@@ -521,8 +492,9 @@ def ngram_jaccard_pairs(
 
     Boundary completeness: the output filter is ``round(J, 6) ≥ t``,
     so a pair with true J marginally below t can round in; the length
-    filter therefore uses ``t − 1e-6`` (round(J,6) ≥ t ⟹ J ≥ t−5e-7 ⟹
-    min/max ≥ t−5e-7 > t−1e-6 — no qualifying pair is dropped).
+    filter and the prefix length therefore use ``t − 1e-6`` (round(J,6)
+    ≥ t ⟹ J ≥ t−5e-7 ⟹ min/max ≥ t−5e-7 > t−1e-6 — no qualifying pair
+    is dropped, and both routes return the same pairs).
 
     100-TB contract (VERDICT r03 #3): pass ``stage_dir`` to stage the
     exploded grams to parquet once (resumable, bounded by disk) instead
@@ -583,11 +555,13 @@ def ngram_jaccard_pairs(
         prefix = (
             ex.join(dfreq, "gram")
             .withColumn("rk", F.row_number().over(w_rank))
-            # +1e-9 before floor: binary-float (1-t)*n lands just below
-            # the exact integer when t*n is whole (e.g. t=0.8, n=10 →
-            # 1.9999…), which would shorten the prefix and break
-            # completeness; erring one longer is always safe
-            .filter(F.col("rk") <= F.floor((1.0 - threshold) * F.col("n_grams") + 1e-9) + 1)
+            # prefix length from lo, not t: the direct route keeps pairs
+            # with round(J, 6) ≥ t, i.e. J ≥ lo, so the prefix must be
+            # complete for J ≥ lo too.  +1e-9 before floor: binary-float
+            # (1-t)*n lands just below the exact integer when t*n is
+            # whole (e.g. t=0.8, n=10 → 1.9999…), which would shorten the
+            # prefix and break completeness; erring one longer is safe
+            .filter(F.col("rk") <= F.floor((1.0 - lo) * F.col("n_grams") + 1e-9) + 1)
             .select("doc_id", "gram", "n_grams")
         )
         a, b = prefix.alias("a"), prefix.alias("b")
@@ -710,7 +684,7 @@ def connected_components(
                 # min-root union: the root IS the component min id
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(n, find(n)) for n in sorted(parent)]
-        return pairs.sparkSession.createDataFrame(rows, "node long, comp long")
+        return local_frame(pairs.sparkSession, rows, "node long, comp long")
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -833,7 +807,7 @@ def ngram_jaccard_pairs_arrays(
         ex.join(dfreq, "gram")
         .withColumn("rk", F.row_number().over(w_rank))
         .withColumn("n_grams", F.count("*").over(w_doc))
-        .filter(F.col("rk") <= F.floor((1.0 - threshold) * F.col("n_grams") + 1e-9) + 1)
+        .filter(F.col("rk") <= F.floor((1.0 - (threshold - 1e-6)) * F.col("n_grams") + 1e-9) + 1)
         .select("doc_id", "gram")
     )
     a, b = prefix.alias("a"), prefix.alias("b")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.udfs import host_udf
 
 DECAY = 0.85
@@ -119,9 +120,7 @@ def _pagerank_driver(
             h: _round_half_up(base + DECAY * (inc + dc), 8)
             for h, inc in incoming.items()
         }
-    return spark.createDataFrame(
-        sorted(ranks.items()), "host string, rank double"
-    )
+    return local_frame(spark, sorted(ranks.items()), "host string, rank double")
 
 
 def pagerank(
@@ -153,7 +152,7 @@ def pagerank(
     ).collect()[0]
     n_hosts, n_edges = int(agg["n"]), int(agg["e"])
     if n_hosts == 0:
-        return spark.createDataFrame([], "host string, rank double")
+        return local_frame(spark, [], "host string, rank double")
     if n_edges <= driver_edge_threshold:
         return _pagerank_driver(spark, links, n_hosts, max_iterations)
     init = 1.0 / n_hosts

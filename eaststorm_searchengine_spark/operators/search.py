@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import textproc
+from ..functions.frames import local_frame
 from ..functions.udfs import extract_title_udf, host_udf
 
 WEIGHT_TITLE = 1.5
@@ -67,10 +68,10 @@ def composite_search(
             if t:
                 qrows.append((qid, t))
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id int, rank long, url string, score double, title string"
+        return local_frame(
+            spark, [], "query_id int, rank long, url string, score double, title string"
         )
-    qdf = F.broadcast(spark.createDataFrame(qrows, "query_id int, term string"))
+    qdf = F.broadcast(local_frame(spark, qrows, "query_id int, term string"))
 
     def hits(idx: DataFrame, weight: float) -> DataFrame:
         h = qdf.join(idx, "term")
@@ -122,7 +123,8 @@ def composite_search(
         F.coalesce(extract_title_nonblank_udf("html"), F.col("url")).alias("title"),
     )
     qmeta = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(qid, textproc.java_trim(q).lower()) for qid, q in queries],
             "query_id int, qlower string",
         )

@@ -19,32 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
-    """Spread a narrow input across the cores before a per-row scoring
-    pass (r10, guide §2.6): a small embeddings parquet arrives as ONE
-    scan partition, which serialized the whole cosine/assignment work
-    onto a single core.  Callers project to the needed columns first;
-    inputs with real scan parallelism are untouched, and inputs below
-    ``min_bytes`` (plan-statistics estimate; env
-    ``EASTSTORM_SPREAD_MIN_BYTES``, default 2 MB) keep their
-    single-partition plan — the repartition's fixed cost exceeds the
-    single-core work it saves at a few thousand rows (measured)."""
-    import os
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("EASTSTORM_SPREAD_MIN_BYTES", str(2 << 20)))
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = min_bytes  # unknown → assume large (spread)
-    if size < min_bytes:
-        return df
-    return df.repartition(par * 2)
+from .. import worker_guard
+from ..functions.frames import local_frame, spread_for_udf
 
 
 def _cosine(vec_col, qcol):
@@ -107,25 +83,33 @@ def cosine_topk(
     r10: the per-row JVM ``aggregate(zip_with)`` fold over the
     crossJoin (44 µs/cosine — scalar codegen over array cells) is
     replaced by one BLAS matmul per Arrow batch against the broadcast
-    query matrix (guide §4.2); non-finite cosines (zero-norm or NaN
-    inputs) are dropped inside the scorer — exactly the rows
-    ``_rank_topk``'s NULL/NaN filter removed before."""
+    query matrix (guide §4.2); NULL and wrong-length vectors and
+    non-finite cosines (zero-norm or NaN inputs) are dropped inside the
+    scorer — exactly the rows ``_rank_topk``'s NULL/NaN filter removed
+    before."""
     Q = np.asarray([v for _, v in query_vectors], dtype=np.float64)
     qids = np.asarray([qid for qid, _ in query_vectors], dtype=np.int64)
-    src = _spread(
+    src = spread_for_udf(
         embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
     )
 
     def score(batches):
+        worker_guard.install()
         qn = np.linalg.norm(Q, axis=1)
+        dim = Q.shape[1]
         for pdf in batches:
-            if not len(pdf):
+            vecs = pdf["vec"].to_numpy()
+            # no cosine for NULL / wrong-length vectors (JVM _cosine: NULL)
+            ok = np.fromiter(
+                (v is not None and len(v) == dim for v in vecs), dtype=bool, count=len(vecs)
+            )
+            if not ok.any():
                 continue
-            M = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+            M = np.vstack(vecs[ok]).astype(np.float64)
             vn = np.linalg.norm(M, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = (M @ Q.T) / np.outer(vn, qn)
-            ids = pdf["vec_id"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()[ok]
             r, c = np.nonzero(np.isfinite(cos))
             yield pd.DataFrame(
                 {
@@ -162,6 +146,7 @@ def _multi_sig_col(vec_col, all_planes: list[np.ndarray]):
 
     @pandas_udf(ArrayType(LongType()))
     def sigs(vecs: pd.Series) -> pd.Series:
+        worker_guard.install()
         if vecs.empty:
             return pd.Series([], dtype=object)
         M = np.vstack(vecs.to_numpy())  # (n, dim)
@@ -243,7 +228,7 @@ def lsh_cosine_topk(
             for pb in sorted(probes):
                 qrows.append((qid, [float(x) for x in v], t, pb))
     qdf = F.broadcast(
-        spark.createDataFrame(qrows, "query_id int, qvec array<double>, table int, bucket long")
+        local_frame(spark, qrows, "query_id int, qvec array<double>, table int, bucket long")
     )
     scored = (
         corpus.join(qdf, ["table", "bucket"])
@@ -303,6 +288,7 @@ def cosine_near_dup_pairs(
     raw_cut = threshold - 1e-6
 
     def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        worker_guard.install()
         bi, bj = int(key[0]), int(key[1])
         A = pdf[pdf["side"] == 0]
         B = pdf[pdf["side"] == 1]
@@ -398,8 +384,8 @@ def lsh_near_dup_pairs(
     (``metrics["overcap_buckets"]`` — see ``dedup.star_capped_pairs``)."""
     first = embeddings.select(vec_col).first()
     if first is None:  # empty corpus → no pairs
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
+        return local_frame(
+            embeddings.sparkSession, [], "vec_a long, vec_b long, cosine double"
         )
     dim = len(first[0])
     base = embeddings.select(
@@ -544,7 +530,7 @@ class IVFIndex:
         self.spark = embeddings.sparkSession
         norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, v: a + v * v))
         base = (
-            _spread(
+            spread_for_udf(
                 embeddings.select(
                     F.col(id_col).alias("vec_id"),
                     F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
@@ -598,6 +584,7 @@ class IVFIndex:
 
         @pandas_udf(IntegerType())
         def assign(units: pd.Series) -> pd.Series:
+            worker_guard.install()
             if units.empty:
                 return pd.Series([], dtype="int32")
             M = np.vstack(units.to_numpy())
@@ -631,8 +618,8 @@ class IVFIndex:
         lists per query — one probe-join job against the persisted
         assignment."""
         if self.empty:
-            return self.spark.createDataFrame(
-                [], "query_id int, rank long, vec_id long, cosine double"
+            return local_frame(
+                self.spark, [], "query_id int, rank long, vec_id long, cosine double"
             )
         qrows = []
         for qid, v in query_vectors:
@@ -647,9 +634,7 @@ class IVFIndex:
             for lid in np.argsort(-aff)[:n_probe]:
                 qrows.append((qid, [float(x) for x in v], int(lid)))
         qdf = F.broadcast(
-            self.spark.createDataFrame(
-                qrows, "query_id int, qvec array<double>, list_id int"
-            )
+            local_frame(self.spark, qrows, "query_id int, qvec array<double>, list_id int")
         )
         scored = self.lists.join(qdf, "list_id").select(
             "query_id",

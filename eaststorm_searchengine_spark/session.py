@@ -9,6 +9,9 @@ Local testing runs on ``local[N]`` but every setting is chosen for the
   Arrow batch transfer is the only acceptable Python boundary).
 * ``spark.sql.shuffle.partitions`` defaults to cores locally; on a real
   cluster set it ~2-3× total cores — AQE coalesces the excess.
+* Cores and driver heap default to the host's usable CPUs and half of
+  its RAM (at most 24 GB); ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM``
+  override them.
 """
 
 from __future__ import annotations
@@ -18,6 +21,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not on Linux
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{max(1024, min(24 << 10, ram_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "eaststorm-spark",
     cores: int | None = None,
@@ -25,7 +43,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cores())
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -40,7 +58,7 @@ def get_spark(
         # pages.html rows are up to 500 KB (Crawler.java:28); keep scan
         # splits bounded so a partition of html blobs fits executor memory.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

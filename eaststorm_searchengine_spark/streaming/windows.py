@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import worker_guard
+
 
 def _window_agg(df: DataFrame, window_sec: int) -> DataFrame:
     """The shared tumbling-window aggregation — applied to both the
@@ -90,6 +92,7 @@ def _session_fn(gap_sec: int):
     def fn(
         key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        worker_guard.install()
         (user_id,) = key
         rows = pd.concat(list(pdfs)).sort_values("epoch")
         if state.exists:

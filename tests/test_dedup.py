@@ -357,3 +357,20 @@ def test_star_cap_metrics_report_engagement(spark):
     m2: dict = {}
     dedup.minhash_candidates(flood, max_bucket_docs=64, metrics=m2).count()
     assert m2["overcap_buckets"] >= dedup.N_BANDS
+
+
+def test_ngram_routes_agree_at_rounding_boundary(spark):
+    """J = 2/3 rounds (6 digits) onto t = 0.666667, so the direct route
+    keeps the pair.  With the prefix length taken from the exact t, doc 1
+    (3 grams) would index only its rare unshared gram and the prefix
+    route would miss the pair; taken from t − 1e-6 both routes agree."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "b c d e")], "doc_id long, text string"
+    )
+    key = lambda df: sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+    t = 0.666667
+    direct = key(dedup.ngram_jaccard_pairs(docs, n=3, threshold=t, direct_rows_budget=1 << 60))
+    prefix = key(dedup.ngram_jaccard_pairs(docs, n=3, threshold=t, direct_rows_budget=0))
+    assert direct == [(1, 2, 0.666667)]
+    assert prefix == direct
+    assert key(dedup.ngram_jaccard_pairs_arrays(docs, n=3, threshold=t)) == direct

@@ -200,3 +200,18 @@ def test_nan_cosine_excluded_deterministically(spark):
     assert all(r["vec_id"] != 99 for r in out)
     assert [r["rank"] for r in out] == [1, 2, 3]
     assert all(r["cosine"] == 1.0 for r in out)
+
+
+def test_cosine_topk_skips_null_and_ragged_vectors(spark):
+    """One NULL and one short embedding must not fail the exact scorer:
+    they have no cosine (the JVM _cosine yields NULL for them), so the
+    result equals the top-k over the well-formed rows alone."""
+    rng = np.random.RandomState(5)
+    good = [(i, rng.standard_normal(4).tolist()) for i in range(30)]
+    bad = [(100, None), (101, [1.0, 0.0])]
+    schema = "vec_id long, embedding array<double>"
+    q = [(1, good[0][1]), (2, [0.0, 1.0, 0.0, 0.0])]
+    key = lambda df: [tuple(r) for r in df.collect()]
+    got = key(similarity.cosine_topk(spark.createDataFrame(good + bad, schema), q, k=5))
+    want = key(similarity.cosine_topk(spark.createDataFrame(good, schema), q, k=5))
+    assert got == want and len(got) == 10
