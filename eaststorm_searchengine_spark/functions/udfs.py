@@ -14,7 +14,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import textproc
-from ..stemmer import porter_stem
 
 
 def _as_str(s: pd.Series) -> pd.Series:
@@ -24,28 +23,10 @@ def _as_str(s: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """HTML → normalized text (Indexer.java:83-127 semantics)."""
-    return _as_str(html).map(textproc.extract_text)
-
-
 @pandas_udf(ArrayType(StringType()))
 def tokenize_udf(text: pd.Series) -> pd.Series:
     """Normalized text → body tokens (Indexer.java:129-140)."""
     return text.map(textproc.tokenize)
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_stem_udf(text: pd.Series) -> pd.Series:
-    """Body tokens + Porter stemming (north-star analyzer variant)."""
-    return text.map(lambda t: [porter_stem(w) for w in textproc.tokenize(t)])
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_and_tokenize_udf(html: pd.Series) -> pd.Series:
-    """Full returnCleanedupPage pipeline (Indexer.java:83-141)."""
-    return _as_str(html).map(textproc.extract_and_tokenize)
 
 
 @pandas_udf(StringType())
@@ -85,12 +66,6 @@ def url_tokens_udf(url: pd.Series) -> pd.Series:
 def alt_tokens_udf(html: pd.Series) -> pd.Series:
     """<img alt> tokens minus stoplist (ImageAltSelfIndexer.java:44-125)."""
     return _as_str(html).map(textproc.extract_alt_tokens)
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    """Raw <a href> values (Crawler.java:848-861)."""
-    return _as_str(html).map(textproc.extract_links)
 
 
 @pandas_udf(ArrayType(StringType()))
@@ -138,12 +113,6 @@ def host_udf(url: pd.Series) -> pd.Series:
     return url.map(textproc.extract_host)
 
 
-@pandas_udf(StringType())
-def normalize_url_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Relative-URL normalization (Crawler.java:663-777)."""
-    return pd.Series([textproc.normalize_url(b, h) for b, h in zip(base, href)])
-
-
 # Anchor-text extraction needs (target_url, position-indexed tokens) per
 # <a> tag — returned as an array of structs for downstream explode.
 from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: E402
@@ -186,87 +155,6 @@ def _anchor_hits(html) -> list[dict]:
 @pandas_udf(_ANCHOR_HIT)
 def anchor_hits_udf(html: pd.Series) -> pd.Series:
     return html.map(_anchor_hits)
-
-
-# Per-document posting synthesis: tf + 1-based positions are a
-# *within-row* computation, so they're built here in one vectorized pass
-# instead of an explode → groupBy(term, doc) → collect_list aggregation
-# (which allocates millions of tiny buffers JVM-side and anti-scales).
-from pyspark.sql.types import LongType as _LongType  # noqa: E402
-
-from .hashing import term_hash63  # noqa: E402
-
-_DOC_POSTINGS_TYPE = StructType(
-    [
-        StructField("dl", IntegerType()),
-        StructField(
-            "postings",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("term", StringType()),
-                        StructField("th", _LongType()),  # term_hash63
-                        StructField("tf", IntegerType()),
-                        StructField("positions", ArrayType(IntegerType())),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-_TH_CACHE: dict[str, int] = {}
-
-
-def _th(t: str) -> int:
-    h = _TH_CACHE.get(t)
-    if h is None:
-        h = term_hash63(t)
-        if len(_TH_CACHE) < 1_000_000:  # bounded per-worker cache
-            _TH_CACHE[t] = h
-    return h
-
-
-def _doc_postings(tokens: list[str]) -> list[dict]:
-    acc: dict[str, list[int]] = {}
-    for i, t in enumerate(tokens):
-        acc.setdefault(t, []).append(i + 1)
-    return [
-        {"term": t, "th": _th(t), "tf": len(ps), "positions": ps}
-        for t, ps in acc.items()
-    ]
-
-
-def _doc_postings_frame(token_lists: list[list[str]]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "dl": pd.array([len(ts) for ts in token_lists], dtype="int32"),
-            "postings": [_doc_postings(ts) for ts in token_lists],
-        }
-    )
-
-
-@pandas_udf(_DOC_POSTINGS_TYPE)
-def doc_postings_udf(text: pd.Series) -> pd.DataFrame:
-    """Normalized text → per-doc posting fragments (Indexer.java:129-140
-    tokens; positions are 1-based token indexes)."""
-    return _doc_postings_frame([textproc.tokenize(t) for t in text])
-
-
-@pandas_udf(_DOC_POSTINGS_TYPE)
-def doc_postings_from_html_udf(html: pd.Series) -> pd.DataFrame:
-    """Raw HTML → per-doc posting fragments via the full
-    returnCleanedupPage pipeline (Indexer.java:83-141)."""
-    return _doc_postings_frame([textproc.extract_and_tokenize(h) for h in _as_str(html)])
-
-
-@pandas_udf(_DOC_POSTINGS_TYPE)
-def doc_postings_stem_udf(text: pd.Series) -> pd.DataFrame:
-    """Tokens + Porter stemming → per-doc posting fragments."""
-    return _doc_postings_frame(
-        [[porter_stem(w) for w in textproc.tokenize(t)] for t in text]
-    )
 
 
 # Combined per-page field terms: all four url-set index tokenizers in

@@ -49,20 +49,6 @@ def cogroup_strings(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def fold_by_key_sum(kv: DataFrame, key: str, value: str) -> DataFrame:
-    """``foldByKey`` with a commutative numeric fold → groupBy sum
-    (``flame/FlamePairRDD.java:24-35``; the reference's contract is
-    order-dependent but every reference job folds commutatively —
-    SURVEY.md §7 documents the deliberate canonicalization)."""
-    return kv.groupBy(key).agg(F.sum(value).alias("value"))
-
-
-def intersection(a: DataFrame, b: DataFrame) -> DataFrame:
-    """``FlameRDD.intersection`` — dedup both sides
-    (``flame/FlameRDD.java:105-112``)."""
-    return a.distinct().intersect(b.distinct())
-
-
 def anti_join(frontier: DataFrame, crawled: DataFrame, on: str) -> DataFrame:
     """The crawler's "candidate URLs not yet crawled" pattern
     (``jobs/Crawler.java:279-298``) as a left-anti join."""

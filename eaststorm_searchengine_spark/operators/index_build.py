@@ -1,12 +1,24 @@
 """Inverted-index construction — the engine's core batch pipeline.
 
 Implements BASELINE.json north_star: vectorized tokenization →
-per-(term, doc) postings with tf + positions → salted
-repartition-by-term shuffle → per-partition sorted posting runs →
-delta-gap + varbyte block encoding with block-max metadata, written as
-term-bucketed segment files.  Replaces the reference's eager
-string-fold index build (``jobs/Indexer.java:36-75``) with a
+per-(term, doc) postings with tf + positions → delta-gap + varbyte
+block encoding with block-max metadata → salted (bucket, chunk)
+shuffle into term-bucketed segment files.  Replaces the reference's
+eager string-fold index build (``jobs/Indexer.java:36-75``) with a
 shuffle-conscious DataFrame plan.
+
+One pipeline, two steps:
+
+1. **Fragment encode** (:func:`_make_fragment_gen`).  Each Arrow batch
+   of documents is tokenized once and turned into finished compressed
+   block rows, plus one reserved ``#doclens#`` row carrying the batch's
+   (doc_id, dl) pairs — token-less documents included, so n_docs and
+   avgdl count them.
+2. **Canonical re-chunk** (:func:`_compact_segments`).  The compressed
+   fragment blocks are shuffled on (bucket, chunk) and re-encoded per
+   group; the output depends only on the posting set, not on how it
+   was fragmented.  doclens/, term_stats/, lineage/ and stats.json
+   derive from the fragment rows and the re-chunked segments.
 
 Scale design (the 10^12-doc story):
 
@@ -21,26 +33,21 @@ Scale design (the 10^12-doc story):
 * **Term buckets give query-side pruning.**  Segments are written
   partitioned by ``bucket = xxhash64(term) % n_buckets``; a query reads
   only its terms' buckets (directory-level partition pruning).
-* **Single tokenize pass.**  Tokenization (the expensive pandas-UDF
-  stage) runs once; the aggregated postings are staged to parquet, and
-  doc lengths, corpus stats, segments, term stats and lineage all derive
-  from the staged postings — no recomputation of lineage per action.
-  The staging directory doubles as the build checkpoint.
 * **Block-max metadata.**  Each 128-posting block stores
   ``(max_tf, min_dl)``; the query computes the WAND upper bound
   ``idf · tfnorm(max_tf, min_dl, avgdl)`` with broadcast stats, so the
   build needs no stats pre-pass.
 
-Two build paths share this file (both serve the identical query
-engine, equality-tested):
+Entry points (all serve the identical query engine, equality-tested):
 
-* ``build_index`` — the north-star shape: doc-postings UDF → staged
-  parquet (checkpoint) → salted repartition-by-term-bucket shuffle
-  keyed on (bucket, chunk) → per-group sorted encode.  Term-clustered
-  segment layout; resumable variant ``build_index_resumable``.
-* ``build_index_fast`` — zero-shuffle MapReduce-indexer shape: each
-  Arrow batch emits finished compressed block rows (plus per-batch
-  doclen rows); measured 0.94 scaling efficiency 2→8 cores at 1M docs.
+* ``build_index`` — range-partition → fragment encode → re-chunk.
+* ``build_index_resumable`` — the same, with the fragment encode run as
+  checkpointed doc-id-range slices staged under ``postings/``; its
+  segments/, doclens/ and term_stats/ are row-equal to ``build_index``'s.
+* ``build_index_fast`` — the fragment encode alone, zero shuffle:
+  fragment-layout segments; measured 0.94 scaling efficiency 2→8 cores
+  at 1M docs.
+* ``compact_index`` — the re-chunk alone, over existing segment stores.
 """
 
 from __future__ import annotations
@@ -55,14 +62,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqltok
-from ..functions.udfs import (
-    doc_postings_from_html_udf,
-    doc_postings_stem_udf,
-    doc_postings_udf,
-    extract_and_tokenize_udf,
-    tokenize_stem_udf,
-    tokenize_udf,
-)
 from . import codec
 from ..sources import fsio
 
@@ -102,18 +101,16 @@ DEFAULT_BUCKETS = 16
 MAX_GROUP_POSTINGS = 1 << 21  # ~2M postings ≈ low hundreds of MB w/ positions
 
 
-def group_subsplits(
-    n_docs: int, avgdl: float, chunk_bits: int, n_buckets: int,
-    max_group: int = MAX_GROUP_POSTINGS,
-) -> int:
+def group_subsplits(n_docs: int, avgdl: float, chunk_bits: int, n_buckets: int) -> int:
     """Number of term-hash sub-splits per (bucket, chunk) encode group
-    so the expected per-group posting mass stays under ``max_group``.
+    so the expected per-group posting mass stays under
+    ``MAX_GROUP_POSTINGS`` (read at call time).
     ``avgdl`` (tokens/doc) upper-bounds unique-terms/doc, so this is a
     safe overestimate of postings/doc.  Returns 1 (no extra salt) at
     sandbox scales; ~3 at the production 2^18 span with web avgdl."""
     chunk_docs = min(max(n_docs, 1), 1 << chunk_bits)
     expected = chunk_docs * max(avgdl, 1.0) / max(n_buckets, 1)
-    return max(1, -(-int(expected) // max_group))
+    return max(1, -(-int(expected) // MAX_GROUP_POSTINGS))
 
 # Block metadata stores (max_tf, min_dl) rather than a precomputed
 # tf-norm: tfnorm(tf, dl) is monotone ↑ in tf and ↓ in dl, so
@@ -153,185 +150,13 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
 class IndexPaths:
     def __init__(self, root: str):
         self.root = root
-        self.postings = os.path.join(root, "postings")  # staged, also checkpoint
+        self.postings = os.path.join(root, "postings")  # resumable slices (checkpoint)
         self.segments = os.path.join(root, "segments")
         self.term_stats = os.path.join(root, "term_stats")
         self.doclens = os.path.join(root, "doclens")
         self.stats = os.path.join(root, "stats.json")
         self.lineage = os.path.join(root, "lineage")
         self.commits = os.path.join(root, "_commits")
-
-
-def tokenize_docs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stem: bool = False,
-    from_html: bool = False,
-) -> DataFrame:
-    """(doc_id, tokens, dl). Tokens per ``jobs/Indexer.java:129-140``;
-    optional Porter stemming (north-star analyzer).  With
-    ``from_html=True`` the column is raw HTML and the full
-    returnCleanedupPage pipeline (extraction + tokenize,
-    ``Indexer.java:83-141``) runs in one vectorized UDF — the true
-    webtext workload."""
-    if from_html:
-        udf = extract_and_tokenize_udf
-    else:
-        udf = tokenize_stem_udf if stem else tokenize_udf
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        udf(F.col(text_col)).alias("tokens"),
-    ).withColumn("dl", F.size("tokens"))
-
-
-def doc_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stem: bool = False,
-    from_html: bool = False,
-    n_buckets: int = DEFAULT_BUCKETS,
-    chunk_bits: int = CHUNK_BITS,
-) -> DataFrame:
-    """(term, doc_id, tf, positions, dl, bucket, chunk) in ONE vectorized
-    pass: tf and 1-based positions are per-document facts, so the UDF
-    emits finished posting fragments and the only JVM work is an explode
-    — no distributed groupBy(term, doc) ever happens.  (The first
-    implementation aggregated exploded tokens with collect_list; the
-    millions of per-group buffers thrashed GC and anti-scaled with
-    cores.)  Positions convention per ``AnchorTextIndexer.java:57-66``;
-    postings carry tf+positions per the north_star."""
-    if from_html:
-        udf = doc_postings_from_html_udf
-    else:
-        udf = doc_postings_stem_udf if stem else doc_postings_udf
-    # explode_outer keeps token-less documents as a null-term row, so
-    # doclens / n_docs / avgdl still count them (the DuckDB oracle and
-    # the reference's corpus stats do); the segment builder filters the
-    # null rows out.
-    frag = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        udf(F.col(text_col)).alias("dp"),
-    ).select(
-        "doc_id", F.col("dp.dl").alias("dl"), F.explode_outer("dp.postings").alias("p")
-    )
-    # bucket = term_hash63 % n_buckets — the hash comes from the UDF
-    # (functions/hashing.py), so query-side pruning predicates are
-    # computable in plain Python with no JVM hash round-trip
-    return frag.select(
-        F.col("p.term").alias("term"),
-        "doc_id",
-        F.col("p.tf").alias("tf"),
-        F.col("p.positions").alias("positions"),
-        "dl",
-        F.coalesce(
-            F.pmod(F.col("p.th"), F.lit(n_buckets)).cast("int"), F.lit(0)
-        ).alias("bucket"),
-        F.floor(F.col("doc_id") / F.lit(1 << chunk_bits)).cast("long").alias("chunk"),
-    )
-
-
-def _encode_blocks(
-    bucket: int, term: str, chunk: int,
-    docs: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-    positions: list, rows: list,
-) -> None:
-    """Append ≤ ceil(n/128) block rows for one (term, chunk) run."""
-    for s in range(0, len(docs), BLOCK):
-        e = min(s + BLOCK, len(docs))
-        b_docs = codec.delta_encode(docs[s:e].astype(np.uint64))
-        b_tfs = codec.vb_encode(tfs[s:e].astype(np.uint64))
-        b_dls = codec.vb_encode(dls[s:e].astype(np.uint64))
-        b_pos = codec.encode_positions(positions[s:e]) if positions else b""
-        rows.append(
-            {
-                "bucket": bucket,
-                "term": term,
-                "chunk": chunk,
-                "first_doc": int(docs[s]),
-                "last_doc": int(docs[e - 1]),
-                "n": e - s,
-                "max_tf": int(tfs[s:e].max()) if len(tfs) else 0,
-                "min_dl": int(dls[s:e].min()) if len(dls) else 0,
-                "bytes": len(b_docs) + len(b_tfs) + len(b_dls) + len(b_pos),
-                "docs": b_docs,
-                "tfs": b_tfs,
-                "dls": b_dls,
-                "pos": b_pos,
-            }
-        )
-
-
-def _encode_bucket_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-    """REFERENCE encoder (readable, per-run loop) — kept as the
-    byte-identity oracle for the production `_encode_bucket_chunk_vec`
-    (test_vectorized_encoder_matches_loopy_reference).
-
-    One (bucket, chunk) shuffle group → block rows for EVERY term run
-    inside it.  History of the two r6 steps this shape encodes: (a)
-    grouping used to be one applyInPandas group per (bucket, term,
-    chunk) — with a realistic vocabulary that is hundreds of thousands
-    of tiny groups and the ~0.3 ms per-group Arrow/pandas overhead
-    dominated (10k-vocab corpus: 80 s vs 8 s small-vocab); grouping by
-    (bucket, chunk) caps the group COUNT at n_buckets × chunks while
-    term-hash bucketing bounds group SIZE at ~chunk_tokens/n_buckets.
-    (b) The per-run codec calls inside the group were then the next
-    floor (~1.6 ms per tiny run × |vocab|×chunks runs) — the _vec twin
-    removes them with the segmented codec (same-session A/B on the
-    10k-vocab corpus: 14.9 → 10.6 s end-to-end)."""
-    rows: list = []
-    if not len(pdf):
-        return pd.DataFrame(rows, columns=SEGMENT_COLS)
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-    bucket = int(pdf["bucket"].iloc[0])
-    chunk = int(pdf["chunk"].iloc[0])
-    docs_all = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs_all = pdf["tf"].to_numpy(dtype=np.int64)
-    dls_all = pdf["dl"].to_numpy(dtype=np.int64)
-    pos_all = pdf["positions"].tolist()
-    terms = pdf["term"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
-    bounds = np.r_[starts, len(terms)]
-    for i in range(len(starts)):
-        s, e = int(bounds[i]), int(bounds[i + 1])
-        _encode_blocks(
-            bucket, str(terms[s]), chunk,
-            docs_all[s:e], tfs_all[s:e], dls_all[s:e], pos_all[s:e], rows,
-        )
-    return pd.DataFrame(rows, columns=SEGMENT_COLS)
-
-
-def _encode_bucket_chunk_vec(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fully vectorized twin of :func:`_encode_bucket_chunk` — the
-    production encoder (byte-identical output, equality pytest-gated
-    on randomized corpora).
-
-    The loopy path costs ~1.6 ms per TINY (term, chunk) run (four
-    fixed-overhead codec calls + a pure-Python position flatten), and
-    a realistic vocabulary means hundreds of thousands of such runs —
-    ~85 % of the whole 10k-vocab build was encoder overhead.  Here the
-    whole (bucket, chunk) group is encoded in ONE pass per stream:
-    block boundaries are computed vectorized (every run start is a
-    block start, so per-block delta resets land exactly where the
-    per-run path puts them), the segmented codec
-    (:func:`codec.vb_encode_segmented`) emits one buffer + per-block
-    byte offsets, and per-block rows are cheap buffer slices.  The
-    only remaining per-element Python work is ``len()`` over the
-    position lists."""
-    if not len(pdf):
-        return pd.DataFrame([], columns=SEGMENT_COLS)
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-    n = len(pdf)
-    return _encode_sorted_runs(
-        pdf["term"].to_numpy(),
-        np.full(n, int(pdf["bucket"].iloc[0]), dtype=np.int64),
-        np.full(n, int(pdf["chunk"].iloc[0]), dtype=np.int64),
-        pdf["doc_id"].to_numpy(dtype=np.int64),
-        pdf["tf"].to_numpy(dtype=np.int64),
-        pdf["dl"].to_numpy(dtype=np.int64),
-        pdf["positions"].tolist(),
-    )
 
 
 def _encode_sorted_runs(
@@ -341,21 +166,22 @@ def _encode_sorted_runs(
     docs: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    pos_all: list,
+    positions: tuple[np.ndarray, np.ndarray],
 ) -> pd.DataFrame:
-    """Shared vectorized core: posting streams already grouped into
-    contiguous (term, chunk) runs (equal terms adjacent, doc ids
-    ascending within a run; ``buckets``/``chunks`` constant within a
-    run) → block rows.  Every run start is a block start, so per-block
-    delta resets land exactly where the per-run loopy path puts them;
-    block boundaries, metadata (reduceat) and all four byte streams
-    (segmented codec) are computed without a per-run Python loop.
+    """The block encoder every build path runs: posting streams already
+    grouped into contiguous (term, chunk) runs (equal terms adjacent,
+    doc ids ascending within a run; ``buckets``/``chunks`` constant
+    within a run) → block rows.  Every run start is a block start, so
+    per-block delta resets land exactly where a per-run encoder puts
+    them; block boundaries, metadata (reduceat) and all four byte
+    streams (segmented codec) are computed without a per-run Python
+    loop (byte-identity against a per-run reference encoder is
+    pytest-gated).
 
-    ``pos_all``: either a list of per-posting position arrays, or a
-    tuple ``(flat_positions, per_posting_counts)`` when the caller
-    already holds the flattened token-position stream (the fast path's
-    factorize aggregation, r7) — identical bytes, no per-posting list
-    round-trip."""
+    ``positions``: ``(flat_positions, per_posting_counts)`` — the
+    postings' 1-based positions concatenated in posting order, and how
+    many belong to each posting (0 for a posting stored without
+    positions)."""
     n = len(docs)
     if n == 0:
         return pd.DataFrame([], columns=SEGMENT_COLS)
@@ -371,21 +197,13 @@ def _encode_sorted_runs(
     docs_buf, docs_off = codec.delta_encode_segmented(docs, block_starts)
     tfs_buf, tfs_off = codec.vb_encode_segmented(tfs, block_starts)
     dls_buf, dls_off = codec.vb_encode_segmented(dls, block_starts)
-    if isinstance(pos_all, tuple):
-        flat_src, counts = pos_all
-        counts = np.asarray(counts, dtype=np.int64)
-    else:
-        flat_src = None
-        counts = np.fromiter((len(p) for p in pos_all), dtype=np.int64, count=n)
+    flat_src, counts = positions
+    counts = np.asarray(counts, dtype=np.int64)
     pcum = np.empty(n + 1, dtype=np.int64)
     pcum[0] = 0
     np.cumsum(counts, out=pcum[1:])
     if pcum[-1]:
-        flat = (
-            flat_src.astype(np.uint64)
-            if flat_src is not None
-            else np.concatenate(pos_all).astype(np.uint64)
-        )
+        flat = flat_src.astype(np.uint64)
         d = np.empty_like(flat)
         d[0] = flat[0]
         d[1:] = flat[1:] - flat[:-1]
@@ -416,38 +234,6 @@ def _encode_sorted_runs(
         },
         columns=SEGMENT_COLS,
     )
-
-
-def build_segments(postings: DataFrame, n_sub: int = 1) -> DataFrame:
-    """Salted repartition-by-term-bucket → sorted, compressed block
-    rows.
-
-    The shuffle key is (bucket, chunk): bucket = term-hash (locality —
-    all of a term's postings for a doc range land together), chunk
-    (doc range) as the skew salt.  A single hot term is bounded at
-    2^chunk_bits postings per group exactly as before — the salt is
-    unchanged — while the group COUNT stays at n_buckets × chunks
-    instead of |vocab| × chunks.  applyInPandas sorts each bounded
-    group by (term, doc_id) and emits ≤ ceil(run/128) block rows per
-    term run (vectorized encoder; the loopy twin remains as the
-    equality-test reference).
-
-    ``n_sub`` (ADVICE r06, see :func:`group_subsplits`): when the
-    expected per-group posting mass exceeds ``MAX_GROUP_POSTINGS``, the
-    group is further salted on a term-hash sub-key (murmur3 ``F.hash``
-    — independent of the blake2b bucket hash, so terms inside one
-    bucket spread across sub-keys).  A term's run for a chunk still
-    lands entirely in one group, so the emitted block rows — and the
-    stored bytes — are identical for any ``n_sub`` (equality
-    pytest-gated); only the shuffle-group size changes."""
-    filtered = postings.filter(F.col("term").isNotNull())  # token-less-doc sentinels
-    if n_sub > 1:
-        grouped = filtered.withColumn(
-            "_sub", F.pmod(F.hash("term"), F.lit(n_sub))
-        ).groupBy("bucket", "chunk", "_sub")
-    else:
-        grouped = filtered.groupBy("bucket", "chunk")
-    return grouped.applyInPandas(_encode_bucket_chunk_vec, SEGMENT_SCHEMA)
 
 
 def _run_concurrently(*fns) -> None:
@@ -483,7 +269,8 @@ def _run_concurrently(*fns) -> None:
 
 def _decode_doclen_rows(batches):
     """mapInPandas generator: reserved #doclens# sentinel block rows →
-    (doc_id, dl) rows (shared by the fast and term-partitioned builds)."""
+    (doc_id, dl) rows (shared by every build path and the streaming
+    metadata refresh)."""
     for pdf in batches:
         outs = []
         for r in pdf.itertuples():
@@ -492,12 +279,6 @@ def _decode_doclen_rows(batches):
             outs.append(pd.DataFrame({"doc_id": ids, "dl": dls}))
         if outs:
             yield pd.concat(outs)
-
-
-def _doclens_from_postings(staged: DataFrame) -> DataFrame:
-    # (doc_id, dl) appears identically on every posting of a doc;
-    # max aggregation is partial-agg friendly (no distinct shuffle blowup).
-    return staged.groupBy("doc_id").agg(F.max("dl").alias("dl"))
 
 
 def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
@@ -544,67 +325,41 @@ def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
     return int(ts_obs.get["n_terms"])
 
 
-def build_index(
+def _range_fragments(
+    docs: DataFrame, id_col: str, text_col: str, from_html: bool, stem: bool,
+    n_buckets: int, parts: int,
+) -> DataFrame:
+    """Fragment encode over ``parts`` doc-id-range partitions.  Range
+    order makes every fragment block's doc span tight, so the re-chunk
+    in :func:`_compact_segments` replicates each block to ~1 target
+    chunk (hash-partitioned batches would span the whole id range and
+    replicate to every chunk)."""
+    src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
+    src = src.repartitionByRange(parts, "doc_id").sortWithinPartitions("doc_id")
+    return src.mapInPandas(
+        _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
+    )
+
+
+def _finish_build(
     spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = DEFAULT_BUCKETS,
-    stem: bool = False,
-    from_html: bool = False,
-    chunk_bits: int | None = None,
+    paths: IndexPaths,
+    frags: DataFrame,
+    chunk_bits: int,
+    n_buckets: int,
+    stem: bool,
+    t0: float,
 ) -> dict:
-    """Full index build → ``out_dir``.  Returns build stats/metrics.
-
-    ``chunk_bits``: doc-range span per (term, chunk) group.  Default
-    ``None`` sizes it adaptively for build parallelism at sandbox
-    corpus sizes; pass an explicit value (e.g. the production
-    ``CHUNK_BITS`` = 18) to reproduce at small scale the long per-chunk
-    posting runs a 10^12-doc corpus has naturally — block-max WAND's
-    skippable shape.
-
-    Layout:
-      segments/   parquet, partitioned by bucket (term-hash pruning)
-      term_stats/ parquet (term, df)
-      doclens/    parquet (doc_id, dl)
-      lineage/    parquet per-chunk metrics (postings, terms, bytes)
-      stats.json  {n_docs, avgdl, total_tokens, n_terms, ...}
-
-    Shape (r10): the heavy bytes move ONCE.  The raw docs are
-    range-partitioned by doc_id (one shuffle of the corpus), the fast
-    path's single tokenize+aggregate+encode pass turns each sorted
-    batch into finished compressed fragment blocks, and the canonical
-    term-clustered (bucket, chunk) layout comes from re-chunking those
-    COMPRESSED blocks through :func:`_compact_segments` — the second
-    exchange carries index bytes, not exploded postings.  The previous
-    shape staged the fully exploded posting rows (term, doc_id, tf,
-    positions-list, …) to parquet and shuffled them (measured 11.5 s of
-    a 20.7 s isolated build at 500k docs just tokenizing+writing the
-    staged form); output is byte-identical (segments/doclens/term_stats
-    exceptAll-verified at sf1.0, plus the pure-Python posting oracle
-    gates).  The checkpointed/resumable variant keeps the staged-
-    posting shape (build_index_resumable)."""
-    t0 = time.time()
-    paths = IndexPaths(out_dir)
+    """Build tail shared by :func:`build_index` and
+    :func:`build_index_resumable`: fragment rows → doclens/ (corpus
+    stats ride the write), canonical segments/ via
+    :func:`_compact_segments`, term_stats/ + lineage/ via
+    :func:`_finalize`, and stats.json.  ``frags`` is read twice, so it
+    is persisted for the two writes."""
     from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
 
-    docs = ensure_parallelism(docs)
-    n_docs_est = docs.count()  # parquet metadata read — cheap
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if chunk_bits is None:
-        chunk_bits = adaptive_chunk_bits(n_docs_est, par)
-    src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
-    # range order makes every fragment block's doc span tight, so the
-    # block re-chunk below replicates each block to ~1 target chunk
-    # (hash-partitioned batches would span the whole id range and
-    # replicate to every chunk)
-    parts = max(par * 2, n_docs_est // (1 << chunk_bits) + 1)
-    src = src.repartitionByRange(parts, "doc_id").sortWithinPartitions("doc_id")
-    frags = src.mapInPandas(
-        _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    frags = frags.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         dl_obs = Observation()
         dl_rows = frags.filter(
@@ -645,6 +400,60 @@ def build_index(
     return stats
 
 
+def build_index(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = DEFAULT_BUCKETS,
+    stem: bool = False,
+    from_html: bool = False,
+    chunk_bits: int | None = None,
+) -> dict:
+    """Full index build → ``out_dir``.  Returns build stats/metrics.
+
+    ``chunk_bits``: doc-range span per (term, chunk) group.  Default
+    ``None`` sizes it adaptively for build parallelism at sandbox
+    corpus sizes; pass an explicit value (e.g. the production
+    ``CHUNK_BITS`` = 18) to reproduce at small scale the long per-chunk
+    posting runs a 10^12-doc corpus has naturally — block-max WAND's
+    skippable shape.
+
+    Layout:
+      segments/   parquet, partitioned by bucket (term-hash pruning)
+      term_stats/ parquet (term, df)
+      doclens/    parquet (doc_id, dl)
+      lineage/    parquet per-chunk metrics (postings, terms, bytes)
+      stats.json  {n_docs, avgdl, total_tokens, n_terms, ...}
+
+    Shape (r10): the heavy bytes move ONCE.  The raw docs are
+    range-partitioned by doc_id (one shuffle of the corpus), the fast
+    path's single tokenize+aggregate+encode pass turns each sorted
+    batch into finished compressed fragment blocks, and the canonical
+    term-clustered (bucket, chunk) layout comes from re-chunking those
+    COMPRESSED blocks through :func:`_compact_segments` — the second
+    exchange carries index bytes, not exploded postings.  The previous
+    shape staged the fully exploded posting rows (term, doc_id, tf,
+    positions-list, …) to parquet and shuffled them (measured 11.5 s of
+    a 20.7 s isolated build at 500k docs just tokenizing+writing the
+    staged form); output is byte-identical (segments/doclens/term_stats
+    exceptAll-verified at sf1.0, plus the pure-Python posting oracle
+    gates).  :func:`build_index_resumable` runs the same encode in
+    checkpointed slices and the same tail."""
+    t0 = time.time()
+    docs = ensure_parallelism(docs)
+    n_docs_est = docs.count()  # parquet metadata read — cheap
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if chunk_bits is None:
+        chunk_bits = adaptive_chunk_bits(n_docs_est, par)
+    frags = _range_fragments(
+        docs, id_col, text_col, from_html, stem, n_buckets,
+        parts=max(par * 2, n_docs_est // (1 << chunk_bits) + 1),
+    )
+    return _finish_build(spark, IndexPaths(out_dir), frags, chunk_bits, n_buckets, stem, t0)
+
+
 def build_index_resumable(
     spark: SparkSession,
     docs: DataFrame,
@@ -652,16 +461,25 @@ def build_index_resumable(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
+    stem: bool = False,
+    from_html: bool = False,
     n_jobs: int = 4,
     fail_after: int | None = None,
 ) -> dict:
-    """Checkpointed build: docs are processed in ``n_jobs`` doc-id-range
-    jobs; each job writes its segments under ``part=<j>`` and commits a
-    marker.  A re-run skips committed parts, so resume-after-kill equals
-    from-scratch (FIXTURES.md §5).
+    """Checkpointed :func:`build_index`: the fragment encode runs as
+    ``n_jobs`` doc-id-range slices.  Each slice writes its fragment
+    rows under ``postings/part=<j>`` and then commits a marker; a
+    re-run skips committed slices, so resume-after-kill equals
+    from-scratch (FIXTURES.md §5).  The tail is ``build_index``'s
+    (:func:`_finish_build`) and reads every staged slice, so a crash
+    during the tail re-runs only the tail.  The re-chunk is canonical,
+    so segments/, doclens/ and term_stats/ are row-equal to
+    ``build_index``'s.  The staged slices stay as the build's
+    checkpoint.
 
-    ``fail_after`` (tests only): raise after that many parts commit,
+    ``fail_after`` (tests only): raise after that many slices commit,
     simulating a mid-build crash."""
+    t0 = time.time()
     paths = IndexPaths(out_dir)
     # all metadata IO goes through the Hadoop FileSystem API so the
     # whole index root (segments + stats + commit markers) lives on one
@@ -669,22 +487,13 @@ def build_index_resumable(
     # driver replacement)
     fsio.mkdirs(spark, paths.commits)
 
-    # stats pass (cheap relative to the build; itself checkpointed)
-    if not fsio.exists(spark, os.path.join(paths.commits, "doclens.done")):
-        tokens_all = tokenize_docs(docs, id_col, text_col)
-        tokens_all.select("doc_id", "dl").write.mode("overwrite").parquet(paths.doclens)
-        fsio.write_text(spark, os.path.join(paths.commits, "doclens.done"), "")
-    doclens = spark.read.parquet(paths.doclens)
-    agg = doclens.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")).collect()[0]
-    n_docs, avgdl = int(agg["n_docs"]), float(agg["avgdl"] or 0.0)
-
-    chunk_bits = adaptive_chunk_bits(
-        n_docs, docs.sparkSession.sparkContext.defaultParallelism
-    )
-    bounds = docs.agg(
-        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
+    agg = docs.agg(
+        F.count("*").alias("n"), F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
     ).collect()[0]
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
+    n_docs_est, lo, hi = int(agg["n"]), int(agg["lo"]), int(agg["hi"])
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    chunk_bits = adaptive_chunk_bits(n_docs_est, par)
+    parts = max(par * 2, n_docs_est // n_jobs // (1 << chunk_bits) + 1)
     span = (hi - lo + 1 + n_jobs - 1) // n_jobs
 
     done = 0
@@ -692,38 +501,18 @@ def build_index_resumable(
         marker = os.path.join(paths.commits, f"part-{j}.done")
         if fsio.exists(spark, marker):
             continue
-        part_docs = docs.filter(
-            (F.col(id_col) >= lo + j * span) & (F.col(id_col) < lo + (j + 1) * span)
-        )
-        part_postings = doc_postings(
-            ensure_parallelism(part_docs), id_col, text_col,
-            n_buckets=n_buckets, chunk_bits=chunk_bits,
-        )
-        build_segments(
-            part_postings,
-            n_sub=group_subsplits(n_docs, avgdl, chunk_bits, n_buckets),
-        ).write.mode("overwrite").parquet(
-            os.path.join(paths.segments, f"part={j}")
-        )
-        fsio.write_text(
-            spark, marker,
-            json.dumps({"part": j, "lo": lo + j * span, "hi": lo + (j + 1) * span}),
-        )
+        s_lo, s_hi = lo + j * span, lo + (j + 1) * span
+        part_docs = docs.filter((F.col(id_col) >= s_lo) & (F.col(id_col) < s_hi))
+        _range_fragments(
+            part_docs, id_col, text_col, from_html, stem, n_buckets, parts
+        ).write.mode("overwrite").parquet(os.path.join(paths.postings, f"part={j}"))
+        fsio.write_text(spark, marker, json.dumps({"part": j, "lo": s_lo, "hi": s_hi}))
         done += 1
         if fail_after is not None and done >= fail_after:
             raise RuntimeError(f"simulated crash after {done} parts")
 
-    n_terms = _finalize(spark, paths)
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "resumable": True,
-        "n_jobs": n_jobs,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    frags = spark.read.parquet(paths.postings).select(*SEGMENT_COLS)
+    return _finish_build(spark, paths, frags, chunk_bits, n_buckets, stem, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -883,9 +672,10 @@ def build_index_fast(
     the raw corpus once — worth it when the index is long-lived and the
     corpus arrives unordered.
 
-    The term-partitioned path (``build_index``) remains as the
-    checkpointed/resumable variant with term-clustered segment layout;
-    both serve the identical query engine (equality tested).
+    ``build_index`` and ``build_index_resumable`` run this same encode
+    and then re-chunk it into the canonical term-clustered (bucket,
+    chunk) layout; all of them serve the identical query engine
+    (equality tested).
     """
     t0 = time.time()
     paths = IndexPaths(out_dir)
@@ -959,46 +749,6 @@ def build_index_fast(
 
 # ---- segment compaction / index merge -----------------------------------
 
-_POSTING_SCHEMA = (
-    "term string, doc_id long, tf int, positions array<int>, dl int, bucket int"
-)
-
-
-def segment_postings(seg: DataFrame) -> DataFrame:
-    """Decode segment block rows back into posting rows (term, doc_id,
-    tf, positions, dl, bucket) — the inverse of the encoders, used by
-    compaction.  Vectorized per block; doclen sentinel rows are
-    excluded (they are re-derived from the merged doclens table)."""
-    src = seg.filter(F.col("term") != DOCLEN_TERM).select(
-        "bucket", "term", "docs", "tfs", "dls", "pos"
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                d = codec.delta_decode(r.docs).astype(np.int64)
-                tf = codec.vb_decode(r.tfs).astype(np.int64)
-                dl = codec.vb_decode(r.dls).astype(np.int64)
-                pos = codec.decode_positions(r.pos, tf)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "term": r.term,
-                            "doc_id": d,
-                            "tf": tf.astype(np.int32),
-                            "positions": [list(map(int, p)) for p in pos],
-                            "dl": dl.astype(np.int32),
-                            "bucket": np.int32(r.bucket),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    return src.mapInPandas(decode, _POSTING_SCHEMA)
-
-
 def _compact_segments(
     seg: DataFrame, chunk_bits: int, n_sub: int = 1
 ) -> DataFrame:
@@ -1006,19 +756,27 @@ def _compact_segments(
     rows keyed by the target (bucket, chunk) and decode + re-encode
     inside each group.
 
-    The previous shape (``segment_postings`` → ``build_segments``)
-    exploded every block back into posting rows before the shuffle —
-    each posting carrying a Python ``list[int]`` positions cell — so
-    the exchange moved the fully-decoded corpus (~15× the stored
-    bytes) and the Arrow boundary paid a per-posting list round-trip
-    both ways.  Guide §8's rule: the shuffle only needs to decide
-    where bytes GO — key on (bucket, target-chunk), ship the
-    compressed blocks, and do the decode→trim→sort→re-encode
-    vectorized inside the group.  A source block whose doc range spans
-    several target chunks is replicated to each (``explode`` over its
-    chunk span — fragment blocks span 1-2 chunks) and trimmed after
-    decode, so emitted block rows are identical to the posting-level
-    path (equality pytest-gated via the compact-vs-rebuild gates)."""
+    The previous shape decoded every block back into posting rows
+    before the shuffle — each posting carrying a Python ``list[int]``
+    positions cell — so the exchange moved the fully-decoded corpus
+    (~15× the stored bytes) and the Arrow boundary paid a per-posting
+    list round-trip both ways.  Guide §8's rule: the shuffle only needs
+    to decide where bytes GO — key on (bucket, target-chunk), ship the
+    compressed blocks, and do the decode→trim→sort→re-encode vectorized
+    inside the group.  A source block whose doc range spans several
+    target chunks is replicated to each (``explode`` over its chunk
+    span — fragment blocks span 1-2 chunks) and trimmed after decode.
+    Groups are sorted by (term, doc) before the encode, so the emitted
+    block rows depend only on the posting set, not on how the input was
+    fragmented (pytest-gated: compact-vs-rebuild and builder parity).
+
+    ``n_sub`` (ADVICE r06, see :func:`group_subsplits`): when the
+    expected per-group posting mass exceeds ``MAX_GROUP_POSTINGS``, the
+    group is further salted on a term-hash sub-key (murmur3 ``F.hash``
+    — independent of the bucket hash, so terms inside one bucket spread
+    across sub-keys).  A term's run for a chunk still lands entirely in
+    one group, so the emitted rows are identical for any ``n_sub``; only
+    the shuffle-group size changes."""
     src = seg.filter(F.col("term") != DOCLEN_TERM).select(
         "bucket", "term", "n", "docs", "tfs", "dls", "pos",
         F.explode(
@@ -1129,11 +887,10 @@ def compact_index(
 ) -> dict:
     """Merge one or more segment stores into ONE canonical compacted
     index — the north-star's "externally merged" step, Spark-first:
-    instead of a driver-side k-way file merge, the fragment rows are
-    decoded back to postings, re-chunked on the canonical doc-range key
-    (``chunk = doc_id >> chunk_bits``), and re-encoded through the SAME
-    salted (bucket, chunk) shuffle the term-partitioned builder
-    uses — one shuffle, term skew bounded by the chunk salt, arbitrary
+    instead of a driver-side k-way file merge, the compressed blocks are
+    re-chunked on the canonical doc-range key
+    (``chunk = doc_id >> chunk_bits``) through the SAME salted
+    (bucket, chunk) shuffle ``build_index`` ends with — one shuffle, term skew bounded by the chunk salt, arbitrary
     input layout (streaming ``stream_batch=*`` appends, fast-path
     per-batch fragments, or other compacted stores).
 

@@ -98,29 +98,14 @@ def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DE
     segment store (idempotent)."""
     import json
 
-    import numpy as np
-    import pandas as pd
-
-    from ..operators import codec
-
     paths = ib.IndexPaths(index_dir)
     seg = spark.read.parquet(paths.segments)
     dl_rows = seg.filter(F.col("term") == ib.DOCLEN_TERM).select("docs", "dls")
 
-    def decode_dl(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples():
-                ids = codec.delta_decode(r.docs).astype(np.int64)
-                dls = codec.vb_decode(r.dls).astype(np.int64)
-                outs.append(pd.DataFrame({"doc_id": ids, "dl": dls}))
-            if outs:
-                yield pd.concat(outs)
-
     from pyspark.sql import Observation
 
     dl_obs = Observation()
-    dl_rows.mapInPandas(decode_dl, "doc_id long, dl long").observe(
+    dl_rows.mapInPandas(ib._decode_doclen_rows, "doc_id long, dl long").observe(
         dl_obs,
         F.count("*").alias("n_docs"),
         F.avg("dl").alias("avgdl"),

@@ -48,15 +48,13 @@ def main() -> None:
         id_col=args.id_col,
         text_col=args.text_col,
         n_buckets=args.buckets,
+        from_html=args.from_html,
+        stem=args.stem,
     )
     if args.path == "fast":
-        stats = ib.build_index_fast(
-            spark, docs, args.output, from_html=args.from_html, stem=args.stem, **kw
-        )
+        stats = ib.build_index_fast(spark, docs, args.output, **kw)
     elif args.path == "term":
-        stats = ib.build_index(
-            spark, docs, args.output, from_html=args.from_html, stem=args.stem, **kw
-        )
+        stats = ib.build_index(spark, docs, args.output, **kw)
     else:
         stats = ib.build_index_resumable(spark, docs, args.output, n_jobs=args.n_jobs, **kw)
     print(json.dumps(stats))

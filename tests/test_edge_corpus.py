@@ -1,6 +1,7 @@
 """Edge corpora: empty/punctuation-only/null texts must still be
-counted in corpus stats (n_docs, avgdl) and serve correct BM25 — both
-build paths, checked against the DuckDB oracle."""
+counted in corpus stats (n_docs, avgdl) and serve correct BM25 — every
+build path, checked against the DuckDB oracle — and every builder must
+produce the same index tables row for row."""
 
 import shutil
 
@@ -10,11 +11,15 @@ import pytest
 from eaststorm_searchengine_spark.functions.sqltok import duckdb_bm25_topk_sql
 from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 from eaststorm_searchengine_spark.operators.index_build import (
+    SEGMENT_COLS,
     build_index,
     build_index_fast,
+    build_index_resumable,
+    compact_index,
 )
 
 TMP = "/root/repo/_tmp/t_edge"
+SF = "/root/testdata/sf0.001"
 
 ROWS = [
     (0, "alpha beta gamma alpha"),
@@ -28,7 +33,10 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("builder,tag", [(build_index, "term"), (build_index_fast, "fast")])
+@pytest.mark.parametrize(
+    "builder,tag",
+    [(build_index, "term"), (build_index_fast, "fast"), (build_index_resumable, "resumable")],
+)
 def test_edge_corpus_stats_and_bm25(spark, builder, tag):
     root = f"{TMP}_{tag}"
     shutil.rmtree(root, ignore_errors=True)
@@ -56,3 +64,98 @@ def test_edge_corpus_stats_and_bm25(spark, builder, tag):
             for r in idx.search(queries, k=5, method=method, score_round=4).collect()
         ]
         assert got == want, (tag, method)
+
+
+def _same_rows(a, b) -> bool:
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+@pytest.mark.parametrize("corpus", ["edge", "sf0.001"])
+def test_builders_agree_row_for_row(spark, tmp_path, corpus):
+    """One index-build pipeline: build_index, build_index_resumable
+    (fresh, and resumed after a simulated crash) and compact_index over
+    a build_index_fast store write the same segments/ rows; all four
+    builders agree on doclens/, term_stats/ and the corpus stats."""
+    if corpus == "edge":
+        docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    else:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+    root = {k: str(tmp_path / k) for k in ("term", "resumable", "resumed", "fast", "compacted")}
+    stats = {
+        "term": build_index(spark, docs, root["term"]),
+        "resumable": build_index_resumable(spark, docs, root["resumable"]),
+    }
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index_resumable(spark, docs, root["resumed"], fail_after=2)
+    stats["resumed"] = build_index_resumable(spark, docs, root["resumed"])
+    stats["fast"] = build_index_fast(spark, docs, root["fast"])
+    stats["compacted"] = compact_index(spark, [root["fast"]], root["compacted"])
+
+    def table(name, sub):
+        df = spark.read.parquet(f"{root[name]}/{sub}")
+        return df.select(*SEGMENT_COLS) if sub == "segments" else df
+
+    every = ["resumable", "resumed", "fast", "compacted"]
+    for sub, names in [
+        ("segments", ["resumable", "resumed", "compacted"]),
+        ("doclens", every),
+        ("term_stats", every),
+    ]:
+        want = table("term", sub)
+        assert not want.isEmpty(), sub
+        for name in names:
+            assert _same_rows(want, table(name, sub)), (corpus, sub, name)
+    for key in ("n_docs", "avgdl", "total_tokens"):
+        assert len({st[key] for st in stats.values()}) == 1, (key, stats)
+    assert stats["term"]["n_docs"] == docs.count()
+
+
+def test_resumable_honours_from_html_and_stem(spark, tmp_path):
+    """build_index_resumable extracts and stems like build_index: on
+    HTML pages with from_html=True and stem=True its segment rows equal
+    build_index's, no markup token is indexed, and its stats.json has
+    build_index's keys."""
+    from eaststorm_searchengine_spark import corpus
+
+    pages = spark.createDataFrame(
+        [
+            (d, corpus.page_html(d, t or "", "en", len(ROWS)).encode())
+            for d, t in ROWS
+        ],
+        "doc_id long, html binary",
+    )
+    a, b = str(tmp_path / "term"), str(tmp_path / "resumable")
+    kw = dict(text_col="html", from_html=True, stem=True)
+    st_a = build_index(spark, pages, a, **kw)
+    st_b = build_index_resumable(spark, pages, b, **kw)
+    seg = lambda r: spark.read.parquet(f"{r}/segments").select(*SEGMENT_COLS)
+    assert _same_rows(seg(a), seg(b))
+    terms = {r["term"] for r in spark.read.parquet(f"{b}/term_stats").collect()}
+    # link text is extracted; the <script> comment "must vanish" is not
+    assert {"alpha", "click"} <= terms and "vanish" not in terms
+    assert set(st_a) == set(st_b) and st_b["stem"] is True
+    assert {k: st_b[k] for k in ("n_docs", "avgdl", "total_tokens")} == {
+        k: st_a[k] for k in ("n_docs", "avgdl", "total_tokens")
+    }
+
+
+def test_streaming_doclens_match_builders(spark, tmp_path):
+    """The streaming ingest path keeps the builders' doclens contract:
+    token-less and NULL documents are counted, row-equal to
+    build_index's doclens."""
+    from eaststorm_searchengine_spark.streaming import incremental
+
+    docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    docs.write.parquet(str(tmp_path / "in"))
+    incremental.start_incremental_index(
+        spark,
+        input_dir=str(tmp_path / "in"),
+        index_dir=str(tmp_path / "stream"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema="doc_id long, text string",
+    )
+    st_s = incremental.refresh_metadata(spark, str(tmp_path / "stream"))
+    st_b = build_index(spark, docs, str(tmp_path / "term"))
+    dl = lambda r: spark.read.parquet(str(tmp_path / r / "doclens"))
+    assert _same_rows(dl("term"), dl("stream"))
+    assert (st_s["n_docs"], st_s["avgdl"]) == (st_b["n_docs"], st_b["avgdl"]) == (len(ROWS), 1.5)

@@ -6,13 +6,18 @@ import collections
 import os
 import shutil
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from eaststorm_searchengine_spark import textproc
 from eaststorm_searchengine_spark.operators import codec
 from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 from eaststorm_searchengine_spark.operators.index_build import (
+    BLOCK,
     DOCLEN_TERM,
+    SEGMENT_COLS,
+    _encode_sorted_runs,
     build_index,
     build_index_fast,
     build_index_resumable,
@@ -271,19 +276,87 @@ def test_skew_corpus_deterministic_and_hot_fraction(spark):
     assert not any(t.split()[0] == hot for _, t in u)
 
 
-def test_vectorized_encoder_matches_loopy_reference():
-    """r6: `_encode_bucket_chunk_vec` (production) is byte-identical to
-    the per-run loopy `_encode_blocks` path on randomized groups —
-    tiny runs, multi-block runs, empty position lists, adversarial
-    doc-id gaps (varbyte width boundaries)."""
-    import numpy as np
-    import pandas as pd
+def _encode_blocks(
+    bucket: int, term: str, chunk: int,
+    docs: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+    positions: list, rows: list,
+) -> None:
+    """Append ≤ ceil(n/128) block rows for one (term, chunk) run."""
+    for s in range(0, len(docs), BLOCK):
+        e = min(s + BLOCK, len(docs))
+        b_docs = codec.delta_encode(docs[s:e].astype(np.uint64))
+        b_tfs = codec.vb_encode(tfs[s:e].astype(np.uint64))
+        b_dls = codec.vb_encode(dls[s:e].astype(np.uint64))
+        b_pos = codec.encode_positions(positions[s:e]) if positions else b""
+        rows.append(
+            {
+                "bucket": bucket,
+                "term": term,
+                "chunk": chunk,
+                "first_doc": int(docs[s]),
+                "last_doc": int(docs[e - 1]),
+                "n": e - s,
+                "max_tf": int(tfs[s:e].max()) if len(tfs) else 0,
+                "min_dl": int(dls[s:e].min()) if len(dls) else 0,
+                "bytes": len(b_docs) + len(b_tfs) + len(b_dls) + len(b_pos),
+                "docs": b_docs,
+                "tfs": b_tfs,
+                "dls": b_dls,
+                "pos": b_pos,
+            }
+        )
 
-    from eaststorm_searchengine_spark.operators.index_build import (
-        _encode_bucket_chunk,
-        _encode_bucket_chunk_vec,
+
+def _encode_bucket_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+    """REFERENCE encoder (readable, per-run loop) — the byte-identity
+    oracle for the production `_encode_sorted_runs`: one (bucket, chunk)
+    group of posting rows → block rows for every term run inside it."""
+    rows: list = []
+    if not len(pdf):
+        return pd.DataFrame(rows, columns=SEGMENT_COLS)
+    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
+    bucket = int(pdf["bucket"].iloc[0])
+    chunk = int(pdf["chunk"].iloc[0])
+    docs_all = pdf["doc_id"].to_numpy(dtype=np.int64)
+    tfs_all = pdf["tf"].to_numpy(dtype=np.int64)
+    dls_all = pdf["dl"].to_numpy(dtype=np.int64)
+    pos_all = pdf["positions"].tolist()
+    terms = pdf["term"].to_numpy()
+    starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+    bounds = np.r_[starts, len(terms)]
+    for i in range(len(starts)):
+        s, e = int(bounds[i]), int(bounds[i + 1])
+        _encode_blocks(
+            bucket, str(terms[s]), chunk,
+            docs_all[s:e], tfs_all[s:e], dls_all[s:e], pos_all[s:e], rows,
+        )
+    return pd.DataFrame(rows, columns=SEGMENT_COLS)
+
+
+def _encode_with_sorted_runs(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The same group through the production encoder, fed the way the
+    fragment encode and the re-chunk feed it: (term, doc)-sorted streams
+    plus flat positions with per-posting counts."""
+    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
+    pos = pdf["positions"].tolist()
+    counts = np.fromiter((len(p) for p in pos), dtype=np.int64, count=len(pos))
+    flat = np.concatenate(pos).astype(np.int64) if pos else np.empty(0, np.int64)
+    return _encode_sorted_runs(
+        pdf["term"].to_numpy(),
+        pdf["bucket"].to_numpy(dtype=np.int64),
+        pdf["chunk"].to_numpy(dtype=np.int64),
+        pdf["doc_id"].to_numpy(dtype=np.int64),
+        pdf["tf"].to_numpy(dtype=np.int64),
+        pdf["dl"].to_numpy(dtype=np.int64),
+        (flat, counts),
     )
 
+
+def test_vectorized_encoder_matches_loopy_reference():
+    """r6: `_encode_sorted_runs` (production, run by every build path)
+    is byte-identical to the per-run loopy `_encode_blocks` reference on
+    randomized groups — tiny runs, multi-block runs, empty position
+    lists, adversarial doc-id gaps (varbyte width boundaries)."""
     rng = np.random.RandomState(1234)
 
     def group(n_terms, max_run, id_space, empty_pos_frac=0.0):
@@ -315,7 +388,7 @@ def test_vectorized_encoder_matches_loopy_reference():
     ]
     for i, pdf in enumerate(cases):
         a = _encode_bucket_chunk(pdf.copy())
-        b = _encode_bucket_chunk_vec(pdf.copy())
+        b = _encode_with_sorted_runs(pdf.copy())
         assert len(a) == len(b), i
         for col in a.columns:
             assert a[col].tolist() == b[col].tolist(), (i, col)
@@ -341,40 +414,12 @@ def test_group_subsplits_rule():
     assert group_subsplits(10**12, 300.0, 10, 16) == 1
 
 
-def test_build_segments_subsplit_byte_identical(spark):
-    """Sub-splitting the encode groups on a term-hash salt must not
-    change a single stored byte — every (term, chunk) run still lands
-    whole in exactly one group."""
-    from eaststorm_searchengine_spark.operators.index_build import (
-        build_segments,
-        doc_postings,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    postings = doc_postings(docs, "doc_id", "text", n_buckets=4, chunk_bits=6)
-
-    def rows(n_sub):
-        out = build_segments(postings, n_sub=n_sub).collect()
-        return sorted(
-            (
-                r["bucket"], r["term"], r["chunk"], r["first_doc"],
-                r["last_doc"], r["n"], r["max_tf"], r["min_dl"], r["bytes"],
-                bytes(r["docs"]), bytes(r["tfs"]), bytes(r["dls"]), bytes(r["pos"]),
-            )
-            for r in out
-        )
-
-    base = rows(1)
-    assert len(base) > 50
-    assert rows(4) == base
-    assert rows(7) == base
-
-
 def test_build_index_with_forced_subsplits_serves_identically(spark, tmp_path, monkeypatch):
     """End-to-end wiring of ADVICE r06 #1: force group_subsplits > 1
     through the REAL build_index caller (tiny MAX_GROUP_POSTINGS) and
     assert the index byte-equals a default build — segments, stats and
-    served results."""
+    served results.  A spy on the re-chunk proves the build really ran
+    with sub-splits (the cap must be read at call time)."""
     from eaststorm_searchengine_spark.operators import index_build as ib
     from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 
@@ -383,11 +428,17 @@ def test_build_index_with_forced_subsplits_serves_identically(spark, tmp_path, m
     ib.build_index(spark, docs, root_a)
 
     monkeypatch.setattr(ib, "MAX_GROUP_POSTINGS", 64)
-    # the caller derives n_sub from (n_docs, avgdl, chunk_bits,
-    # n_buckets); with a 64-posting cap it must be > 1 at this corpus
-    assert ib.group_subsplits(500, 40.0, 18, 16, max_group=64) > 1
+    n_subs = []
+    compact = ib._compact_segments
+
+    def spy(seg, chunk_bits, n_sub=1):
+        n_subs.append(n_sub)
+        return compact(seg, chunk_bits, n_sub=n_sub)
+
+    monkeypatch.setattr(ib, "_compact_segments", spy)
     root_b = str(tmp_path / "idx_subsplit")
     ib.build_index(spark, docs, root_b)
+    assert len(n_subs) == 1 and n_subs[0] > 1, n_subs
 
     def seg_rows(root):
         return sorted(
