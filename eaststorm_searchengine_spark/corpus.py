@@ -273,12 +273,11 @@ def synthesize_skew_docs(spark, n_docs: int, vocab: int = 10_000,
     return base.mapInPandas(gen, "doc_id long, text string")
 
 
-# Shared Zipf bench query sets (single source for bench.py and
-# tools/wand_engine_bench.py — code-review r05: the two copies had
-# silently drifted, making their decode-fraction numbers incomparable).
-# Anchored: one selective term with per-chunk df >= k (the WAND-
-# favorable shape); dense controls: common-terms-only (the exhaustive-
-# favorable shape the cost-based "auto" must route correctly).
+# Shared Zipf bench query sets (single source for every Zipf bench, so
+# their decode-fraction numbers stay comparable).
+# Anchored: one selective term with per-chunk df >= k (the block-
+# skipping-favorable shape); dense controls: common-terms-only (the
+# exhaustive-favorable shape the cost-based "auto" must route correctly).
 ZIPF_ANCHORED_RANKS = [
     (2, 40, 500), (1, 55, 620), (3, 33, 410), (5, 70, 777),
     (4, 48, 555), (6, 90, 840), (8, 61, 465), (10, 77, 905),

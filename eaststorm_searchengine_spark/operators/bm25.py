@@ -1,15 +1,17 @@
 """BM25 top-k query engine over the compressed segment index.
 
-Two executors, verified equal in tests:
+Two executors, bitwise equal in tests, and a router between them:
 
 * ``exhaustive`` — vectorized term-at-a-time: decode every matching
-  block, accumulate per-doc scores with ``np.add.at``, local top-k per
-  doc-range chunk, global top-k via window.  At sandbox scale this is
-  the throughput winner (numpy-bound, zero per-doc Python).
-* ``wand`` — document-at-a-time block-max WAND (``wand.py``): skips
-  whole blocks whose upper bound (idf · block max_tfnorm) cannot reach
-  the running threshold, decoding lazily.  The scale path for deep
-  corpora / selective queries.
+  block, accumulate per-doc scores with ``np.add.at``, take the
+  chunk's top-k with one lexsort.  Fastest for dense-only queries over
+  short posting runs (one segmented decode, no per-wave overhead).
+* ``maxscore`` — block-max MaxScore (``maxscore.py``): candidates come
+  only from the terms whose upper bounds can still reach the running
+  threshold, and only the blocks whose doc fences hold a candidate are
+  decoded.  The selective executor; ``"wand"`` is an alias for it.
+* ``auto`` — per-(query, chunk) choice between the two from the
+  query terms' df and the chunk's block metadata (``_wand_decision``).
 
 Distribution model: segment blocks are grouped by ``chunk`` (doc
 range); each chunk computes its local top-k independently (scores use
@@ -39,7 +41,11 @@ from ..functions.hashing import term_bucket
 from . import codec
 from .index_build import IndexPaths
 from .maxscore import _TermPostings, maxscore_topk
-from .wand import wand_topk
+
+# ``"wand"`` names the selective executor in older callers (bench
+# leaves, the ``bm25_topk_wand`` oracle) and runs MaxScore
+SEARCH_METHODS = ("auto", "exhaustive", "maxscore", "wand")
+FINAL_RANKS = ("window", "driver")
 
 
 def bm25_idf(df_: int, n_docs: int) -> float:
@@ -270,29 +276,27 @@ class BM25Index:
         shared tokenizer; duplicate query terms are deduped (BM25 sums
         distinct terms, matching the DuckDB oracle).
 
-        ``method``: ``"auto"`` (default since r5) — per-query
-        cost-based choice from the broadcast df stats: the selective
-        block-skipping executor when a selective term exists,
-        exhaustive for dense-only queries.  Since r7 the selective
-        executor is ``"maxscore"`` (vectorized block-max MaxScore —
-        candidate waves from essential terms only, fence-pruned
-        segmented decode); ``"wand"`` (block-max document-at-a-time
-        per Ding & Suel) is retained as the north-star-named reference
-        executor, and ``"exhaustive"`` (vectorized term-at-a-time)
-        scores everything.  All four settings return identical results
-        (executor equality is bitwise-tested); at the 200k-doc Zipf
-        bench maxscore measured 1.3-1.6× exhaustive and ~4× wand
-        (BASELINE.md r7).
+        ``method`` (one of ``SEARCH_METHODS``, else ``ValueError``):
+        ``"auto"`` (default) chooses per (query, chunk) from the query
+        terms' df and the chunk's block metadata: MaxScore when a
+        selective term can anchor the chunk's top-k or the chunk's
+        posting runs are long, exhaustive otherwise.  ``"maxscore"``
+        always runs vectorized block-max MaxScore (candidate waves from
+        essential terms only, fence-pruned segmented decode);
+        ``"wand"`` is an alias for it.  ``"exhaustive"`` (vectorized
+        term-at-a-time) scores every posting.  All settings return
+        identical results (executor equality is bitwise-tested).
 
         Plan: segment scan (bucket directory pruning from the
-        python-computable term hash + term predicate pushdown) ⋈
-        broadcast term_stats (per-term df → idf computed executor-side)
-        → per-chunk top-k → global rank.  Terms absent from the corpus
-        simply never match (== the reference's silent per-term
+        python-computable term hash + term predicate pushdown) →
+        per-chunk top-k → global rank, with df resolved driver-side
+        and idf shipped in the task closure.  Terms absent from the
+        corpus simply never match (== the reference's silent per-term
         try/catch, SearchServer.java:117-148).
 
-        ``final_rank``: how the ≤ chunks×k candidate rows per query
-        become the global top-k.  ``"window"`` (default) ranks with a
+        ``final_rank`` (one of ``FINAL_RANKS``, else ``ValueError``):
+        how the ≤ chunks×k candidate rows per query become the global
+        top-k.  ``"window"`` (default) ranks with a
         per-query window — fully distributed, the right shape when the
         batch is large.  ``"driver"`` merges the candidates driver-side
         (VERDICT r02 #7) — the same TakeOrdered pattern Spark plans for
@@ -309,6 +313,12 @@ class BM25Index:
         ``decision_acc``: optional dict of Spark accumulators keyed by
         ``DECISION_REASONS`` — per-(query, chunk) records of what the
         auto cost model chose and why (VERDICT r05 #1)."""
+        if method not in SEARCH_METHODS:
+            raise ValueError(f"method must be one of {SEARCH_METHODS}, got {method!r}")
+        if final_rank not in FINAL_RANKS:
+            raise ValueError(
+                f"final_rank must be one of {FINAL_RANKS}, got {final_rank!r}"
+            )
         self._refresh_if_rebuilt()
         qterms: dict[int, list[str]] = {
             qid: sorted(set(self._analyze(q))) for qid, q in queries
@@ -374,28 +384,22 @@ class BM25Index:
                         decision_counts[decision] = (
                             decision_counts.get(decision, 0) + 1
                         )
-                    # the "wand" decision means "a selective term makes
-                    # block skipping pay"; since r7 auto serves it with
-                    # the vectorized MaxScore executor (same skip idea,
-                    # set-at-a-time — measured 1.3-1.6x the exhaustive
-                    # executor where pure WAND's per-pivot Python loop
-                    # LOST to it, BASELINE.md r7).  "dense_long_run"
-                    # (r8): dense query but the chunk's posting runs
-                    # are long enough that MaxScore wins anyway
+                    # "wand": a selective term makes block skipping
+                    # pay; "dense_long_run": dense query, but the
+                    # chunk's posting runs are long enough that
+                    # MaxScore wins anyway
                     fn = (
                         maxscore_topk
                         if decision in ("wand", "dense_long_run")
                         else _exhaustive_topk
                     )
-                elif method == "wand":
-                    fn = wand_topk
-                elif method == "maxscore":
-                    fn = maxscore_topk
-                else:
+                elif method == "exhaustive":
                     fn = _exhaustive_topk
-                # every executor (wand included since its r10 interval
-                # rewrite) shares the per-chunk _TermPostings handles:
-                # a term's blocks decode once per CHUNK across the batch
+                else:  # "maxscore" and its alias "wand"
+                    fn = maxscore_topk
+                # both executors share the per-chunk _TermPostings
+                # handles: a term's blocks decode once per CHUNK across
+                # the batch
                 docs_a, scores_a = fn(
                     [tp_for(t) for t in present],
                     [idf[t] for t in present],
@@ -442,17 +446,16 @@ class BM25Index:
         scorer would pick and why, computed from the SAME block-metadata
         frames ``score_chunk`` hands to ``_wand_decision`` (equality
         with the decision accumulators is pytest-gated).  Reads only
-        block metadata (term, chunk, first_doc, n + broadcast df) —
-        posting blobs are never touched, so the cost is the pruned
-        metadata scan, bounded by the query terms' block counts.
+        block metadata (term, chunk, first_doc, n) and resolves df the
+        way ``search`` does (``_term_dfs``) — posting blobs are never
+        touched, so the cost is the pruned metadata scan, bounded by
+        the query terms' block counts.
 
         Returns DataFrame(query_id, chunk, decision, n_terms_present,
         rarest_term, rarest_df, rarest_chunk_postings) where
-        ``decision`` ∈ DECISION_REASONS (``"wand"`` — the historical
-        key for "a selective term makes block skipping pay", served by
-        the MaxScore executor since r7 — or the rejection reason) and
-        ``rarest_chunk_postings`` is the chunk-local Σn of the rarest
-        term — the quantity the anchor rule tests against ``k``."""
+        ``decision`` ∈ DECISION_REASONS and ``rarest_chunk_postings``
+        is the chunk-local Σn of the rarest term — the quantity the
+        anchor rule tests against ``k``."""
         self._refresh_if_rebuilt()
         qterms: dict[int, list[str]] = {
             qid: sorted(set(self._analyze(q))) for qid, q in queries
@@ -462,16 +465,16 @@ class BM25Index:
             "query_id int, chunk int, decision string, n_terms_present int, "
             "rarest_term string, rarest_df long, rarest_chunk_postings long"
         )
-        if not all_terms:
+        dfs = self._term_dfs(all_terms)
+        present_terms = [t for t in all_terms if t in dfs]
+        if not present_terms:
             return local_frame(self.spark, [], schema)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
-        stats = self._stats_df.filter(F.col("term").isin(all_terms)).select("term", "df")
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
         meta = (
             self._segs_df
             .filter(F.col("bucket").isin(buckets))  # partition pruning
-            .filter(F.col("term").isin(all_terms))
+            .filter(F.col("term").isin(present_terms))
             .select("term", "chunk", "first_doc", "n")
-            .join(F.broadcast(stats), "term")
             .toPandas()
         )
         rows = []
@@ -482,9 +485,8 @@ class BM25Index:
                 present = {t: by_term[t] for t in terms if t in by_term}
                 if not present:
                     continue
-                decision = _wand_decision(present, k, n_docs)
-                dfs = {t: int(g["df"].iloc[0]) for t, g in present.items()}
-                rarest = min(dfs, key=lambda t: dfs[t])
+                decision = _wand_decision(present, k, n_docs, dfs)
+                rarest = min(present, key=lambda t: dfs[t])
                 rows.append(
                     (
                         int(qid), int(chunk), decision, len(present), rarest,
@@ -647,7 +649,10 @@ class BM25Index:
         return ranked
 
 
-# the four outcomes of the auto cost model, in accumulator-report order
+# the outcomes of the auto cost model, in accumulator-report order.
+# "wand" and "dense_long_run" mean MaxScore serves the chunk; the other
+# three mean the exhaustive executor does.  The "wand" key keeps its
+# name because bench records and perfbench's bm25.route.wand read it.
 DECISION_REASONS = (
     "wand", "single_term", "no_selective", "anchor_thin", "dense_long_run",
 )
@@ -680,26 +685,30 @@ def _dense_long_run_threshold(n_terms: int) -> int:
     )
 
 
-def _wand_decision(
-    term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict | None = None
-) -> str:
+def _wand_decision(term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict) -> str:
     """Per-(query, chunk) cost decision between the executors, with the
-    reason exposed for the decision accumulators (VERDICT r05 #1).
-    Returns one of ``DECISION_REASONS``: ``"wand"`` (historical key:
-    a selective term makes block skipping pay — auto serves it with
-    the vectorized MaxScore executor since r7) or the rejection reason
-    (``"single_term"`` — nothing to skip against; ``"no_selective"`` —
-    every query term matches ≥10% of the corpus; ``"anchor_thin"`` —
-    the rarest term has fewer than ``k`` postings in THIS chunk, so θ
-    collapses).  ``dfs``: optional precomputed term→df map (the
-    driver-resolved serving path, r8) — when given, the block frames
-    need no ``df`` column."""
+    reason exposed for the decision accumulators.  Both executors are
+    bitwise equal, so this is purely about cost.  Returns one of
+    ``DECISION_REASONS``:
+
+    * ``"wand"`` — MaxScore serves this chunk: a globally selective
+      term (df < 10% of the corpus) has at least ``k`` postings here,
+      so it anchors the top-k and the dense terms' blocks can be
+      skipped;
+    * ``"dense_long_run"`` — MaxScore serves this chunk: no selective
+      term, but the chunk's posting runs are long enough that the
+      skipping still pays;
+    * ``"single_term"`` — nothing to skip against;
+    * ``"no_selective"`` — every query term matches ≥10% of the corpus;
+    * ``"anchor_thin"`` — the rarest term has fewer than ``k`` postings
+      in THIS chunk, so θ collapses to dense-only scores and nothing is
+      skippable.
+
+    ``term_chunk_blocks``: term → that term's block rows in the chunk
+    (only ``n`` is read); ``dfs``: term → corpus df."""
     if len(term_chunk_blocks) < 2:
         return "single_term"
-    if dfs is None:
-        dfs = {t: int(g["df"].iloc[0]) for t, g in term_chunk_blocks.items()}
-    else:
-        dfs = {t: dfs[t] for t in term_chunk_blocks}
+    dfs = {t: dfs[t] for t in term_chunk_blocks}
     rarest = min(dfs, key=lambda t: dfs[t])
     if dfs[rarest] * 10 > n_docs:
         # no selective term anywhere in the corpus — but if this
@@ -714,25 +723,6 @@ def _wand_decision(
     if int(term_chunk_blocks[rarest]["n"].sum()) < k:
         return "anchor_thin"
     return "wand"
-
-
-def _choose_wand(term_chunk_blocks: dict, k: int, n_docs: int) -> bool:
-    """Per-(query, chunk) cost decision between the executors.  Both
-    are bitwise-identical (pytest), so this is purely about cost:
-
-    * block-max WAND pays only when a SELECTIVE term exists to tighten
-      the threshold — dense-only queries (every term matches ≥10% of
-      docs) decode everything anyway, where the vectorized
-      term-at-a-time executor wins;
-    * AND the rarest term must be able to anchor THIS chunk's top-k:
-      with fewer than ``k`` of its postings in the chunk, θ collapses
-      to common-only scores and block skipping never engages —
-      measured r5: 99.8% of blocks decoded through the pure-Python
-      doc-at-a-time loop, i.e. exhaustive cost without the
-      vectorization (BASELINE.md, Zipf corpus).  The chunk-local
-      posting count comes free off the block metadata (Σn).
-    """
-    return _wand_decision(term_chunk_blocks, k, n_docs) == "wand"
 
 
 def _exhaustive_topk(

@@ -1,12 +1,12 @@
 """spark-submit entry point: batch BM25 top-k over a built index.
 
     spark-submit --py-files engine.zip jobs/search_job.py \
-        --index /indexes/run1 --k 10 [--method auto|wand|exhaustive] \
+        --index /indexes/run1 --k 10 [--method auto|maxscore|exhaustive] \
         [--explain] --queries "hash join" "data pipeline" ...
 
 ``--explain`` prints the per-(query, chunk) executor decision table
 (BM25Index.explain) before the results — which chunks auto routes to
-block-max WAND and why the others were rejected.
+the block-max MaxScore executor and why the others were rejected.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ def main() -> None:
     p.add_argument("--k", type=int, default=10)
     # auto is the engine's production default (cost-based per-chunk
     # choice, BASELINE.md r5/r6) — the CLI previously forced exhaustive
-    p.add_argument("--method", choices=["auto", "exhaustive", "wand", "maxscore"], default="auto")
+    p.add_argument("--method", choices=["auto", "exhaustive", "maxscore"], default="auto")
     p.add_argument("--explain", action="store_true")
     p.add_argument("--queries", nargs="+", required=True)
     args = p.parse_args()

@@ -2,7 +2,7 @@
 
 * rank-identical (docIDs AND scores) vs an independent pure-Python
   BM25 oracle — the FIXTURES.md §3 check
-* WAND == exhaustive, bitwise, on randomized synthetic corpora
+* MaxScore == exhaustive, bitwise, on randomized synthetic corpora
   (hypothesis) — exercises block boundaries, ties, absent terms
 """
 
@@ -28,7 +28,6 @@ from eaststorm_searchengine_spark.operators.index_build import (
     build_index_fast,
 )
 from eaststorm_searchengine_spark.operators.maxscore import maxscore_topk
-from eaststorm_searchengine_spark.operators.wand import wand_topk
 
 SF = "/root/testdata/sf0.001"
 TMP = "/root/repo/_tmp"
@@ -91,12 +90,26 @@ def test_rank_identical_vs_python_oracle(idx, rows, query):
 
 
 def test_wand_equals_exhaustive_on_index(idx):
+    """method="wand" is an alias for MaxScore: same rows as both
+    executors."""
     qs = [(i, q) for i, q in enumerate(
         ["join", "hash join merge", "the a big", "dup window", "value"]
     )]
-    a = [tuple(r) for r in idx.search(qs, k=25, method="exhaustive").collect()]
-    b = [tuple(r) for r in idx.search(qs, k=25, method="wand").collect()]
-    assert a == b
+    out = {
+        m: [tuple(r) for r in idx.search(qs, k=25, method=m).collect()]
+        for m in ("exhaustive", "maxscore", "wand")
+    }
+    assert out["wand"] == out["maxscore"] == out["exhaustive"]
+    assert out["wand"]
+
+
+def test_search_rejects_unknown_method_and_final_rank(idx):
+    """A misspelled executor or rank mode must fail loudly, not run
+    some other path."""
+    with pytest.raises(ValueError, match="method"):
+        idx.search([(1, "join")], k=5, method="maxcore")
+    with pytest.raises(ValueError, match="final_rank"):
+        idx.search([(1, "join")], k=5, final_rank="drvier")
 
 
 def test_driver_merge_equals_window_rank(idx):
@@ -120,7 +133,7 @@ def test_driver_merge_equals_window_rank(idx):
     assert e.count() == 0 and e.columns == ["query_id", "rank", "doc_id", "score"]
 
 
-# ---- randomized WAND equivalence on synthetic posting lists -------------
+# ---- randomized executor equivalence on synthetic posting lists ---------
 
 def _mk_blocks(postings, avgdl):
     """postings: sorted [(doc, tf, dl)] → block-row DataFrame like the
@@ -152,7 +165,7 @@ def _mk_blocks(postings, avgdl):
     k=st.integers(min_value=1, max_value=20),
 )
 @settings(max_examples=60, deadline=None)
-def test_wand_equals_exhaustive_random(data, n_terms, k):
+def test_maxscore_equals_exhaustive_random(data, n_terms, k):
     term_blocks, idfs = [], []
     all_dls = []
     for t in range(n_terms):
@@ -172,11 +185,10 @@ def test_wand_equals_exhaustive_random(data, n_terms, k):
     avgdl = sum(all_dls) / len(all_dls)
     frames = [_mk_blocks(p, avgdl) for p in term_blocks]
     d1, s1 = _exhaustive_topk(frames, idfs, k, avgdl)
-    d2, s2 = wand_topk(frames, idfs, k, avgdl)
-    d3, s3 = maxscore_topk(frames, idfs, k, avgdl)
-    assert d1.tolist() == d2.tolist() == d3.tolist()
-    # bitwise-identical scores across all three executors
-    assert s1.tolist() == s2.tolist() == s3.tolist()
+    d2, s2 = maxscore_topk(frames, idfs, k, avgdl)
+    assert d1.tolist() == d2.tolist()
+    # bitwise-identical scores across both executors
+    assert s1.tolist() == s2.tolist()
 
 
 def test_idf_formula():
@@ -210,7 +222,7 @@ def test_live_handle_survives_index_rebuild(spark, tmp_path):
 def test_auto_method_matches_both_executors(idx):
     """method="auto" (per-query cost-based executor choice) must return
     exactly what the fixed executors return, on queries that exercise
-    both branches (dense-only → exhaustive; rare+dense → wand)."""
+    both branches (dense-only → exhaustive; rare+dense → maxscore)."""
     q = [(1, "join"), (2, "the data"), (3, "hash join merge"), (4, "zzzmissing")]
     out = {}
     for m in ("exhaustive", "wand", "maxscore", "auto"):
@@ -223,7 +235,7 @@ def test_auto_method_matches_both_executors(idx):
 
 def test_auto_method_on_rare_term_corpus(spark, tmp_path):
     """A corpus with a genuinely rare term (df*10 <= n_docs) drives the
-    auto heuristic down the WAND branch; results must still equal the
+    auto heuristic down the MaxScore branch; results must still equal the
     exhaustive executor."""
     docs = spark.createDataFrame(
         [(i, "common words everywhere " + ("rareterm special" if i == 7 else "filler text"))
@@ -241,14 +253,14 @@ def test_auto_method_on_rare_term_corpus(spark, tmp_path):
 
 def test_decode_counters_and_zipf_determinism(spark):
     """r5 decode instrumentation: exhaustive counts every block as
-    decoded; WAND never counts more than total; both executors return
+    decoded; MaxScore never counts more than total; both executors return
     identical results with counters on.  Also: the Zipf corpus is
     deterministic under repartitioning (seeded per doc_id)."""
     import numpy as np
     import pandas as pd
 
     from eaststorm_searchengine_spark import corpus as corpus_mod
-    from eaststorm_searchengine_spark.operators import codec, wand
+    from eaststorm_searchengine_spark.operators import codec
     from eaststorm_searchengine_spark.operators.bm25 import _exhaustive_topk
 
     rng = np.random.RandomState(3)
@@ -267,13 +279,13 @@ def test_decode_counters_and_zipf_determinism(spark):
         })
     blocks = pd.DataFrame(rows)
     rare = blocks.iloc[:1].copy()
-    cw, ce = {}, {}
-    dw = wand.wand_topk([blocks, rare], [0.5, 6.0], 5, 100.0, counters=cw)
+    cm, ce = {}, {}
+    dm = maxscore_topk([blocks, rare], [0.5, 6.0], 5, 100.0, counters=cm)
     de = _exhaustive_topk([blocks, rare], [0.5, 6.0], 5, 100.0, counters=ce)
     assert ce["blocks_decoded"] == ce["blocks_total"] == len(blocks) + 1
-    assert cw["blocks_total"] == len(blocks) + 1
-    assert 0 < cw["blocks_decoded"] <= cw["blocks_total"]
-    assert [int(d) for d in dw[0]] == [int(d) for d in de[0]]
+    assert cm["blocks_total"] == len(blocks) + 1
+    assert 0 < cm["blocks_decoded"] <= cm["blocks_total"]
+    assert [int(d) for d in dm[0]] == [int(d) for d in de[0]]
 
     a = sorted(corpus_mod.synthesize_zipf_docs(spark, 200).collect())
     b = sorted(corpus_mod.synthesize_zipf_docs(spark, 200).repartition(7).collect())
@@ -319,34 +331,10 @@ def test_maxscore_skips_nonessential_blocks():
     assert cm["blocks_decoded"] < cm["blocks_total"] // 4
 
 
-def test_choose_wand_chunk_local_anchor_rule():
-    """r5 cost model: WAND needs (a) ≥2 terms, (b) a globally selective
-    term, and (c) that term able to anchor the chunk's top-k (chunk-
-    local postings ≥ k) — below k, θ collapses to common-only scores
-    and nothing is skippable (measured)."""
-    import pandas as pd
-
-    from eaststorm_searchengine_spark.operators.bm25 import _choose_wand
-
-    def blocks(df, ns):
-        return pd.DataFrame({"df": [df] * len(ns), "n": ns})
-
-    dense = blocks(90_000, [128] * 50)
-    anchor_ok = blocks(200, [15])
-    anchor_thin = blocks(200, [3])
-    n_docs = 100_000
-    assert _choose_wand({"a": dense, "b": anchor_ok}, 10, n_docs)
-    # rarest term too thin in this chunk -> exhaustive
-    assert not _choose_wand({"a": dense, "b": anchor_thin}, 10, n_docs)
-    # no selective term anywhere -> exhaustive
-    assert not _choose_wand({"a": dense, "b": blocks(50_000, [128] * 30)}, 10, n_docs)
-    # single term -> exhaustive
-    assert not _choose_wand({"a": anchor_ok}, 10, n_docs)
-
-
 def test_wand_decision_reasons():
-    """r6: the auto cost model exposes WHY it rejected WAND, one label
-    per DECISION_REASONS — the decision accumulators report these."""
+    """r6: the auto cost model exposes WHY it chose each executor, one
+    label per DECISION_REASONS — the decision accumulators report
+    these.  Each term is (corpus df, chunk-local block sizes)."""
     import pandas as pd
 
     from eaststorm_searchengine_spark.operators.bm25 import (
@@ -354,40 +342,37 @@ def test_wand_decision_reasons():
         _wand_decision,
     )
 
-    def blocks(df, ns):
-        return pd.DataFrame({"df": [df] * len(ns), "n": ns})
+    def decide(spec):
+        frames = {t: pd.DataFrame({"n": ns}) for t, (_, ns) in spec.items()}
+        dfs = {t: df for t, (df, _) in spec.items()}
+        return _wand_decision(frames, 10, n_docs, dfs=dfs)
 
-    dense = blocks(90_000, [128] * 50)
+    dense = (90_000, [128] * 50)
     n_docs = 100_000
     cases = {
-        "wand": {"a": dense, "b": blocks(200, [15])},
-        "anchor_thin": {"a": dense, "b": blocks(200, [3])},
-        "no_selective": {"a": dense, "b": blocks(50_000, [128] * 30)},
+        "wand": {"a": dense, "b": (200, [15])},
+        "anchor_thin": {"a": dense, "b": (200, [3])},
+        "no_selective": {"a": dense, "b": (50_000, [128] * 30)},
         "single_term": {"a": dense},
         # r8 span-aware routing: dense everywhere, but mean chunk-local
         # run (2 × 76,800 postings) crosses DENSE_LONG_RUN_POSTINGS
         "dense_long_run": {
-            "a": blocks(90_000, [128] * 600),
-            "b": blocks(80_000, [128] * 600),
+            "a": (90_000, [128] * 600),
+            "b": (80_000, [128] * 600),
         },
     }
-    for want, tcb in cases.items():
-        assert _wand_decision(tcb, 10, n_docs) == want
+    for want, spec in cases.items():
+        assert decide(spec) == want
     assert set(cases) == set(DECISION_REASONS)
     # ADVICE r8: the threshold is term-count-aware — a 5-term dense
     # query at ~48k mean runs (measured regression region for wide
     # queries) stays exhaustive; the same runs with 2 terms route to
     # maxscore; 5 terms crossing 2^16 route too.
-    run48k = blocks(90_000, [128] * 375)  # 48,000 postings per term
-    wide48k = {t: run48k for t in "abcde"}
-    assert _wand_decision(wide48k, 10, n_docs) == "no_selective"
-    assert _wand_decision({"a": run48k, "b": run48k}, 10, n_docs) == (
-        "dense_long_run"
-    )
-    run72k = blocks(90_000, [128] * 563)  # 72,064 > 2^16
-    assert _wand_decision({t: run72k for t in "abcde"}, 10, n_docs) == (
-        "dense_long_run"
-    )
+    run48k = (90_000, [128] * 375)  # 48,000 postings per term
+    assert decide({t: run48k for t in "abcde"}) == "no_selective"
+    assert decide({"a": run48k, "b": run48k}) == "dense_long_run"
+    run72k = (90_000, [128] * 563)  # 72,064 > 2^16
+    assert decide({t: run72k for t in "abcde"}) == "dense_long_run"
 
 
 def test_decision_accumulators_report_auto_choices(spark, tmp_path):
@@ -428,7 +413,7 @@ def test_explain_matches_decision_accumulators(spark, tmp_path):
     """r6: BM25Index.explain() is the driver-side view of the SAME
     cost decisions the scorer makes — its per-reason counts must equal
     the decision accumulators from an actual auto search, including a
-    corpus where some chunks genuinely choose WAND."""
+    corpus where some chunks genuinely route to MaxScore ("wand")."""
     from collections import Counter
 
     from eaststorm_searchengine_spark.operators.bm25 import (
