@@ -17,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import threading
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -647,6 +648,19 @@ def connected_components(
     crawl frontier broadcast; the edge list was already bounded by the
     pair generators).  Bigger graphs take the distributed loop.  The
     edge count comes free off the eager checkpoint."""
+    rows, labels = _components(pairs, a_col, b_col, max_iters, driver_threshold)
+    if rows is None:
+        return labels
+    return local_frame(pairs.sparkSession, rows, "node long, comp long")
+
+
+def _components(
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
+    max_iters: int = 25, driver_threshold: int = 1_000_000,
+) -> tuple[list[tuple[int, int]] | None, DataFrame | None]:
+    """:func:`connected_components` body → ``(rows, None)`` with the
+    driver union-find's (node, comp) rows sorted by node, or
+    ``(None, labels)`` from the distributed loop."""
     # symmetrize via explode, NOT a self-union: the union references
     # its input twice (forcing an extra eager checkpoint of the
     # directed pairs so the expensive upstream pair pipeline doesn't
@@ -683,8 +697,7 @@ def connected_components(
             if ra != rb:
                 # min-root union: the root IS the component min id
                 parent[max(ra, rb)] = min(ra, rb)
-        rows = [(n, find(n)) for n in sorted(parent)]
-        return local_frame(pairs.sparkSession, rows, "node long, comp long")
+        return [(n, find(n)) for n in sorted(parent)], None
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -723,13 +736,24 @@ def connected_components(
             "a component's diameter exceeds max_iters; raise max_iters "
             "(labels would be silently wrong otherwise)"
         )
-    return labels
+    return None, labels
 
 
 def _groups_from_pairs(pairs: DataFrame) -> DataFrame:
     """Shared tail of every grouping pipeline: pairs → connected
-    components → (doc_id, group_id, n_docs), group_id = min doc_id."""
-    cc = connected_components(pairs)
+    components → (doc_id, group_id, n_docs), group_id = min doc_id,
+    ordered by (group_id, doc_id).  When the components resolve in the
+    driver, the sizes and the ordered rows are computed there too and
+    come back as one LocalRelation — no further Spark job."""
+    rows, cc = _components(pairs)
+    if rows is not None:
+        sizes = Counter(comp for _node, comp in rows)
+        groups = sorted(
+            ((node, comp, sizes[comp]) for node, comp in rows), key=lambda r: (r[1], r[0])
+        )
+        return local_frame(
+            pairs.sparkSession, groups, "doc_id long, group_id long, n_docs long"
+        )
     sizes = cc.groupBy("comp").agg(F.count("*").cast("long").alias("n_docs"))
     return (
         cc.join(sizes, "comp")

@@ -141,9 +141,11 @@ def pagerank(
     (``nd``), so the dangling sum needs no join.
 
     Size gate (r10): graphs of at most ``driver_edge_threshold`` edges
-    resolve driver-side (:func:`_pagerank_driver`) — identical
-    fixpoint, no per-iteration job latency; bigger graphs take the
-    distributed loop."""
+    AND at most ``driver_edge_threshold`` hosts resolve driver-side
+    (:func:`_pagerank_driver`) — identical fixpoint, no per-iteration
+    job latency.  The host bound matters because the driver holds one
+    rank per host: a graph with many hosts but few edges is big, not
+    small.  Bigger graphs take the distributed loop."""
     spark = links.sparkSession
     links = links.localCheckpoint()
     agg = links.agg(
@@ -153,7 +155,7 @@ def pagerank(
     n_hosts, n_edges = int(agg["n"]), int(agg["e"])
     if n_hosts == 0:
         return local_frame(spark, [], "host string, rank double")
-    if n_edges <= driver_edge_threshold:
+    if n_edges <= driver_edge_threshold and n_hosts <= driver_edge_threshold:
         return _pagerank_driver(spark, links, n_hosts, max_iterations)
     init = 1.0 / n_hosts
 

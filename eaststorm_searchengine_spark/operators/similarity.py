@@ -4,15 +4,18 @@ Beyond-reference capability (build brief): brute-force cosine top-k as
 the exact baseline, and an LSH-bucketed approximate variant as the
 scale path (random-hyperplane LSH per Charikar 2002).
 
-Scale notes: brute force is a broadcast join of the (tiny) query-vector
-set against the corpus — embarrassingly parallel, no shuffle except the
+Scale notes: brute force and the IVF probe scan hand each Arrow batch
+of corpus vectors to one BLAS matmul against the (tiny) query matrix
+(``_score_topk``) — embarrassingly parallel, no shuffle except the
 final top-k.  The LSH variant buckets the corpus once (a narrow
 groupBy key) so each query probes only its bucket — the 10^12-row
-path.  Dot products run in whole-stage codegen via ``aggregate`` /
-``zip_with`` — no Python in the hot loop.
+path; its candidates, and the near-dup pair rescorers, still take the
+JVM-side ``_cosine`` fold (``aggregate`` / ``zip_with``).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -69,29 +72,34 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vectors: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_round: int = 6,
-) -> DataFrame:
-    """Exact brute-force cosine top-k → (query_id, rank, vec_id, cosine).
-    Tie-break: cosine desc, vec_id asc.
+_TOPK_DDL = "query_id int, rank long, vec_id long, cosine double"
 
-    r10: the per-row JVM ``aggregate(zip_with)`` fold over the
-    crossJoin (44 µs/cosine — scalar codegen over array cells) is
-    replaced by one BLAS matmul per Arrow batch against the broadcast
-    query matrix (guide §4.2); NULL and wrong-length vectors and
-    non-finite cosines (zero-norm or NaN inputs) are dropped inside the
-    scorer — exactly the rows ``_rank_topk``'s NULL/NaN filter removed
-    before."""
+
+def _score_topk(
+    src: DataFrame,
+    query_vectors: list[tuple[int, list[float]]],
+    k: int,
+    score_round: int,
+    probe: np.ndarray | None = None,
+) -> DataFrame:
+    """The exact batch scorer shared by :func:`cosine_topk` and
+    :meth:`IVFIndex.topk`: ``src`` rows (vec_id, vec[, list_id]) →
+    global top-k per query via ``_rank_topk``.
+
+    One BLAS matmul per Arrow batch against the query matrix, which
+    rides in the closure: the JVM ``_cosine`` fold costs 44 µs per
+    cosine (scalar codegen over array cells).  NULL and wrong-length
+    vectors and non-finite cosines (zero-norm or NaN inputs) are
+    dropped inside the scorer — exactly the rows the JVM ``_cosine``
+    makes NULL or NaN and ``_rank_topk``'s filter removes.
+
+    ``probe`` (IVF): a boolean (list_id × query) matrix.  ``src`` then
+    carries ``list_id``, and a (vector, query) pair is scored only where
+    ``probe[list_id, query]`` — the query probes that vector's list."""
+    if not query_vectors:
+        return local_frame(src.sparkSession, [], _TOPK_DDL)
     Q = np.asarray([v for _, v in query_vectors], dtype=np.float64)
     qids = np.asarray([qid for qid, _ in query_vectors], dtype=np.int64)
-    src = spread_for_udf(
-        embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
-    )
 
     def score(batches):
         worker_guard.install()
@@ -109,8 +117,11 @@ def cosine_topk(
             vn = np.linalg.norm(M, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = (M @ Q.T) / np.outer(vn, qn)
+            keep = np.isfinite(cos)
+            if probe is not None:
+                keep &= probe[pdf["list_id"].to_numpy()[ok]]
             ids = pdf["vec_id"].to_numpy()[ok]
-            r, c = np.nonzero(np.isfinite(cos))
+            r, c = np.nonzero(keep)
             yield pd.DataFrame(
                 {
                     "query_id": qids[c].astype(np.int32),
@@ -122,6 +133,23 @@ def cosine_topk(
     scored = src.mapInPandas(score, "query_id int, vec_id long, cosine double")
     scored = scored.withColumn("cosine", F.round("cosine", score_round))
     return _rank_topk(scored, k)
+
+
+def cosine_topk(
+    embeddings: DataFrame,
+    query_vectors: list[tuple[int, list[float]]],
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    score_round: int = 6,
+) -> DataFrame:
+    """Exact brute-force cosine top-k → (query_id, rank, vec_id, cosine).
+    Tie-break: cosine desc, vec_id asc.  Scored by :func:`_score_topk`;
+    no query vectors → an empty frame of the same schema."""
+    src = spread_for_udf(
+        embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+    )
+    return _score_topk(src, query_vectors, k, score_round)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -195,13 +223,16 @@ def lsh_cosine_topk(
     recall is approximate — it rises with tables × probes while every
     groupBy/join key stays a bounded (table, signature) bucket.  The
     exact variant is the oracle (recall measured at sf0.1 in
-    BASELINE.md)."""
+    BASELINE.md).  No query vectors → an empty frame of the same
+    schema."""
     spark = embeddings.sparkSession
+    if not query_vectors:
+        return local_frame(spark, [], _TOPK_DDL)
     dim = len(query_vectors[0][1])
     all_planes = [_hyperplanes(dim, n_planes, seed=seed + t) for t in range(n_tables)]
     corpus = (
         embeddings.select(
-            F.col(id_col).alias("vec_id"),
+            F.col(id_col).cast("long").alias("vec_id"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
         )
         .withColumn("sigs", _multi_sig_col(F.col("vec"), all_planes))
@@ -508,10 +539,16 @@ class IVFIndex:
     Build-once/query-many contract (VERDICT r03 #2): construction
     runs the count + sample-collect + fit chain ONCE and persists the
     assignment DataFrame (MEMORY_AND_DISK, lineage-backed), so each
-    :meth:`topk` call is a single probe-join job instead of re-running
-    the whole chain.  Call :meth:`unpersist` when done; at 100-TB
-    scale replace the persist with a parquet stage partitioned by
-    list_id (the index builder's staging pattern)."""
+    :meth:`topk` call only scans the probed lists of the persisted
+    assignment instead of re-running the whole chain.  Call
+    :meth:`unpersist` when done; at 100-TB scale replace the persist
+    with a parquet stage partitioned by list_id (the index builder's
+    staging pattern).
+
+    NULL and wrong-length vectors have no cosine (:func:`cosine_topk`'s
+    contract), so they stay out of the fit sample and the lists; the
+    dimension is the most common vector length in the collected
+    sample."""
 
     def __init__(
         self,
@@ -569,7 +606,12 @@ class IVFIndex:
         sample_rows = sorted(
             fit_df.select("vec_id", "unit").collect(), key=lambda r: r["vec_id"]
         )
-        sample = np.array([r["unit"] for r in sample_rows], dtype=np.float64)
+        lens = Counter(len(r["unit"]) for r in sample_rows if r["unit"] is not None)
+        dim = lens.most_common(1)[0][0] if lens else 0
+        sample = np.array(
+            [r["unit"] for r in sample_rows if r["unit"] is not None and len(r["unit"]) == dim],
+            dtype=np.float64,
+        )
         self.empty = sample.size == 0
         if self.empty:  # empty corpus → no results from any query
             self.lists = None
@@ -591,7 +633,7 @@ class IVFIndex:
             lid = np.argmax(M @ centers.T - half_sq[None, :], axis=1)
             return pd.Series(lid.astype(np.int32))
 
-        self.lists = base.select(
+        self.lists = base.filter(F.size("vec") == dim).select(
             "vec_id", "vec", assign(F.col("unit")).alias("list_id")
         )
         self._persisted = materialize
@@ -615,14 +657,14 @@ class IVFIndex:
         score_round: int = 6,
     ) -> DataFrame:
         """(query_id, rank, vec_id, cosine) over the ``n_probe`` best
-        lists per query — one probe-join job against the persisted
-        assignment."""
+        lists per query: the persisted assignment, filtered to the
+        lists some query probes, goes through :func:`_score_topk` with
+        the (list_id × query) probe matrix, so each query scores only
+        the vectors of its own probed lists."""
         if self.empty:
-            return local_frame(
-                self.spark, [], "query_id int, rank long, vec_id long, cosine double"
-            )
-        qrows = []
-        for qid, v in query_vectors:
+            return local_frame(self.spark, [], _TOPK_DDL)
+        probe = np.zeros((len(self.centers), len(query_vectors)), dtype=bool)
+        for j, (_qid, v) in enumerate(query_vectors):
             arr = np.asarray(v, dtype=np.float64)
             nrm = np.linalg.norm(arr)
             qu = arr / nrm if nrm > 0 else arr
@@ -631,17 +673,10 @@ class IVFIndex:
             # raw cosine here would probe a different neighborhood than
             # the one the quantizer filed the vectors under
             aff = qu @ self.centers.T - (self.cnorm ** 2) / 2.0
-            for lid in np.argsort(-aff)[:n_probe]:
-                qrows.append((qid, [float(x) for x in v], int(lid)))
-        qdf = F.broadcast(
-            local_frame(self.spark, qrows, "query_id int, qvec array<double>, list_id int")
-        )
-        scored = self.lists.join(qdf, "list_id").select(
-            "query_id",
-            "vec_id",
-            F.round(_cosine(F.col("vec"), F.col("qvec")), score_round).alias("cosine"),
-        )
-        return _rank_topk(scored, k)
+            probe[np.argsort(-aff)[:n_probe], j] = True
+        probed = np.flatnonzero(probe.any(axis=1)).tolist()
+        src = self.lists.filter(F.col("list_id").isin(probed))
+        return _score_topk(src, query_vectors, k, score_round, probe)
 
 
 def ivf_cosine_topk(

@@ -4,6 +4,7 @@ item 6)."""
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from eaststorm_searchengine_spark.operators import dedup
@@ -374,3 +375,42 @@ def test_ngram_routes_agree_at_rounding_boundary(spark):
     assert direct == [(1, 2, 0.666667)]
     assert prefix == direct
     assert key(dedup.ngram_jaccard_pairs_arrays(docs, n=3, threshold=t)) == direct
+
+
+def _planted_and_flood_docs(spark, kind):
+    """``planted``: sliding 12-word windows (many pairs straddling
+    t=0.5, components of several sizes) plus unrelated singletons;
+    ``flood``: identical documents plus unrelated ones."""
+    if kind == "planted":
+        words = [f"w{i}" for i in range(30)]
+        rows = [(d, " ".join(words[(d * 3) % 18 : (d * 3) % 18 + 12])) for d in range(40)]
+        rows += [(100 + d, f"unique{d} " * 8) for d in range(5)]
+    else:
+        rows = [(i, "same text body for every single copy here") for i in range(300)]
+        rows += [(900 + i, " ".join(f"u{i}w{j}" for j in range(12))) for i in range(5)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("kind", ["planted", "flood"])
+@pytest.mark.parametrize("op", ["near_dup_groups", "minhash_dup_groups"])
+def test_group_tails_agree(spark, monkeypatch, op, kind):
+    """The driver group tail (components solved by union-find, sizes
+    and order computed in the driver) and the distributed tail (forced
+    with a zero CC driver threshold) return the same rows, column names
+    and types; the driver tail's plan has no Exchange."""
+    import functools
+
+    from eaststorm_searchengine_spark.plans import inspect
+
+    docs = _planted_and_flood_docs(spark, kind)
+    fn = getattr(dedup, op)
+    drv_df = fn(docs)
+    assert "Exchange" not in inspect.formatted_plan(drv_df)
+    monkeypatch.setattr(
+        dedup, "_components", functools.partial(dedup._components, driver_threshold=0)
+    )
+    dist_df = fn(docs)
+    schema = lambda df: [(f.name, f.dataType) for f in df.schema.fields]
+    assert schema(drv_df) == schema(dist_df)
+    drv, dist = [tuple(r) for r in drv_df.collect()], [tuple(r) for r in dist_df.collect()]
+    assert drv == dist and drv

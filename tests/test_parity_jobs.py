@@ -331,3 +331,30 @@ def test_pagerank_driver_gate_matches_distributed(spark, pages_df):
         for r in pagerank.pagerank(links, driver_edge_threshold=0).collect()
     )
     assert drv == dist and len(drv) > 0
+
+
+def test_pagerank_many_hosts_few_edges_takes_distributed_loop(spark, monkeypatch):
+    """The driver gate bounds hosts as well as edges: a graph with few
+    edges but more hosts than ``driver_edge_threshold`` runs the
+    distributed loop, and its ranks equal the driver fixpoint's."""
+    from eaststorm_searchengine_spark.functions.frames import local_frame
+
+    rows = [(f"h{i:02d}.example", []) for i in range(30)]
+    rows[0] = ("h00.example", ["h01.example", "h02.example"])
+    rows[5] = ("h05.example", ["h00.example"])
+    links = local_frame(spark, rows, "host string, dsts array<string>")
+    drv = sorted(
+        (r["host"], float(r["rank"]))
+        for r in pagerank.pagerank(links, driver_edge_threshold=1 << 40).collect()
+    )
+    calls = []
+    real = pagerank._pagerank_driver
+    monkeypatch.setattr(
+        pagerank, "_pagerank_driver", lambda *a, **kw: calls.append(a) or real(*a, **kw)
+    )
+    dist = sorted(
+        (r["host"], float(r["rank"]))
+        for r in pagerank.pagerank(links, driver_edge_threshold=10).collect()
+    )
+    assert calls == []
+    assert dist == drv and len(drv) == 30

@@ -215,3 +215,81 @@ def test_cosine_topk_skips_null_and_ragged_vectors(spark):
     got = key(similarity.cosine_topk(spark.createDataFrame(good + bad, schema), q, k=5))
     want = key(similarity.cosine_topk(spark.createDataFrame(good, schema), q, k=5))
     assert got == want and len(got) == 10
+
+
+def test_empty_query_list_returns_empty_topk(spark):
+    """No query vectors → no rows, with the schema a non-empty call
+    returns, on all three top-k paths."""
+    emb = _planted_corpus(spark, n=40, n_dups=2)
+    q = [(1, [float(x) for x in emb.first()["embedding"]])]
+    schema = lambda df: [(f.name, f.dataType) for f in df.schema.fields]
+    idx = similarity.IVFIndex(emb, n_centroids=4)
+    try:
+        for topk in (
+            lambda qs: similarity.cosine_topk(emb, qs, k=3),
+            lambda qs: similarity.lsh_cosine_topk(emb, qs, k=3),
+            lambda qs: idx.topk(qs, k=3, n_probe=2),
+        ):
+            empty, full = topk([]), topk(q)
+            assert empty.collect() == []
+            assert schema(empty) == schema(full) and full.count() == 3
+    finally:
+        idx.unpersist()
+
+
+def _ivf_rows(idx, q, k=5, n_probe=3):
+    return [tuple(r) for r in idx.topk(q, k=k, n_probe=n_probe).collect()]
+
+
+def test_ivf_skips_null_and_ragged_vectors(spark):
+    """A NULL and a wrong-length embedding have no cosine: they stay out
+    of the fit and the lists, so the index equals one built over the
+    well-formed rows alone."""
+    rng = np.random.RandomState(11)
+    good = [(i, rng.standard_normal(4).tolist()) for i in range(40)]
+    bad = [(7_000, None), (7_001, [1.0, 0.0])]
+    schema = "vec_id long, embedding array<double>"
+    q = [(1, good[3][1]), (2, [0.0, 1.0, 0.5, 0.0])]
+    both = similarity.IVFIndex(spark.createDataFrame(good + bad, schema), n_centroids=6)
+    only = similarity.IVFIndex(spark.createDataFrame(good, schema), n_centroids=6)
+    try:
+        got, want = _ivf_rows(both, q), _ivf_rows(only, q)
+    finally:
+        both.unpersist()
+        only.unpersist()
+    assert got == want and len(got) == 10
+
+
+def test_ivf_topk_equals_brute_force_over_probed_lists(spark):
+    """Each query's top-k equals a numpy brute force over the vectors of
+    the lists it probes (same affinity as the index), so only probed
+    pairs are scored: cosines within 2e-6, ids equal apart from ties."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in emb.filter(F.col("vec_id") < 6).collect()
+    ]
+    k, n_probe, tol = 10, 4, 2e-6
+    idx = similarity.IVFIndex(emb, n_centroids=16)
+    try:
+        lists = idx.lists.collect()
+        got = _ivf_rows(idx, q, k=k, n_probe=n_probe)
+    finally:
+        idx.unpersist()
+    ids = np.array([r["vec_id"] for r in lists])
+    lid = np.array([r["list_id"] for r in lists])
+    V = np.array([r["vec"] for r in lists], dtype=np.float64)
+    half_sq = (idx.cnorm ** 2) / 2.0
+    for qid, v in q:
+        qv = np.asarray(v)
+        probed = np.argsort(-((qv / np.linalg.norm(qv)) @ idx.centers.T - half_sq))[:n_probe]
+        m = np.isin(lid, probed)
+        cos = np.round(V[m] @ qv / (np.linalg.norm(V[m], axis=1) * np.linalg.norm(qv)), 6)
+        order = np.lexsort((ids[m], -cos))[:k]
+        want = [(int(ids[m][i]), float(cos[i])) for i in order]
+        mine = [(vid, c) for qq, _r, vid, c in got if qq == qid]
+        assert len(mine) == len(want) == k
+        assert all(abs(a[1] - b[1]) <= tol for a, b in zip(mine, want))
+        cut = want[-1][1] + tol
+        assert {i for i, c in mine if c > cut} == {i for i, c in want if c > cut}
+        assert not m.all()  # the probed lists leave part of the corpus out
