@@ -277,7 +277,7 @@ def synthesize_skew_docs(spark, n_docs: int, vocab: int = 10_000,
 # their decode-fraction numbers stay comparable).
 # Anchored: one selective term with per-chunk df >= k (the block-
 # skipping-favorable shape); dense controls: common-terms-only (the
-# exhaustive-favorable shape the cost-based "auto" must route correctly).
+# shape where MaxScore has the least to skip).
 ZIPF_ANCHORED_RANKS = [
     (2, 40, 500), (1, 55, 620), (3, 33, 410), (5, 70, 777),
     (4, 48, 555), (6, 90, 840), (8, 61, 465), (10, 77, 905),

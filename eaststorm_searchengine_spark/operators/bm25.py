@@ -1,17 +1,15 @@
 """BM25 top-k query engine over the compressed segment index.
 
-Two executors, bitwise equal in tests, and a router between them:
+Two executors, bitwise equal in tests, and no router between them:
 
-* ``exhaustive`` — vectorized term-at-a-time: decode every matching
-  block, accumulate per-doc scores with ``np.add.at``, take the
-  chunk's top-k with one lexsort.  Fastest for dense-only queries over
-  short posting runs (one segmented decode, no per-wave overhead).
 * ``maxscore`` — block-max MaxScore (``maxscore.py``): candidates come
   only from the terms whose upper bounds can still reach the running
   threshold, and only the blocks whose doc fences hold a candidate are
-  decoded.  The selective executor; ``"wand"`` is an alias for it.
-* ``auto`` — per-(query, chunk) choice between the two from the
-  query terms' df and the chunk's block metadata (``_wand_decision``).
+  decoded.  It serves every chunk for ``method="auto"`` (the default),
+  ``"maxscore"`` and its alias ``"wand"``.
+* ``exhaustive`` — vectorized term-at-a-time: decode every matching
+  block, accumulate per-doc scores with ``np.add.at``, take the
+  chunk's top-k with one lexsort.  The equality oracle for MaxScore.
 
 Distribution model: segment blocks are grouped by ``chunk`` (doc
 range); each chunk computes its local top-k independently (scores use
@@ -34,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import textproc
 from ..functions import sqltok
 from ..functions.frames import local_frame
 from ..functions.hashing import term_bucket
@@ -78,7 +75,7 @@ class BM25Index:
         index holds cluster cache for the handle's lifetime; call
         :meth:`unpersist` when done).  The single-query driver-merge
         path deliberately ignores the pin: it scans parquet through the
-        one-job serving session, and an r8 A/B measured the cached
+        one-job serving session, and an A/B measured the cached
         columnar scan of binary posting blobs no faster than parquet +
         OS page cache (0.43-0.50 vs 0.36-0.48 s p50 @ 1M) while the
         extra AQE session would cost a second job barrier."""
@@ -87,7 +84,7 @@ class BM25Index:
         self.pin = pin
         # guards the lazy one-time inits (serving session, df map) when
         # one handle serves concurrent threads — a long-lived query
-        # server's natural shape (r9): without it two racing first
+        # server's natural shape: without it two racing first
         # queries each call spark.newSession(), leaking JVM
         # SessionState, or double-build the driver df map
         self._init_lock = threading.Lock()
@@ -129,7 +126,7 @@ class BM25Index:
             return None  # non-posix / remote FS: rebuild detection off
 
     def _refresh_if_rebuilt(self) -> None:
-        """Rebuild detection (ADVICE r03 #3): stats.json is written
+        """Rebuild detection: stats.json is written
         LAST by the builder, so its mtime changing under a live handle
         means the index directory was rebuilt — the cached file index
         would read stale or deleted segment files.  One os.stat per
@@ -162,7 +159,7 @@ class BM25Index:
 
     def _serve_segs(self):
         """Segment scan bound to a dedicated serving session with AQE
-        OFF and static shuffle partitions (r8 serving-floor cut): under
+        OFF and static shuffle partitions (a serving-floor cut): under
         AQE a single-query search runs as TWO jobs (map-stage
         materialization, then the re-planned reduce) — two scheduling
         barriers for a query whose reduce side is a handful of chunk
@@ -177,12 +174,11 @@ class BM25Index:
                     return self._serve_segs_df
                 s = getattr(self, "_serve_spark", None)
                 if s is None:
-                    # ONE serving session per handle lifetime
-                    # (code-review r8): sessions have no per-session
-                    # close API short of stopping the context, so
-                    # creating one per rebuild would leak JVM
-                    # SessionState in a long-lived server — reuse it
-                    # and just refresh its file-index cache
+                    # ONE serving session per handle lifetime: sessions
+                    # have no per-session close API short of stopping
+                    # the context, so creating one per rebuild would
+                    # leak JVM SessionState in a long-lived server —
+                    # reuse it and just refresh its file-index cache
                     s = self.spark.newSession()  # same ctx, own SQLConf
                     s.conf.set("spark.sql.adaptive.enabled", "false")
                     s.conf.set(
@@ -208,7 +204,7 @@ class BM25Index:
     def _term_dfs(self, terms: list[str]) -> dict[str, int]:
         """term → df for the query's terms, resolved driver-side.
 
-        r8 serving-floor cut: the per-query ``join(broadcast(stats))``
+        Serving-floor cut: the per-query ``join(broadcast(stats))``
         cost a whole extra Spark job per search (the broadcast build —
         profiled: 3 jobs/query, one of them this).  A long-lived handle
         resolves df from a one-time driver-side map instead, so the
@@ -249,10 +245,10 @@ class BM25Index:
             for t in missing:
                 self._df_cache[t] = found.get(t)
             if len(self._df_cache) > self.DRIVER_STATS_CAP:
-                # Evict entries NOT in the current query (ADVICE r8:
-                # wiping the whole memo before building the return dict
-                # dropped the current query's already-cached terms —
-                # the query was silently scored without indexed terms).
+                # Evict entries NOT in the current query (wiping the
+                # whole memo before building the return dict dropped
+                # the current query's already-cached terms — the query
+                # was silently scored without indexed terms).
                 self._df_cache = {
                     t: self._df_cache[t] for t in terms if t in self._df_cache
                 }
@@ -277,15 +273,12 @@ class BM25Index:
         distinct terms, matching the DuckDB oracle).
 
         ``method`` (one of ``SEARCH_METHODS``, else ``ValueError``):
-        ``"auto"`` (default) chooses per (query, chunk) from the query
-        terms' df and the chunk's block metadata: MaxScore when a
-        selective term can anchor the chunk's top-k or the chunk's
-        posting runs are long, exhaustive otherwise.  ``"maxscore"``
-        always runs vectorized block-max MaxScore (candidate waves from
-        essential terms only, fence-pruned segmented decode);
-        ``"wand"`` is an alias for it.  ``"exhaustive"`` (vectorized
-        term-at-a-time) scores every posting.  All settings return
-        identical results (executor equality is bitwise-tested).
+        ``"auto"`` (default), ``"maxscore"`` and its alias ``"wand"``
+        run vectorized block-max MaxScore on every chunk (candidate
+        waves from essential terms only, fence-pruned segmented
+        decode).  ``"exhaustive"`` (vectorized term-at-a-time) scores
+        every posting and is the equality oracle.  Both executors
+        return identical results (bitwise-tested).
 
         Plan: segment scan (bucket directory pruning from the
         python-computable term hash + term predicate pushdown) →
@@ -299,7 +292,7 @@ class BM25Index:
         top-k.  ``"window"`` (default) ranks with a
         per-query window — fully distributed, the right shape when the
         batch is large.  ``"driver"`` merges the candidates driver-side
-        (VERDICT r02 #7) — the same TakeOrdered pattern Spark plans for
+        — the same TakeOrdered pattern Spark plans for
         orderBy+limit — collapsing the query to ONE job; identical
         results (pytest-gated), ~2× lower single-query latency since
         the second job's scheduling round-trip disappears.
@@ -309,10 +302,10 @@ class BM25Index:
         ``decoded`` counts FRESH decodes (shared per-chunk handles mean
         a batch's later queries may hit cache); ``logical`` counts what
         a cold cache would decode per query — the batch-size-invariant
-        skip-rate numerator (ADVICE r07).
+        skip-rate numerator.
         ``decision_acc``: optional dict of Spark accumulators keyed by
-        ``DECISION_REASONS`` — per-(query, chunk) records of what the
-        auto cost model chose and why (VERDICT r05 #1)."""
+        ``DECISION_REASONS``; with ``method="auto"`` each (query,
+        chunk-with-hits) adds one to ``"wand"`` (MaxScore served it)."""
         if method not in SEARCH_METHODS:
             raise ValueError(f"method must be one of {SEARCH_METHODS}, got {method!r}")
         if final_rank not in FINAL_RANKS:
@@ -350,12 +343,11 @@ class BM25Index:
         )
 
         avgdl, n_docs, qmap = self.avgdl, self.n_docs, qterms
+        topk = _exhaustive_topk if method == "exhaustive" else maxscore_topk
 
         def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
             counters: dict | None = {} if decode_acc is not None else None
-            decision_counts: dict | None = (
-                {} if decision_acc is not None else None
-            )
+            served = 0  # (query, chunk-with-hits) pairs
             by_term: dict[str, pd.DataFrame] = {
                 t: g.sort_values("first_doc") for t, g in pdf.groupby("term")
             }
@@ -376,31 +368,11 @@ class BM25Index:
                 present = [t for t in terms if t in by_term]
                 if not present:
                     continue
-                if method == "auto":
-                    decision = _wand_decision(
-                        {t: by_term[t] for t in present}, k, n_docs, dfs=dfs
-                    )
-                    if decision_counts is not None:
-                        decision_counts[decision] = (
-                            decision_counts.get(decision, 0) + 1
-                        )
-                    # "wand": a selective term makes block skipping
-                    # pay; "dense_long_run": dense query, but the
-                    # chunk's posting runs are long enough that
-                    # MaxScore wins anyway
-                    fn = (
-                        maxscore_topk
-                        if decision in ("wand", "dense_long_run")
-                        else _exhaustive_topk
-                    )
-                elif method == "exhaustive":
-                    fn = _exhaustive_topk
-                else:  # "maxscore" and its alias "wand"
-                    fn = maxscore_topk
+                served += 1
                 # both executors share the per-chunk _TermPostings
                 # handles: a term's blocks decode once per CHUNK across
                 # the batch
-                docs_a, scores_a = fn(
+                docs_a, scores_a = topk(
                     [tp_for(t) for t in present],
                     [idf[t] for t in present],
                     k,
@@ -418,82 +390,25 @@ class BM25Index:
                 if len(decode_acc) > 2:
                     # logical (per-query cold-cache) decodes — the
                     # skip-rate numerator comparable across batch
-                    # sizes; slot 0 stays fresh decodes (ADVICE r07)
+                    # sizes; slot 0 stays fresh decodes
                     decode_acc[2].add(counters.get("blocks_logical", 0))
-            if decision_acc is not None and decision_counts:
-                # per-(query, chunk) auto decisions keyed by reason —
-                # the misprediction evidence VERDICT r05 #1 asks for
-                for reason, cnt in decision_counts.items():
-                    decision_acc[reason].add(cnt)
+            if decision_acc is not None and method == "auto" and served:
+                # "wand" is the reason key meaning MaxScore served the
+                # chunk; bench records and perfbench read it
+                decision_acc["wand"].add(served)
             return pd.DataFrame(out_rows, columns=["query_id", "doc_id", "score"])
 
-        # NOTE (r9, VERDICT r08 #3 closure): a single-task variant
-        # (coalesce(1) + mapInPandas folding the pruned scan — no chunk
-        # shuffle, one stage) was built, equality-gated, and A/B'd at
-        # the 50k and 1M indexes: it LOST or tied at every shape (1M
-        # p50 0.84-1.19 s vs 0.58-0.72 distributed; even the most
-        # selective single term, df 5.8k, was a wash).  local[32] task
-        # scheduling is NOT the serving floor — the 32-way parallel
-        # scan+decode is load-bearing — so the two-stage distributed
-        # plan below is the measured optimum, not an overhead to cut.
+        # A single-task variant (coalesce(1) + mapInPandas folding the
+        # pruned scan — no chunk shuffle, one stage) was built,
+        # equality-gated, and A/B'd at the 50k and 1M indexes: it LOST
+        # or tied at every shape (1M p50 0.84-1.19 s vs 0.58-0.72
+        # distributed; even the most selective single term, df 5.8k,
+        # was a wash).  local[32] task scheduling is NOT the serving
+        # floor — the 32-way parallel scan+decode is load-bearing — so
+        # the two-stage distributed plan below is the measured optimum,
+        # not an overhead to cut.
         candidates = segs.groupBy("chunk").applyInPandas(score_chunk, out_schema)
         return self._rank(candidates, k, score_round, final_rank)
-
-    def explain(self, queries: list[tuple[int, str]], k: int = 10) -> DataFrame:
-        """Driver-side preview of the auto executor choice, one row per
-        (query, chunk-with-hits) — the production-debugging view of the
-        cost model (``method="auto"``): which executor each chunk's
-        scorer would pick and why, computed from the SAME block-metadata
-        frames ``score_chunk`` hands to ``_wand_decision`` (equality
-        with the decision accumulators is pytest-gated).  Reads only
-        block metadata (term, chunk, first_doc, n) and resolves df the
-        way ``search`` does (``_term_dfs``) — posting blobs are never
-        touched, so the cost is the pruned metadata scan, bounded by
-        the query terms' block counts.
-
-        Returns DataFrame(query_id, chunk, decision, n_terms_present,
-        rarest_term, rarest_df, rarest_chunk_postings) where
-        ``decision`` ∈ DECISION_REASONS and ``rarest_chunk_postings``
-        is the chunk-local Σn of the rarest term — the quantity the
-        anchor rule tests against ``k``."""
-        self._refresh_if_rebuilt()
-        qterms: dict[int, list[str]] = {
-            qid: sorted(set(self._analyze(q))) for qid, q in queries
-        }
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        schema = (
-            "query_id int, chunk int, decision string, n_terms_present int, "
-            "rarest_term string, rarest_df long, rarest_chunk_postings long"
-        )
-        dfs = self._term_dfs(all_terms)
-        present_terms = [t for t in all_terms if t in dfs]
-        if not present_terms:
-            return local_frame(self.spark, [], schema)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in present_terms})
-        meta = (
-            self._segs_df
-            .filter(F.col("bucket").isin(buckets))  # partition pruning
-            .filter(F.col("term").isin(present_terms))
-            .select("term", "chunk", "first_doc", "n")
-            .toPandas()
-        )
-        rows = []
-        n_docs = self.n_docs
-        for chunk, cg in meta.groupby("chunk"):
-            by_term = {t: g.sort_values("first_doc") for t, g in cg.groupby("term")}
-            for qid, terms in qterms.items():
-                present = {t: by_term[t] for t in terms if t in by_term}
-                if not present:
-                    continue
-                decision = _wand_decision(present, k, n_docs, dfs)
-                rarest = min(present, key=lambda t: dfs[t])
-                rows.append(
-                    (
-                        int(qid), int(chunk), decision, len(present), rarest,
-                        dfs[rarest], int(present[rarest]["n"].sum()),
-                    )
-                )
-        return local_frame(self.spark, rows, schema)
 
     def phrase_search(
         self,
@@ -517,7 +432,7 @@ class BM25Index:
         if not all_terms:
             return self._rank(local_frame(self.spark, [], out_schema), k, score_round)
 
-        # df resolved driver-side, same as search() (r8): no per-query
+        # df resolved driver-side, same as search(): no per-query
         # broadcast-join job on the phrase path either
         dfs = self._term_dfs(all_terms)
         present_terms = [t for t in all_terms if t in dfs]
@@ -534,7 +449,7 @@ class BM25Index:
 
         def match_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
             # decode each term's postings once per chunk — one
-            # concatenated codec pass per stream (r7); positions are
+            # concatenated codec pass per stream; positions are
             # encoded with a per-POSTING delta reset, so block
             # boundaries vanish under concatenation too
             decoded: dict[str, tuple] = {}
@@ -649,80 +564,13 @@ class BM25Index:
         return ranked
 
 
-# the outcomes of the auto cost model, in accumulator-report order.
-# "wand" and "dense_long_run" mean MaxScore serves the chunk; the other
-# three mean the exhaustive executor does.  The "wand" key keeps its
-# name because bench records and perfbench's bm25.route.wand read it.
+# Per-(query, chunk) reason keys for ``search``'s ``decision_acc``.
+# Only "wand" (MaxScore served the chunk) is ever counted; the
+# other keys stay because bench records and perfbench's
+# ``bm25.route.<reason>`` metrics read all five.
 DECISION_REASONS = (
     "wand", "single_term", "no_selective", "anchor_thin", "dense_long_run",
 )
-
-# Dense-query routing is SPAN-dependent (VERDICT r07 #4): at short
-# per-chunk posting runs (cb14 bench shape, ≤~16k postings/term) the
-# exhaustive scorer's single segmented decode beats MaxScore's wave
-# machinery on dense-only queries by ~10%, but at long runs (production
-# 2^18 spans; 500k-posting microbench) MaxScore wins every measured
-# shape including the dense worst case — its per-wave overhead is fixed
-# while the decode+score mass it skips grows with the run.  Route dense
-# queries to MaxScore once the mean chunk-local run length crosses this
-# threshold.  Break-even measured r8 (pure-python microbench over real
-# block rows, 2/3/5 terms x 4k-262k runs + cb14/cb17 zipf-index A/B):
-# maxscore is neutral-or-better from ~16k-run shapes up for 2-3 terms
-# and from ~64k for 5 terms; the one shape where it clearly loses
-# (5 terms x 4k runs, 1.56x) sits well below 2^15.  cb14 dense chunks
-# (16k-doc spans) stay exhaustive-routed; cb17+ chunks route maxscore.
-# The threshold is TERM-COUNT-AWARE (ADVICE r8): the break-even shifts
-# right with query width (per-wave overhead scales with terms), so
-# ≤3-term dense queries route at 2^15 runs but ≥4-term ones wait for
-# 2^16 — the measured 5x32k-64k regression region stays exhaustive.
-DENSE_LONG_RUN_POSTINGS = 1 << 15
-DENSE_LONG_RUN_POSTINGS_WIDE = 1 << 16  # queries with ≥ 4 terms
-
-
-def _dense_long_run_threshold(n_terms: int) -> int:
-    return (
-        DENSE_LONG_RUN_POSTINGS if n_terms <= 3 else DENSE_LONG_RUN_POSTINGS_WIDE
-    )
-
-
-def _wand_decision(term_chunk_blocks: dict, k: int, n_docs: int, dfs: dict) -> str:
-    """Per-(query, chunk) cost decision between the executors, with the
-    reason exposed for the decision accumulators.  Both executors are
-    bitwise equal, so this is purely about cost.  Returns one of
-    ``DECISION_REASONS``:
-
-    * ``"wand"`` — MaxScore serves this chunk: a globally selective
-      term (df < 10% of the corpus) has at least ``k`` postings here,
-      so it anchors the top-k and the dense terms' blocks can be
-      skipped;
-    * ``"dense_long_run"`` — MaxScore serves this chunk: no selective
-      term, but the chunk's posting runs are long enough that the
-      skipping still pays;
-    * ``"single_term"`` — nothing to skip against;
-    * ``"no_selective"`` — every query term matches ≥10% of the corpus;
-    * ``"anchor_thin"`` — the rarest term has fewer than ``k`` postings
-      in THIS chunk, so θ collapses to dense-only scores and nothing is
-      skippable.
-
-    ``term_chunk_blocks``: term → that term's block rows in the chunk
-    (only ``n`` is read); ``dfs``: term → corpus df."""
-    if len(term_chunk_blocks) < 2:
-        return "single_term"
-    dfs = {t: dfs[t] for t in term_chunk_blocks}
-    rarest = min(dfs, key=lambda t: dfs[t])
-    if dfs[rarest] * 10 > n_docs:
-        # no selective term anywhere in the corpus — but if this
-        # chunk's posting runs are LONG, MaxScore wins even dense
-        # queries (span-aware routing, VERDICT r07 #4): mean
-        # chunk-local run length over the query's terms, free off the
-        # block metadata
-        runs = [int(g["n"].sum()) for g in term_chunk_blocks.values()]
-        if sum(runs) // len(runs) >= _dense_long_run_threshold(len(runs)):
-            return "dense_long_run"
-        return "no_selective"
-    if int(term_chunk_blocks[rarest]["n"].sum()) < k:
-        return "anchor_thin"
-    return "wand"
 
 
 def _exhaustive_topk(
@@ -735,47 +583,26 @@ def _exhaustive_topk(
     """Vectorized term-at-a-time scoring of one chunk.  Deterministic:
     terms arrive sorted, accumulation order fixed.
 
-    r7: one concatenated codec pass per (term, stream) instead of one
-    per BLOCK — the wire format is self-delimiting, so bytes decode
-    identically (codec.vb_decode_concat / delta_decode_concat, both
-    equality pytest-gated) while the fixed per-call numpy overhead is
-    paid ~128× less often at serving spans."""
+    Each term decodes with one concatenated codec pass per stream
+    (``_TermPostings.full``) instead of one per BLOCK — the wire format
+    is self-delimiting, so bytes decode identically
+    (codec.vb_decode_concat / delta_decode_concat, both equality
+    pytest-gated) while the fixed per-call numpy overhead is paid ~128×
+    less often at serving spans.  ``search`` passes shared per-chunk
+    handles, so a term's blocks decode once per CHUNK across a batch and
+    ``blocks_decoded`` counts fresh decodes only; bare block frames get
+    a fresh handle, which decodes (and counts) every block."""
     doc_parts, score_parts = [], []
     for blocks, w in zip(term_blocks, idfs):
-        if isinstance(blocks, _TermPostings):
-            # shared per-chunk postings (bm25.score_chunk batches many
-            # queries over one chunk): blocks decode once per CHUNK —
-            # counters then record fresh decodes only (honest)
-            if counters is not None:
-                counters["blocks_total"] = (
-                    counters.get("blocks_total", 0) + len(blocks.n)
-                )
-                # .full() below records blocks_decoded (fresh) AND
-                # blocks_logical (= every block, what a cold cache
-                # would decode this query) — ADVICE r07.  New query
-                # against a possibly shared handle: reset the
-                # per-query logical-dedup tag first
-                blocks.begin_query()
-            d, tfn = blocks.full(counters)
-            doc_parts.append(d)
-            score_parts.append(w * tfn)
-            continue
+        if not isinstance(blocks, _TermPostings):
+            blocks = _TermPostings(blocks, w, avgdl)
         if counters is not None:
-            counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks)
-            counters["blocks_decoded"] = (
-                counters.get("blocks_decoded", 0) + len(blocks)
-            )
-            counters["blocks_logical"] = (
-                counters.get("blocks_logical", 0) + len(blocks)
-            )
-        d = codec.delta_decode_concat(
-            blocks["docs"].tolist(), blocks["n"].to_numpy(dtype=np.int64)
-        ).astype(np.int64)
-        tf = codec.vb_decode_concat(blocks["tfs"].tolist()).astype(np.float64)
-        dl = codec.vb_decode_concat(blocks["dls"].tolist()).astype(np.float64)
-        tfn = (tf * (sqltok.K1 + 1.0)) / (
-            tf + sqltok.K1 * (1.0 - sqltok.B + sqltok.B * dl / avgdl)
-        )
+            counters["blocks_total"] = counters.get("blocks_total", 0) + len(blocks.n)
+            # full() records blocks_decoded (fresh) and blocks_logical
+            # (every block: what a cold cache would decode this query);
+            # reset the handle's per-query logical-dedup tag first
+            blocks.begin_query()
+        d, tfn = blocks.full(counters)
         doc_parts.append(d)
         score_parts.append(w * tfn)
     all_docs = np.concatenate(doc_parts)
@@ -822,7 +649,9 @@ def bm25_score_dataframe(
 
     qrows = []
     for qid, q in queries:
-        for t in sorted(set(textproc.tokenize(q.lower()))):
+        # the index's analyzer (``tokens_col``'s Python mirror), so
+        # punctuated queries ("hash-join") keep the terms documents keep
+        for t in sorted(set(sqltok.tokens_py(q))):
             qrows.append((qid, t))
     if not qrows:
         return local_frame(spark, [], "query_id int, rank long, doc_id long, score double")

@@ -7,8 +7,9 @@ Replaces the reference's exhaustive per-term fold
 (``SearchServer.java:117-148``) tail with candidate-restricted scoring.
 
 It is the engine's one selective executor: ``BM25Index.search`` runs
-it for ``method="maxscore"``, for its alias ``"wand"``, and wherever
-``auto`` finds block skipping worth it.  It applies the block-max WAND
+it on every chunk for ``method="auto"`` (the default), ``"maxscore"``
+and its alias ``"wand"``; the exhaustive executor is its equality
+oracle.  It applies the block-max WAND
 bound (docs containing only low-upper-bound terms can never reach the
 top-k threshold) set-at-a-time, so every step is a handful of numpy
 calls over whole posting runs.  On a 200k-doc Zipf index (4 vCPUs) it
@@ -119,7 +120,7 @@ class _TermPostings:
             # logical = what a cold cache would decode for THIS query —
             # keeps the skip-rate metric comparable across batch sizes
             # (fresh alone conflates cross-query cache sharing with
-            # algorithmic block skipping, ADVICE r07); tag-deduped so a
+            # algorithmic block skipping); tag-deduped so a
             # block requested via both all_docs and contributions in
             # one query counts once
             self._count_logical(counters, idxs)
@@ -208,7 +209,7 @@ def maxscore_topk(
         # cut: every unscored doc's score ≤ Σ remaining ubs (all ubs
         # non-negative — Lucene idf); strictly below θ means it cannot
         # even tie into the (score desc, doc asc) boundary.  The bound
-        # must be FLOAT-sound (code-review r7): suffix_ub accumulates
+        # must be FLOAT-sound: suffix_ub accumulates
         # right-to-left in upper-bound order while wave scores
         # accumulate left-to-right in sorted-term order, so a doc
         # attaining every block upper bound can exceed the raw float

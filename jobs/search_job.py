@@ -2,11 +2,10 @@
 
     spark-submit --py-files engine.zip jobs/search_job.py \
         --index /indexes/run1 --k 10 [--method auto|maxscore|exhaustive] \
-        [--explain] --queries "hash join" "data pipeline" ...
+        --queries "hash join" "data pipeline" ...
 
-``--explain`` prints the per-(query, chunk) executor decision table
-(BM25Index.explain) before the results — which chunks auto routes to
-the block-max MaxScore executor and why the others were rejected.
+``auto`` and ``maxscore`` both run the block-max MaxScore executor;
+``exhaustive`` scores every posting (the equality oracle).
 """
 
 from __future__ import annotations
@@ -22,10 +21,8 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--index", required=True)
     p.add_argument("--k", type=int, default=10)
-    # auto is the engine's production default (cost-based per-chunk
-    # choice, BASELINE.md r5/r6) — the CLI previously forced exhaustive
+    # auto is the engine's default, MaxScore on every chunk
     p.add_argument("--method", choices=["auto", "exhaustive", "maxscore"], default="auto")
-    p.add_argument("--explain", action="store_true")
     p.add_argument("--queries", nargs="+", required=True)
     args = p.parse_args()
 
@@ -36,13 +33,6 @@ def main() -> None:
     spark = SparkSession.builder.appName("eaststorm-search").getOrCreate()
     idx = BM25Index(spark, args.index)
     qs = list(enumerate(args.queries, 1))
-    if args.explain:
-        for row in idx.explain(qs, k=args.k).collect():
-            print(
-                f"explain\tq{row['query_id']}\tchunk={row['chunk']}\t"
-                f"decision={row['decision']}\trarest={row['rarest_term']}"
-                f"(df={row['rarest_df']}, chunk_postings={row['rarest_chunk_postings']})"
-            )
     # small CLI batches collect anyway → the driver-merge path serves
     # them as ONE Spark job (non-AQE serving session, r8); identical
     # results to the distributed window rank (pytest-gated)
