@@ -651,8 +651,6 @@ def build_index_fast(
     n_buckets: int = DEFAULT_BUCKETS,
     stem: bool = False,
     from_html: bool = False,
-    partitions: int | None = None,
-    order: str = "none",
 ) -> dict:
     """Single-pass, ZERO-shuffle index build (fast path).
 
@@ -666,12 +664,6 @@ def build_index_fast(
     stopword's postings are just more block rows spread across all
     batches — the classic MapReduce/Lucene per-segment indexing shape.
 
-    ``order="range"`` adds a repartitionByRange(doc_id) +
-    sortWithinPartitions pre-step for globally doc-ordered segments
-    (tighter delta gaps, range-prunable chunks) at the cost of shuffling
-    the raw corpus once — worth it when the index is long-lived and the
-    corpus arrives unordered.
-
     ``build_index`` and ``build_index_resumable`` run this same encode
     and then re-chunk it into the canonical term-clustered (bucket,
     chunk) layout; all of them serve the identical query engine
@@ -680,15 +672,9 @@ def build_index_fast(
     t0 = time.time()
     paths = IndexPaths(out_dir)
 
-    src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
-    if order == "range":
-        n_docs_est = docs.count()
-        if partitions is None:
-            par = docs.sparkSession.sparkContext.defaultParallelism
-            partitions = max(par * 2, n_docs_est // (1 << CHUNK_BITS) + 1)
-        src = src.repartitionByRange(partitions, "doc_id").sortWithinPartitions("doc_id")
-    else:
-        src = ensure_parallelism(src)
+    src = ensure_parallelism(
+        docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
+    )
     frags = src.mapInPandas(
         _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
     )
@@ -737,7 +723,6 @@ def build_index_fast(
         "n_buckets": n_buckets,
         "block": BLOCK,
         "layout": "fragment",
-        "order": order,
         "stem": stem,
         "k1": sqltok.K1,
         "b": sqltok.B,

@@ -114,12 +114,12 @@ out = os.path.join({tmp!r}, f"scaling_idx_{{cores}}")
 # them per job.  Same treatment at both parallelism levels.
 warm_out = out + "_warm"
 shutil.rmtree(warm_out, ignore_errors=True)
-build_index_fast(spark, pages.limit(1000), warm_out, id_col="doc_id", text_col="html", from_html=True, partitions=128)
+build_index_fast(spark, pages.limit(1000), warm_out, id_col="doc_id", text_col="html", from_html=True)
 shutil.rmtree(warm_out, ignore_errors=True)
 shutil.rmtree(out, ignore_errors=True)
 c_pre = _canary()
 t0 = time.time()
-build_index_fast(spark, pages, out, id_col="doc_id", text_col="html", from_html=True, partitions=128)
+build_index_fast(spark, pages, out, id_col="doc_id", text_col="html", from_html=True)
 dt = time.time() - t0
 c_post = _canary()
 print("RESULT " + json.dumps({{"cores": cores, "sec": dt, "docs": n,

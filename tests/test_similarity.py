@@ -71,6 +71,15 @@ def test_lsh_near_dup_plan_has_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_lsh_cosine_topk_plan_has_no_join_or_generate(spark):
+    """LSH top-k masks candidates inside the batch scorer: the corpus is
+    neither exploded per table nor joined to a probe table."""
+    emb = _planted_corpus(spark, n=50, n_dups=4)
+    q = [(1, [float(x) for x in emb.first()["embedding"]])]
+    plan = inspect.formatted_plan(similarity.lsh_cosine_topk(emb, q, k=3))
+    assert "Join" not in plan and "Generate" not in plan, plan
+
+
 def test_multiprobe_lsh_ann_recall(spark):
     """Hamming-1 multi-probe must recover ≥0.9 of the exact top-10."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -202,19 +211,36 @@ def test_nan_cosine_excluded_deterministically(spark):
     assert all(r["cosine"] == 1.0 for r in out)
 
 
-def test_cosine_topk_skips_null_and_ragged_vectors(spark):
-    """One NULL and one short embedding must not fail the exact scorer:
-    they have no cosine (the JVM _cosine yields NULL for them), so the
-    result equals the top-k over the well-formed rows alone."""
+_SCORERS = {
+    "cosine_topk": lambda emb, q: similarity.cosine_topk(emb, q, k=5),
+    "lsh_cosine_topk": lambda emb, q: similarity.lsh_cosine_topk(emb, q, k=5),
+    "cosine_near_dup_pairs": lambda emb, q: similarity.cosine_near_dup_pairs(emb, 0.8),
+    "lsh_near_dup_pairs": lambda emb, q: similarity.lsh_near_dup_pairs(emb, 0.8),
+    "cosine_near_dup_pairs_allpairs":
+        lambda emb, q: similarity.cosine_near_dup_pairs_allpairs(emb, 0.8),
+}
+
+
+@pytest.mark.parametrize("scorer", list(_SCORERS))
+def test_scorers_skip_null_and_ragged_vectors(spark, scorer):
+    """A NULL, a short, a zero and a NaN embedding, ahead of the
+    well-formed rows, must not fail any scorer: they have no cosine, so
+    the result equals the one over the well-formed rows alone."""
     rng = np.random.RandomState(5)
     good = [(i, rng.standard_normal(4).tolist()) for i in range(30)]
-    bad = [(100, None), (101, [1.0, 0.0])]
+    bad = [
+        (100, None), (101, [1.0, 0.0]), (102, [0.0] * 4),
+        (103, [float("nan"), 1.0, 0.0, 0.0]),
+    ]
     schema = "vec_id long, embedding array<double>"
     q = [(1, good[0][1]), (2, [0.0, 1.0, 0.0, 0.0])]
-    key = lambda df: [tuple(r) for r in df.collect()]
-    got = key(similarity.cosine_topk(spark.createDataFrame(good + bad, schema), q, k=5))
-    want = key(similarity.cosine_topk(spark.createDataFrame(good, schema), q, k=5))
-    assert got == want and len(got) == 10
+
+    def run(rows):
+        emb = spark.createDataFrame(rows, schema)
+        return [tuple(r) for r in _SCORERS[scorer](emb, q).collect()]
+
+    got, want = run(bad + good), run(good)
+    assert got == want and len(got) >= 5
 
 
 def test_empty_query_list_returns_empty_topk(spark):
