@@ -14,8 +14,6 @@ at 10^12 docs; candidate verification joins happen only within buckets
 
 from __future__ import annotations
 
-import hashlib
-import struct
 import threading
 from collections import Counter
 
@@ -60,16 +58,6 @@ def prefix_dup_groups(
         .agg(F.count("*").cast("long").alias("n_docs"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
         .filter(F.col("n_docs") > 1)
         .orderBy("prefix_hash")
-    )
-
-
-def distinct_texts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative per distinct text (exact dedup
-    keep-one policy)."""
-    return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("doc_id"))
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
     )
 
 
@@ -155,11 +143,6 @@ def star_capped_pairs(
 N_HASHES = 64
 N_BANDS = 16  # 16 bands x 4 rows
 _MERSENNE = (1 << 61) - 1
-
-
-def _hash64(data: bytes, seed: int) -> int:
-    h = hashlib.blake2b(data, digest_size=8, salt=seed.to_bytes(8, "little"))
-    return struct.unpack("<Q", h.digest())[0]
 
 
 # fixed universal-hash family (a*x + b) mod p — module-level constants,

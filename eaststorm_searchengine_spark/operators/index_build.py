@@ -17,8 +17,12 @@ One pipeline, two steps:
 2. **Canonical re-chunk** (:func:`_compact_segments`).  The compressed
    fragment blocks are shuffled on (bucket, chunk) and re-encoded per
    group; the output depends only on the posting set, not on how it
-   was fragmented.  doclens/, term_stats/, lineage/ and stats.json
-   derive from the fragment rows and the re-chunked segments.
+   was fragmented.
+
+Every entry point ends in the same metadata tail (:func:`_finalize`):
+doclens/ from the reserved rows, term_stats/ and lineage/ from the
+segment metadata, and one stats.json key set (listed in
+:func:`build_index`).
 
 Scale design (the 10^12-doc story):
 
@@ -76,14 +80,14 @@ def adaptive_chunk_bits(n_docs: int, parallelism: int) -> int:
     per core.  The chunk count drives QUERY-side parallelism (the
     scorer is one applyInPandas group per chunk), not build
     parallelism — the build fans out over (bucket, chunk) groups
-    and has the whole bucket space to parallelize on.  The r4 rule
-    targeted 4×cores chunks and over-sharded the serving path: at 1M
-    docs it picked 4096-doc chunks whose scoring runs are
-    overhead-bound (the r5 cb12→cb15 A/B measured +13% build, −29%
-    single-query p50, −40% batch with the longer span — BASELINE.md).
-    This rule lands the cb15-equivalent span at the 1M bench scale
-    automatically (VERDICT r05 #4); chunk counts quantize in ×2 steps,
-    so [cores/2, cores) is the closest reachable band to "≈ cores".
+    and has the whole bucket space to parallelize on.  Targeting
+    4×cores chunks over-shards the serving path: at 1M docs it picks
+    4096-doc chunks whose scoring runs are overhead-bound (a
+    cb12→cb15 A/B measured +13% build, −29% single-query p50, −40%
+    batch with the longer span — BASELINE.md).  This rule lands the
+    cb15-equivalent span at the 1M bench scale automatically; chunk
+    counts quantize in ×2 steps, so [cores/2, cores) is the closest
+    reachable band to "≈ cores".
     Monotone in n_docs; recorded in stats.json for reproducibility."""
     bits = CHUNK_BITS
     while bits > MIN_CHUNK_BITS and (n_docs >> bits) < max(parallelism // 2, 1):
@@ -92,7 +96,7 @@ def adaptive_chunk_bits(n_docs: int, parallelism: int) -> int:
 BLOCK = 128  # postings per block (classic block-max WAND block size)
 DEFAULT_BUCKETS = 16
 
-# Upper bound on postings materialized in one encode group (ADVICE r06):
+# Upper bound on postings materialized in one encode group:
 # at the production 2^18 chunk span with a realistic web avgdl, a plain
 # (bucket, chunk) group holds ~chunk_docs×unique_terms/n_buckets postings
 # *including position lists* in a single pandas frame — millions of rows
@@ -236,13 +240,14 @@ def _encode_sorted_runs(
     )
 
 
-def _run_concurrently(*fns) -> None:
+def _run_concurrently(*fns) -> list:
     """Submit independent Spark jobs from concurrent driver threads and
-    wait for all; first exception (if any) re-raises.  Used to collapse
+    wait for all; first exception (if any) re-raises, else returns the
+    results in order.  Used to collapse
     the finalize tail's sequential small-job latency — each job's fixed
     scheduling cost overlaps instead of summing (the build's Amdahl
     floor, profiled at ~3.6 s of sequential tail @ 8 cores)."""
-    # InheritableThread, not threading.Thread (code-review r8): under
+    # InheritableThread, not threading.Thread: under
     # PySpark's default pinned-thread mode each plain Python thread
     # maps to a dedicated JVM thread that is NOT reclaimed on exit —
     # repeated builds in a long-lived driver would accumulate pinned
@@ -250,27 +255,28 @@ def _run_concurrently(*fns) -> None:
     # properties into the concurrent jobs.
     from pyspark import InheritableThread
 
+    results: list = [None] * len(fns)
     errs: list[BaseException] = []
 
-    def _wrap(fn):
+    def _wrap(i, fn):
         try:
-            fn()
+            results[i] = fn()
         except BaseException as e:  # noqa: BLE001 — re-raised below
             errs.append(e)
 
-    threads = [InheritableThread(target=_wrap, args=(fn,)) for fn in fns]
+    threads = [InheritableThread(target=_wrap, args=(i, fn)) for i, fn in enumerate(fns)]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
     if errs:
         raise errs[0]
+    return results
 
 
 def _decode_doclen_rows(batches):
     """mapInPandas generator: reserved #doclens# sentinel block rows →
-    (doc_id, dl) rows (shared by every build path and the streaming
-    metadata refresh)."""
+    (doc_id, dl) rows."""
     for pdf in batches:
         outs = []
         for r in pdf.itertuples():
@@ -281,17 +287,62 @@ def _decode_doclen_rows(batches):
             yield pd.concat(outs)
 
 
-def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
-    """Write term_stats/ and lineage/ from the segment metadata and
-    return n_terms.  Metadata-only scans (ints + term; posting blobs
-    never read thanks to column pruning + the precomputed bytes
-    column).  The two writes are independent, so they run from
-    concurrent driver threads, and n_terms rides the term_stats write
-    via Observation — the tail costs one job-latency, not three
-    (r8 floor cut; result-identical).  ``extra_pipelines``: additional
-    independent callables to overlap with the two writes (the fast
-    path passes its doclens pipeline — ONE definition of the
-    term_stats/lineage aggregations serves every build path)."""
+def _doclen_rows(seg: DataFrame) -> DataFrame:
+    """The (doc_id, dl) pairs of fragment rows, decoded from their
+    reserved #doclens# rows.  Those rows are all written to bucket 0,
+    so on a stored segment store the bucket filter prunes every other
+    bucket directory."""
+    return seg.filter(
+        (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
+    ).select("docs", "dls").mapInPandas(_decode_doclen_rows, "doc_id long, dl long")
+
+
+def _write_doclens(dl: DataFrame, paths: IndexPaths) -> dict:
+    """Write (doc_id, dl) rows to doclens/ and return the corpus
+    statistics ``n_docs``, ``avgdl`` and ``total_tokens``.  They ride
+    the write job through an Observation, so no aggregation job runs."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    dl.observe(
+        obs,
+        F.count("*").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+        F.sum("dl").alias("total_tokens"),
+    ).write.mode("overwrite").parquet(paths.doclens)
+    agg = obs.get
+    return {
+        "n_docs": int(agg["n_docs"]),
+        "avgdl": float(agg["avgdl"] or 0.0),
+        "total_tokens": int(agg["total_tokens"] or 0),
+    }
+
+
+def _finalize(
+    spark: SparkSession,
+    paths: IndexPaths,
+    t0: float,
+    doclens: DataFrame | dict,
+    *,
+    n_buckets: int,
+    stem: bool,
+    chunk_bits: int | None = None,
+    sources: int = 1,
+) -> dict:
+    """The metadata tail every builder and the streaming refresh end
+    with, after segments/ is written: term_stats/ and lineage/ from the
+    segment metadata, doclens/ when ``doclens`` is a (doc_id, dl)
+    DataFrame (a dict is the corpus statistics of a doclens/ that
+    :func:`_write_doclens` already wrote), then stats.json.  Returns
+    the stats dict.  ``chunk_bits`` is None for a fragment-layout store,
+    whose chunks are batch first-doc ids rather than doc-id ranges.
+
+    The scans are metadata-only (ints + term; the posting blobs are
+    never read thanks to column pruning and the precomputed bytes
+    column).  The writes are independent given segments/, so they run
+    from concurrent driver threads, and n_terms and the corpus
+    statistics ride their writes through Observations: the tail costs
+    one job latency, not one per write plus two aggregations."""
     from pyspark.sql import Observation
 
     meta = (
@@ -299,17 +350,18 @@ def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
         .filter(F.col("term") != DOCLEN_TERM)
         .select("term", "bucket", "chunk", "n", "bytes")
     )
-    ts_obs = Observation()
 
     def _term_stats_pipeline():
         # bucket rides along so the query path resolves term→bucket
         # with the same lookup that fetches df (one fewer job/query)
+        ts_obs = Observation()
         meta.groupBy("term").agg(
             F.sum("n").cast("long").alias("df"),
             F.first("bucket").cast("int").alias("bucket"),
         ).observe(ts_obs, F.count("*").alias("n_terms")).write.mode(
             "overwrite"
         ).parquet(paths.term_stats)
+        return int(ts_obs.get["n_terms"])
 
     def _lineage_pipeline():
         # per-chunk (shuffle-partition) lineage + metrics — north_rule
@@ -321,8 +373,31 @@ def _finalize(spark: SparkSession, paths: IndexPaths, *extra_pipelines) -> int:
             "overwrite"
         ).parquet(paths.lineage)
 
-    _run_concurrently(_term_stats_pipeline, _lineage_pipeline, *extra_pipelines)
-    return int(ts_obs.get["n_terms"])
+    def _doclens_pipeline():
+        if isinstance(doclens, dict):
+            return doclens
+        return _write_doclens(doclens, paths)
+
+    n_terms, _, corpus = _run_concurrently(
+        _term_stats_pipeline, _lineage_pipeline, _doclens_pipeline
+    )
+    stats = {
+        "n_docs": corpus["n_docs"],
+        "avgdl": corpus["avgdl"],
+        "total_tokens": corpus["total_tokens"],
+        "n_terms": n_terms,
+        "n_buckets": n_buckets,
+        "block": BLOCK,
+        "chunk_bits": chunk_bits,
+        "layout": "fragment" if chunk_bits is None else "compacted",
+        "stem": stem,
+        "k1": sqltok.K1,
+        "b": sqltok.B,
+        "build_sec": time.time() - t0,
+        "sources": sources,
+    }
+    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
+    return stats
 
 
 def _range_fragments(
@@ -351,53 +426,27 @@ def _finish_build(
     t0: float,
 ) -> dict:
     """Build tail shared by :func:`build_index` and
-    :func:`build_index_resumable`: fragment rows → doclens/ (corpus
-    stats ride the write), canonical segments/ via
-    :func:`_compact_segments`, term_stats/ + lineage/ via
-    :func:`_finalize`, and stats.json.  ``frags`` is read twice, so it
-    is persisted for the two writes."""
-    from pyspark.sql import Observation
+    :func:`build_index_resumable`: fragment rows → doclens/, canonical
+    segments/ via :func:`_compact_segments`, then :func:`_finalize`.
+    doclens/ is written first because the re-chunk's group split needs
+    avgdl.  ``frags`` is read twice, so it is persisted for the two
+    writes."""
     from pyspark.storagelevel import StorageLevel
 
     frags = frags.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        dl_obs = Observation()
-        dl_rows = frags.filter(
-            (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
-        ).select("docs", "dls")
-        dl_rows.mapInPandas(_decode_doclen_rows, "doc_id long, dl long").observe(
-            dl_obs,
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total_tokens"),
-        ).write.mode("overwrite").parquet(paths.doclens)
-        agg = dl_obs.get  # corpus stats ride the write job (r8 floor cut)
-        n_docs = int(agg["n_docs"])
-        avgdl = float(agg["avgdl"] or 0.0)
-
+        corpus = _write_doclens(_doclen_rows(frags), paths)
         _compact_segments(
             frags, chunk_bits,
-            n_sub=group_subsplits(n_docs, avgdl, chunk_bits, n_buckets),
+            n_sub=group_subsplits(
+                corpus["n_docs"], corpus["avgdl"], chunk_bits, n_buckets
+            ),
         ).write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
     finally:
         frags.unpersist()
-    n_terms = _finalize(spark, paths)
-
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "total_tokens": int(agg["total_tokens"] or 0),
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": BLOCK,
-        "chunk_bits": chunk_bits,
-        "stem": stem,
-        "k1": sqltok.K1,
-        "b": sqltok.B,
-        "build_sec": time.time() - t0,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    return _finalize(
+        spark, paths, t0, corpus, n_buckets=n_buckets, stem=stem, chunk_bits=chunk_bits
+    )
 
 
 def build_index(
@@ -420,27 +469,29 @@ def build_index(
     posting runs a 10^12-doc corpus has naturally — block-max WAND's
     skippable shape.
 
-    Layout:
+    Layout (every builder and ``refresh_metadata`` write the same):
       segments/   parquet, partitioned by bucket (term-hash pruning)
-      term_stats/ parquet (term, df)
+      term_stats/ parquet (term, df, bucket)
       doclens/    parquet (doc_id, dl)
       lineage/    parquet per-chunk metrics (postings, terms, bytes)
-      stats.json  {n_docs, avgdl, total_tokens, n_terms, ...}
+      stats.json  n_docs, avgdl, total_tokens, n_terms, n_buckets,
+                  block, chunk_bits (null for the fragment layout),
+                  layout ("compacted" | "fragment"), stem, k1, b,
+                  build_sec, sources (segment stores merged; 1 for a
+                  build)
 
-    Shape (r10): the heavy bytes move ONCE.  The raw docs are
+    Shape: the heavy bytes move ONCE.  The raw docs are
     range-partitioned by doc_id (one shuffle of the corpus), the fast
     path's single tokenize+aggregate+encode pass turns each sorted
     batch into finished compressed fragment blocks, and the canonical
     term-clustered (bucket, chunk) layout comes from re-chunking those
     COMPRESSED blocks through :func:`_compact_segments` — the second
-    exchange carries index bytes, not exploded postings.  The previous
-    shape staged the fully exploded posting rows (term, doc_id, tf,
-    positions-list, …) to parquet and shuffled them (measured 11.5 s of
-    a 20.7 s isolated build at 500k docs just tokenizing+writing the
-    staged form); output is byte-identical (segments/doclens/term_stats
-    exceptAll-verified at sf1.0, plus the pure-Python posting oracle
-    gates).  :func:`build_index_resumable` runs the same encode in
-    checkpointed slices and the same tail."""
+    exchange carries index bytes, not exploded postings.  Staging and
+    shuffling exploded posting rows (term, doc_id, tf, positions-list,
+    …) instead measured 11.5 s of a 20.7 s isolated build at 500k docs
+    for the tokenize+write of the staged form alone.
+    :func:`build_index_resumable` runs the same encode in checkpointed
+    slices and the same tail."""
     t0 = time.time()
     docs = ensure_parallelism(docs)
     n_docs_est = docs.count()  # parquet metadata read — cheap
@@ -557,9 +608,9 @@ def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: in
             ids = pdf["doc_id"].to_numpy(dtype=np.int64)
             chunk = int(ids[0])
             # tokenize (python — parity-bound), then aggregate postings
-            # fully vectorized (r7: the per-token dict/setdefault
-            # machinery was ~35 % of generator time at 1M scale —
-            # profiled; factorize + one stable int argsort replaces it)
+            # fully vectorized (a per-token dict/setdefault aggregation
+            # was ~35 % of generator time at 1M scale — profiled;
+            # factorize + one stable int argsort avoids it)
             tok_lists = []
             dls = np.empty(ids.size, dtype=np.int64)
             for i, raw in enumerate(pdf[text_col]):
@@ -680,56 +731,12 @@ def build_index_fast(
     )
     frags.write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
 
-    # doclens/stats from the reserved rows; bucket=0 filter gives
-    # directory-level partition pruning (doclen rows all land there).
-    #
-    # r8 floor cut: the finalize tail used to be ~6 SEQUENTIAL small
-    # jobs (doclens write → corpus agg → term_stats write → lineage
-    # write → n_terms count) whose fixed scheduling cost dominated the
-    # build's Amdahl floor (~3.6 s of a ~6.9 s floor at 8 cores,
-    # profiled).  Two structural fixes, no result change:
-    #   * corpus stats and n_terms ride their writes via Observation
-    #     (metrics computed inside the same job — two jobs disappear);
-    #   * the three remaining pipelines (doclens, term_stats, lineage)
-    #     are independent given segments/, so they are submitted from
-    #     concurrent driver threads — Spark schedules concurrent jobs
-    #     fine, and on a busy cluster they pack into idle executors.
-    seg = spark.read.parquet(paths.segments)
-    dl_rows = seg.filter(
-        (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
-    ).select("docs", "dls")
-
-    from pyspark.sql import Observation
-
-    dl_obs = Observation()
-
-    def _doclens_pipeline():
-        dl_rows.mapInPandas(_decode_doclen_rows, "doc_id long, dl long").observe(
-            dl_obs,
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total_tokens"),
-        ).write.mode("overwrite").parquet(paths.doclens)
-
-    # term_stats + lineage come from _finalize (one definition for all
-    # build paths — code-review r8); the doclens pipeline overlaps them
-    n_terms = _finalize(spark, paths, _doclens_pipeline)
-    agg = dl_obs.get
-    stats = {
-        "n_docs": int(agg["n_docs"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
-        "total_tokens": int(agg["total_tokens"] or 0),
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": BLOCK,
-        "layout": "fragment",
-        "stem": stem,
-        "k1": sqltok.K1,
-        "b": sqltok.B,
-        "build_sec": time.time() - t0,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    # doclens/ reads the reserved rows back, so its write overlaps
+    # term_stats/ and lineage/ in the tail
+    return _finalize(
+        spark, paths, t0, _doclen_rows(spark.read.parquet(paths.segments)),
+        n_buckets=n_buckets, stem=stem,
+    )
 
 
 # ---- segment compaction / index merge -----------------------------------
@@ -737,25 +744,24 @@ def build_index_fast(
 def _compact_segments(
     seg: DataFrame, chunk_bits: int, n_sub: int = 1
 ) -> DataFrame:
-    """Block-level re-chunk (r10): shuffle the already-COMPRESSED block
+    """Block-level re-chunk: shuffle the already-COMPRESSED block
     rows keyed by the target (bucket, chunk) and decode + re-encode
     inside each group.
 
-    The previous shape decoded every block back into posting rows
-    before the shuffle — each posting carrying a Python ``list[int]``
-    positions cell — so the exchange moved the fully-decoded corpus
-    (~15× the stored bytes) and the Arrow boundary paid a per-posting
-    list round-trip both ways.  Guide §8's rule: the shuffle only needs
-    to decide where bytes GO — key on (bucket, target-chunk), ship the
-    compressed blocks, and do the decode→trim→sort→re-encode vectorized
-    inside the group.  A source block whose doc range spans several
-    target chunks is replicated to each (``explode`` over its chunk
-    span — fragment blocks span 1-2 chunks) and trimmed after decode.
+    The shuffle only decides where bytes GO, so it ships the compressed
+    blocks and the decode→trim→sort→re-encode runs vectorized inside
+    the group.  Decoding to posting rows before the shuffle (a Python
+    ``list[int]`` positions cell per posting) would move the
+    fully-decoded corpus (~15× the stored bytes) and pay a per-posting
+    list round-trip at the Arrow boundary both ways.  A source block
+    whose doc range spans several target chunks is replicated to each
+    (``explode`` over its chunk span — fragment blocks span 1-2
+    chunks) and trimmed after decode.
     Groups are sorted by (term, doc) before the encode, so the emitted
     block rows depend only on the posting set, not on how the input was
     fragmented (pytest-gated: compact-vs-rebuild and builder parity).
 
-    ``n_sub`` (ADVICE r06, see :func:`group_subsplits`): when the
+    ``n_sub`` (see :func:`group_subsplits`): when the
     expected per-group posting mass exceeds ``MAX_GROUP_POSTINGS``, the
     group is further salted on a term-hash sub-key (murmur3 ``F.hash``
     — independent of the bucket hash, so terms inside one bucket spread
@@ -896,8 +902,8 @@ def compact_index(
     # read.parquet trip CONFLICTING_DIRECTORY_STRUCTURES.  Project to
     # SEGMENT_COLS per root BEFORE the union — a streaming store
     # carries an extra stream_batch partition column that would
-    # otherwise fail unionByName against a plain store (code-review
-    # r04: 'arbitrary input layout' must include mixing them)
+    # otherwise fail unionByName against a plain store ('arbitrary
+    # input layout' includes mixing them)
     seg = None
     for r in src_roots:
         part = spark.read.parquet(IndexPaths(r).segments).select(*SEGMENT_COLS)
@@ -941,30 +947,7 @@ def compact_index(
     for r in src_roots:
         part = spark.read.parquet(IndexPaths(r).doclens)
         dls = part if dls is None else dls.unionByName(part)
-    from pyspark.sql import Observation
-
-    dl_obs = Observation()
-    dls.observe(
-        dl_obs,
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        F.sum("dl").alias("total_tokens"),
-    ).write.mode("overwrite").parquet(paths.doclens)
-    agg = dl_obs.get  # corpus stats ride the write job (r8 floor cut)
-    n_terms = _finalize(spark, paths)
-    stats = {
-        "n_docs": int(agg["n_docs"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
-        "total_tokens": int(agg["total_tokens"] or 0),
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": BLOCK,
-        "layout": "compacted",
-        "stem": stem,
-        "k1": sqltok.K1,
-        "b": sqltok.B,
-        "build_sec": time.time() - t0,
-        "sources": len(src_roots),
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    return _finalize(
+        spark, paths, t0, dls, n_buckets=n_buckets, stem=stem,
+        chunk_bits=chunk_bits, sources=len(src_roots),
+    )

@@ -3,8 +3,8 @@ loop, made assertable.
 
 These let tests (and humans) verify the plans the engine relies on at
 100 TB actually materialize: parquet predicate pushdown + column
-pruning, partition (directory) pruning on segment buckets, broadcast
-joins for query-term lookups, and whole-stage codegen coverage.
+pruning, partition (directory) pruning on segment buckets, and broadcast
+joins for query-term lookups.
 """
 
 from __future__ import annotations
@@ -16,11 +16,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def plan_has(df: DataFrame, *needles: str) -> bool:
-    plan = formatted_plan(df)
-    return all(n in plan for n in needles)
 
 
 def pushed_filters(df: DataFrame) -> str:
@@ -51,7 +46,3 @@ def partition_filters(df: DataFrame) -> str:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

@@ -25,6 +25,7 @@ pattern for foreachBatch).
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +46,7 @@ def _append_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     )
     # idempotent per-micro-batch sink: overwrite this batch's directory.
     # repartition("bucket") first so each fragment lands as ONE file per
-    # (batch, bucket) — the LSM sorted-run shape (r9): without it every
+    # (batch, bucket) — the LSM sorted-run shape: without it every
     # map partition wrote its own file per bucket (~13x the files; the
     # measured 50-fragment store was 42k files and served 11x slower
     # than compacted).  The per-batch shuffle is small (one micro-batch
@@ -95,46 +96,19 @@ def start_incremental_index(
 
 def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DEFAULT_BUCKETS) -> dict:
     """Rebuild doclens / term_stats / lineage / stats.json from the
-    segment store (idempotent)."""
-    import json
-
+    segment store (idempotent).  Streamed batches are encoded
+    unstemmed, in the fragment layout."""
+    t0 = time.time()
     paths = ib.IndexPaths(index_dir)
-    seg = spark.read.parquet(paths.segments)
-    dl_rows = seg.filter(F.col("term") == ib.DOCLEN_TERM).select("docs", "dls")
-
-    from pyspark.sql import Observation
-
-    dl_obs = Observation()
-    dl_rows.mapInPandas(ib._decode_doclen_rows, "doc_id long, dl long").observe(
-        dl_obs,
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        F.sum("dl").alias("total_tokens"),
-    ).write.mode("overwrite").parquet(paths.doclens)
-    agg = dl_obs.get  # corpus stats ride the write job (r8 floor cut)
-    n_terms = ib._finalize(spark, paths)
-    stats = {
-        "n_docs": int(agg["n_docs"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
-        "total_tokens": int(agg["total_tokens"] or 0),
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": ib.BLOCK,
-        "layout": "fragment-streaming",
-        "k1": 1.2,
-        "b": 0.75,
-    }
-    from ..sources import fsio
-
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    dl = ib._doclen_rows(spark.read.parquet(paths.segments))
+    return ib._finalize(spark, paths, t0, dl, n_buckets=n_buckets, stem=False)
 
 
 # ---------------------------------------------------------------------------
-# Auto-compaction policy (VERDICT r08 #5)
+# Auto-compaction policy
 #
 # A long-running ingest appends one fragment set per micro-batch; reads
-# degrade with fragment count (measured r8: batch-of-12 serving 12.6 s
+# degrade with fragment count (measured: batch-of-12 serving 12.6 s
 # on a 50-fragment store vs 1.13 s compacted — 42k files vs ~800).  The
 # cure (compact_index) exists; this is the POLICY that applies it, the
 # way any LSM-shaped system schedules merges: a cheap metadata check

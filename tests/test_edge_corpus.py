@@ -8,7 +8,7 @@ import shutil
 import duckdb
 import pytest
 
-from eaststorm_searchengine_spark.functions.sqltok import duckdb_bm25_topk_sql
+from eaststorm_searchengine_spark.functions.sqltok import B, K1, duckdb_bm25_topk_sql
 from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 from eaststorm_searchengine_spark.operators.index_build import (
     SEGMENT_COLS,
@@ -75,7 +75,8 @@ def test_builders_agree_row_for_row(spark, tmp_path, corpus):
     """One index-build pipeline: build_index, build_index_resumable
     (fresh, and resumed after a simulated crash) and compact_index over
     a build_index_fast store write the same segments/ rows; all four
-    builders agree on doclens/, term_stats/ and the corpus stats."""
+    builders agree on doclens/, term_stats/ and the corpus stats, and
+    every stats.json has one key set with the scorer's k1 and b."""
     if corpus == "edge":
         docs = spark.createDataFrame(ROWS, "doc_id long, text string")
     else:
@@ -108,6 +109,8 @@ def test_builders_agree_row_for_row(spark, tmp_path, corpus):
     for key in ("n_docs", "avgdl", "total_tokens"):
         assert len({st[key] for st in stats.values()}) == 1, (key, stats)
     assert stats["term"]["n_docs"] == docs.count()
+    assert len({frozenset(st) for st in stats.values()}) == 1, stats
+    assert {(st["k1"], st["b"]) for st in stats.values()} == {(K1, B)}
 
 
 def test_resumable_honours_from_html_and_stem(spark, tmp_path):
@@ -142,7 +145,7 @@ def test_resumable_honours_from_html_and_stem(spark, tmp_path):
 def test_streaming_doclens_match_builders(spark, tmp_path):
     """The streaming ingest path keeps the builders' doclens contract:
     token-less and NULL documents are counted, row-equal to
-    build_index's doclens."""
+    build_index's doclens, and its stats.json has the builders' keys."""
     from eaststorm_searchengine_spark.streaming import incremental
 
     docs = spark.createDataFrame(ROWS, "doc_id long, text string")
@@ -159,3 +162,4 @@ def test_streaming_doclens_match_builders(spark, tmp_path):
     dl = lambda r: spark.read.parquet(str(tmp_path / r / "doclens"))
     assert _same_rows(dl("term"), dl("stream"))
     assert (st_s["n_docs"], st_s["avgdl"]) == (st_b["n_docs"], st_b["avgdl"]) == (len(ROWS), 1.5)
+    assert set(st_s) == set(st_b)

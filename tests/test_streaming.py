@@ -4,6 +4,7 @@ Structured Streaming == one batch build, rank-identically."""
 import shutil
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from eaststorm_searchengine_spark.operators.bm25 import BM25Index
@@ -192,3 +193,40 @@ def test_auto_compaction_policy(spark):
     )
     assert got_fresh == want
     assert got_live == want
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=SparkRuntimeException,
+    reason="a compacted store is partitioned by bucket and a later streamed "
+    "batch by stream_batch, bucket: the segment read fails with "
+    "CONFLICTING_PARTITION_COLUMN_NAMES",
+)
+def test_stream_after_compaction_refreshes(spark, tmp_path):
+    """Ingest keeps working after its own compaction: stream, compact,
+    stream one more batch, refresh — the store serves every document
+    exactly like a batch build."""
+    root = str(tmp_path)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+
+    def append(b):
+        incremental._append_batch(
+            docs.filter(F.col("doc_id") % 6 == b), b, f"{root}/idx",
+            "doc_id", "text", False, 8,
+        )
+
+    for b in range(5):
+        append(b)
+    incremental.refresh_metadata(spark, f"{root}/idx", n_buckets=8)
+    assert incremental.auto_compact(spark, f"{root}/idx", max_fragments=4)
+    append(5)
+    stats = incremental.refresh_metadata(spark, f"{root}/idx", n_buckets=8)
+    assert stats["n_docs"] == 500
+
+    build_index_fast(spark, docs, f"{root}/batch_idx", n_buckets=8)
+    q = [(1, "join"), (2, "hash window"), (3, "the a")]
+    got, want = (
+        [tuple(r) for r in BM25Index(spark, f"{root}/{d}").search(q, k=10, score_round=4).collect()]
+        for d in ("idx", "batch_idx")
+    )
+    assert got == want and len(got) > 0
