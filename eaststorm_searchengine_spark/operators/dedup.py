@@ -72,8 +72,8 @@ def star_capped_pairs(
     """Within-bucket candidate pairs with the HOT-BUCKET STAR BOUND —
     the one blocking self-join shape shared by minhash banding,
     simhash bit-blocks, and hyperplane-LSH buckets (single
-    implementation per code-review r03: the cap/rep/star logic must
-    not diverge between them).
+    implementation: the cap/rep/star logic must not diverge between
+    them).
 
     Buckets of ≤ ``cap`` rows emit all ordered pairs (id_a < id_b);
     bigger buckets emit *star* pairs to the bucket's min-id
@@ -84,7 +84,7 @@ def star_capped_pairs(
     (payload_a, payload_b) when ``payload_col`` is given (the rep's
     payload rides along via the min-struct, no extra join).
 
-    SILENT-CAP NOTE (ADVICE r03 #2): in over-cap buckets, non-rep
+    SILENT-CAP NOTE: in over-cap buckets, non-rep
     pairs are reachable only through the representative, so pair-level
     recall degrades on skewed corpora for callers that consume PAIRS
     rather than connected components (the grouping pipelines are
@@ -92,7 +92,7 @@ def star_capped_pairs(
     ``metrics={}`` to have ``metrics["overcap_buckets"]`` filled with
     the number of buckets where capping actually engaged; a nonzero
     value means the pair output is star-bounded, not complete.  COST
-    NOTE (code-review r04/r04b): requesting metrics eagerly
+    NOTE: requesting metrics eagerly
     localCheckpoints ``df`` (one materialization of the upstream
     signature UDFs) so the metric count AND the pair plan both read
     the checkpoint instead of each re-running the lineage; the
@@ -233,7 +233,7 @@ def minhash_candidates(
     dedup actually consumes (a standard LSH-at-scale mitigation; cf.
     the union-find step of Broder-style dedup pipelines).
 
-    Return contract (ADVICE r02 #3): for pairs routed only through
+    Return contract: for pairs routed only through
     ≤-cap buckets, ``n_shared_bands`` is the exact band-collision
     count; for pairs touching an over-cap bucket it is a LOWER BOUND
     (star pairs count collisions with the representative only, and
@@ -324,7 +324,7 @@ def simhash_near_dups(
     only Python is the vectorized simhash UDF.  GroupBy keys are
     (block_idx, block_bits): bounded width, uniform shuffle.
 
-    Hot-block bound (VERDICT r02 #1): identical documents have
+    Hot-block bound: identical documents have
     IDENTICAL fingerprints, so a corpus with m copies of one page —
     the exact flood dedup exists for — puts all m in every block
     bucket and the self-join goes m²/2.  Blocks holding more than
@@ -361,7 +361,7 @@ def simhash_near_dups(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
         F.col("payload_a").alias("sha"), F.col("payload_b").alias("shb"),
     )
-    # hamming BEFORE the distinct (r10): the verify is one codegen'd
+    # hamming BEFORE the distinct: the verify is one codegen'd
     # bit_count per row while the distinct is a full exchange — on a
     # clustered corpus the blocking emits ~4.5M duplicated candidate
     # rows of which only ~1 % pass, so filtering first shrinks the
@@ -380,14 +380,25 @@ def simhash_near_dups(
 
 # at most one persisted exploded-gram table per session (see
 # ngram_jaccard_pairs); bounded leak instead of one per invocation.
-# The lock guards the slot swap against concurrent callers (ADVICE
-# r03 #4): without it, two multithreaded-driver calls could corrupt
-# the list or double-unpersist.  A call CAN still unpersist the
-# previous call's in-flight cache — results stay correct (persist
-# keeps lineage; the old plan recomputes), only the caching degrades;
-# callers needing isolation pass ``stage_dir`` instead.
+# The lock guards the slot swap against concurrent callers: without
+# it, two multithreaded-driver calls could corrupt the list or
+# double-unpersist.  A call CAN still unpersist the previous call's
+# in-flight cache — results stay correct (persist keeps lineage; the
+# old plan recomputes), only the caching degrades; callers needing
+# isolation pass ``stage_dir`` instead.  A driver-placed call
+# releases its own table before returning.
 _GRAM_CACHE_SLOT: list = []
 _GRAM_CACHE_LOCK = threading.Lock()
+
+# gram tables of at most this many rows are collected so the driver
+# computes the join statistic (and, when the join is small, the join
+# itself); the same value as connected_components' driver_threshold
+_GRAM_DRIVER_ROWS = 1_000_000
+# pairs the driver count-join makes at a time (~25 MB of numpy arrays;
+# at 2,000 Zipf docs, 7.2M candidate pairs, the call peaks ~170 MB over
+# its input, mostly the length-filtered pair keys)
+_PAIR_CHUNK = 1 << 18
+
 
 def _gram_explode(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(doc_id, gram, n_grams): each document's distinct word-n-grams,
@@ -438,6 +449,62 @@ def _gram_explode(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     return src.mapInPandas(gen, schema)
 
 
+def _driver_count_join(tbl, gid: np.ndarray, lo: float) -> list[tuple]:
+    """The direct route's count-join on a collected gram table ``tbl``
+    (Arrow; ``gid`` = each row's dense gram id): every pair of rows
+    sharing a gram, the same length filter, |A∩B| counted per
+    (doc_a, doc_b, na, nb).  Returns the (doc_a, doc_b, na, nb, n_inter)
+    rows with J ≥ ``lo`` sorted by (doc_a, doc_b); the caller's
+    round-and-threshold expression decides the rest.  Rows with a NULL
+    doc_id never pair (``doc_a < doc_b`` is NULL in Spark)."""
+    ids = tbl["doc_id"]
+    if ids.null_count:
+        valid = ids.is_valid()
+        tbl, gid = tbl.filter(valid), gid[valid.to_numpy()]
+    if tbl.num_rows == 0:
+        return []
+    doc = tbl["doc_id"].to_numpy()
+    ng = tbl["n_grams"].to_numpy().astype(np.int64)
+    # a pair key is (doc_id, n_grams) as in the Spark groupBy; entities
+    # number those keys in (doc_id, n_grams) order
+    docs_u, doc_ix = np.unique(doc, return_inverse=True)
+    width = int(ng.max()) + 1
+    ent_u, ent = np.unique(doc_ix * width + ng, return_inverse=True)
+    ent_doc, ent_n, n_ent = ent_u // width, ent_u % width, len(ent_u)
+    # rows grouped by gram, entities ascending inside each group; each
+    # row pairs with every later row of its group.  Pairs are made
+    # _PAIR_CHUNK at a time, which bounds the peak memory
+    order = np.lexsort((ent, gid))
+    g, e = gid[order], ent[order]
+    size = np.bincount(g)
+    later = size[g] - (np.arange(len(g)) - (np.cumsum(size) - size)[g]) - 1
+    ends = np.cumsum(later)
+    cuts = np.searchsorted(ends, np.arange(_PAIR_CHUNK, ends[-1], _PAIR_CHUNK))
+    cuts = np.unique(np.r_[0, cuts, len(g)])
+    keys = []
+    for lo_row, hi_row in zip(cuts[:-1], cuts[1:]):
+        cnt = later[lo_row:hi_row]
+        left = np.repeat(np.arange(lo_row, hi_row), cnt)
+        right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        ea, eb = e[left], e[right]
+        na, nb = ent_n[ea], ent_n[eb]
+        keep = (ent_doc[ea] < ent_doc[eb]) & (na * lo <= nb) & (nb * lo <= na)
+        keys.append(ea[keep] * n_ent + eb[keep])
+    key, n_inter = np.unique(np.concatenate(keys), return_counts=True)
+    ea, eb = key // n_ent, key % n_ent
+    # J ≥ lo keeps every pair round(J, 6) ≥ t can keep (see
+    # "Boundary completeness" in ngram_jaccard_pairs)
+    keep = n_inter >= lo * (ent_n[ea] + ent_n[eb] - n_inter)
+    ea, eb, n_inter = ea[keep], eb[keep], n_inter[keep]
+    if n_ent != len(docs_u):  # a doc_id with two n_grams values
+        o = np.lexsort((ent_doc[eb], ent_doc[ea]))
+        ea, eb, n_inter = ea[o], eb[o], n_inter[o]
+    return list(zip(
+        docs_u[ent_doc[ea]].tolist(), docs_u[ent_doc[eb]].tolist(),
+        ent_n[ea].tolist(), ent_n[eb].tolist(), n_inter.tolist(),
+    ))
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n: int = 3, threshold: float = 0.8, stage_dir: str | None = None,
@@ -445,20 +512,35 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs (doc_a < doc_b, J ≥ threshold).
 
-    Two cost-routed physical strategies, identical results (r10):
+    One count-join in three placements, identical results:
 
     * **Direct count-join** (chosen when the exact gram self-join size
       Σ_g df_g·(df_g−1)/2 fits ``direct_rows_budget``): one self-join
       of the exploded gram table on ``gram`` with the *length filter*
       inline (J ≥ t ⟹ t·|A| ≤ |B| ≤ |A|/t, Arasu/Bayardo — complete,
       only ever removes pairs that cannot qualify), then one pair
-      aggregation counts |A∩B|.  Two shuffles total.  The r9 shape
-      (prefix candidates + a (pair × |A|-gram) verify expansion) spent
-      489 s at 50k docs shuffling ~2.7B verify rows because the
+      aggregation counts |A∩B|.  Two shuffles total.  The earlier
+      shape (prefix candidates + a (pair × |A|-gram) verify expansion)
+      spent 489 s at 50k docs shuffling ~2.7B verify rows because the
       corpus's gram universe is small (27.9k grams, median df 96) —
       prefix filtering prunes nothing there while the verify pays
       candidates × doc-length; the direct join computes the same
       counts in 12 s from Σdf²/2 ≈ 126M in-flight rows.
+
+    * **Driver placement of the direct route**: a gram table of at most
+      ``_GRAM_DRIVER_ROWS`` (1,000,000) rows is collected after the job
+      that persists it, and the driver computes Σdf·(df−1)/2 in numpy.
+      When that fits one core's share of the budget (``budget /
+      defaultParallelism``, i.e. 8M rows by default) and ``doc_id`` is
+      an integer column, the same count-join with the same length
+      filter runs vectorized in numpy; its (doc_a, doc_b, na, nb,
+      n_inter) rows with J ≥ t − 1e-6 enter Spark as a
+      ``LocalRelation`` and pass through the one Jaccard
+      round-and-threshold expression below, so the
+      result is a ``LocalRelation`` already in (doc_a, doc_b) order that
+      ``collect()`` serves without a job.  The gram table is unpersisted
+      before returning.  At 400 Zipf docs (4 cores) this replaced ~11
+      single-task jobs whose planning gaps dominated a 2.3 s call.
 
     * **Prefix-filter route** (hot-gram-safe fallback when Σdf² blows
       the budget, e.g. Zipf-distributed web grams where one stopword
@@ -466,27 +548,38 @@ def ngram_jaccard_pairs(
       (df asc, gram asc) order, two sets with J ≥ t must share one of
       their first ``⌊(1-t)·|g|⌋ + 1`` grams (Chaudhuri ICDE'06 /
       Bayardo WWW'07 — complete), so the self-join touches only each
-      doc's rarest grams; candidates (now also length-filtered, r10)
-      are verified with the count-based join (VERDICT r02 #4 — no gram
-      arrays cross a shuffle).
+      doc's rarest grams; length-filtered candidates are verified with
+      the count-based join (no gram arrays cross a shuffle).
 
     The budget defaults to 8M rows × defaultParallelism (env
-    ``NGRAM_DIRECT_ROWS_PER_CORE``); the decision reads one aggregate
-    of the gram-frequency table — data statistics, not a scale switch.
+    ``NGRAM_DIRECT_ROWS_PER_CORE``).  The statistic is data, not a
+    scale switch: computed in the driver when the table was collected,
+    else by one Spark aggregate of the gram-frequency table.
 
     Boundary completeness: the output filter is ``round(J, 6) ≥ t``,
     so a pair with true J marginally below t can round in; the length
     filter and the prefix length therefore use ``t − 1e-6`` (round(J,6)
     ≥ t ⟹ J ≥ t−5e-7 ⟹ min/max ≥ t−5e-7 > t−1e-6 — no qualifying pair
-    is dropped, and both routes return the same pairs).
+    is dropped, and every placement returns the same pairs).
 
-    100-TB contract (VERDICT r03 #3): pass ``stage_dir`` to stage the
-    exploded grams to parquet once (resumable, bounded by disk) instead
-    of the cluster cache; every plan branch then scans the staged files
-    with pruning/pushdown."""
+    100-TB contract: pass ``stage_dir`` to stage the exploded grams to
+    parquet once (resumable, bounded by disk) instead of the cluster
+    cache; every plan branch then scans the staged files with
+    pruning/pushdown."""
+    return _ngram_pairs(docs, text_col, id_col, n, threshold, stage_dir, sort,
+                        direct_rows_budget)[0]
+
+
+def _ngram_pairs(
+    docs: DataFrame, text_col: str, id_col: str, n: int, threshold: float,
+    stage_dir: str | None, sort: bool, direct_rows_budget: int | None,
+) -> tuple[DataFrame, str]:
+    """:func:`ngram_jaccard_pairs` body → (pairs, placement), placement
+    one of ``"driver"``, ``"direct"`` (Spark) or ``"prefix"``."""
     import os
 
     from pyspark.sql import Window
+    from pyspark.sql.types import IntegralType
     from pyspark.storagelevel import StorageLevel
 
     spark = docs.sparkSession
@@ -498,7 +591,7 @@ def ngram_jaccard_pairs(
     # localCheckpoint: lazy and lineage-backed.  The CacheManager would
     # pin one copy per call for the session lifetime, so a one-slot
     # registry unpersists the PREVIOUS call's cache first — safe
-    # because persist keeps lineage (code-review r03 + r03b findings)
+    # because persist keeps lineage
     if stage_dir is not None:
         ex.write.mode("overwrite").parquet(stage_dir)
         ex = spark.read.parquet(stage_dir)
@@ -511,17 +604,41 @@ def ngram_jaccard_pairs(
                     pass
             ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
             _GRAM_CACHE_SLOT.append(ex)
+    par = spark.sparkContext.defaultParallelism
     if direct_rows_budget is None:
-        direct_rows_budget = int(
-            os.environ.get("NGRAM_DIRECT_ROWS_PER_CORE", "8000000")
-        ) * spark.sparkContext.defaultParallelism
-    dfreq = ex.groupBy("gram").agg(F.count("*").alias("df"))
-    est_direct_rows = (
-        dfreq.agg(F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("s")).collect()[0]["s"]
-        or 0.0
-    )
+        direct_rows_budget = int(os.environ.get("NGRAM_DIRECT_ROWS_PER_CORE", "8000000")) * par
     lo = threshold - 1e-6  # see "Boundary completeness" above
-    if est_direct_rows <= direct_rows_budget:
+    id_type = ex.schema["doc_id"].dataType
+    est_direct_rows = None
+    placement = None
+    # the row count off the JVM RDD: one job that materializes the
+    # table, where DataFrame.count() under AQE runs three (cache stage,
+    # shuffle map stage, result)
+    if ex._jdf.queryExecution().toRdd().count() <= _GRAM_DRIVER_ROWS:
+        tbl = ex.toArrow()
+        gid = tbl["gram"].combine_chunks().dictionary_encode().indices.to_numpy()
+        size = np.bincount(gid)
+        est_direct_rows = int((size * (size - 1) // 2).sum())
+        if est_direct_rows * par <= direct_rows_budget and isinstance(id_type, IntegralType):
+            t = id_type.simpleString()
+            inter = local_frame(
+                spark, _driver_count_join(tbl, gid, lo),
+                f"doc_a {t}, doc_b {t}, na int, nb int, n_inter long",
+            )
+            if stage_dir is None:  # nothing reads the cached table again
+                with _GRAM_CACHE_LOCK:
+                    _GRAM_CACHE_SLOT[:] = [d for d in _GRAM_CACHE_SLOT if d is not ex]
+                ex.unpersist()
+            placement = "driver"
+    if placement is None:
+        dfreq = ex.groupBy("gram").agg(F.count("*").alias("df"))
+        if est_direct_rows is None:
+            est_direct_rows = (
+                dfreq.agg(F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("s"))
+                .collect()[0]["s"] or 0.0
+            )
+        placement = "direct" if est_direct_rows <= direct_rows_budget else "prefix"
+    if placement == "direct":
         a = ex.select(F.col("doc_id").alias("doc_a"), "gram", F.col("n_grams").alias("na"))
         b = ex.select(F.col("doc_id").alias("doc_b"), "gram", F.col("n_grams").alias("nb"))
         inter = (
@@ -534,7 +651,7 @@ def ngram_jaccard_pairs(
             .groupBy("doc_a", "doc_b", "na", "nb")
             .agg(F.count("*").alias("n_inter"))
         )
-    else:
+    elif placement == "prefix":
         w_rank = Window.partitionBy("doc_id").orderBy("df", "gram")
         prefix = (
             ex.join(dfreq, "gram")
@@ -583,24 +700,11 @@ def ngram_jaccard_pairs(
     out = jac.filter(F.col("jaccard") >= threshold)
     # sort=False for pipeline consumers (connected components): the
     # global range-exchange buys nothing before a hash-keyed CC loop,
-    # and its cost is the FULL pair set at corpus scale
-    return out.orderBy("doc_a", "doc_b") if sort else out
-
-
-def _gram_sets(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(doc_id, grams): the distinct word-n-gram set per document."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.size(F.split(F.col(text_col), " ")) - n, F.lit(0)),
-                ),
-                lambda i: F.concat_ws(" ", F.slice(F.split(F.col(text_col), " "), i + 1, n)),
-            )
-        ).alias("grams"),
-    )
+    # and its cost is the FULL pair set at corpus scale.  The driver
+    # placement's rows are already in order
+    if sort and placement != "driver":
+        out = out.orderBy("doc_a", "doc_b")
+    return out, placement
 
 
 def connected_components(
@@ -649,8 +753,8 @@ def _components(
     # directed pairs so the expensive upstream pair pipeline doesn't
     # run once per branch — two sequential driver barriers); explode
     # reads the input once, so ONE checkpoint materializes the
-    # deduped symmetric edge list (r5, VERDICT r04 #6: the grouping
-    # pipeline's serial fraction is these fixed job barriers)
+    # deduped symmetric edge list (the grouping pipeline's serial
+    # fraction is these fixed job barriers)
     edges = (
         pairs.select(
             F.explode(
@@ -666,21 +770,7 @@ def _components(
     )
     n_directed = edges.count()
     if n_directed <= 2 * driver_threshold:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in edges.collect():
-            ra, rb = find(int(r["src"])), find(int(r["dst"]))
-            if ra != rb:
-                # min-root union: the root IS the component min id
-                parent[max(ra, rb)] = min(ra, rb)
-        return [(n, find(n)) for n in sorted(parent)], None
+        return _union_find((int(r["src"]), int(r["dst"])) for r in edges.collect()), None
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -690,7 +780,7 @@ def _components(
     converged = False
     # max_iters + 1: detecting convergence costs one extra no-change
     # round, so a diameter-== max_iters graph needs max_iters
-    # productive rounds plus the confirming one (code-review r03b)
+    # productive rounds plus the confirming one
     for _ in range(max_iters + 1):
         nbr = (
             edges.join(
@@ -722,6 +812,34 @@ def _components(
     return None, labels
 
 
+def _union_find(edges) -> list[tuple[int, int]]:
+    """(node, comp) rows sorted by node for the undirected ``edges``
+    (an iterable of int pairs); comp is the min node of the component."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min-root union: the root IS the component min id
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(n, find(n)) for n in sorted(parent)]
+
+
+def _group_frame(spark, rows: list[tuple[int, int]]) -> DataFrame:
+    """Driver (node, comp) rows → the group tail's (doc_id, group_id,
+    n_docs) rows, ordered by (group_id, doc_id), as one LocalRelation."""
+    sizes = Counter(comp for _node, comp in rows)
+    groups = sorted(((node, comp, sizes[comp]) for node, comp in rows), key=lambda r: (r[1], r[0]))
+    return local_frame(spark, groups, "doc_id long, group_id long, n_docs long")
+
+
 def _groups_from_pairs(pairs: DataFrame) -> DataFrame:
     """Shared tail of every grouping pipeline: pairs → connected
     components → (doc_id, group_id, n_docs), group_id = min doc_id,
@@ -730,13 +848,7 @@ def _groups_from_pairs(pairs: DataFrame) -> DataFrame:
     come back as one LocalRelation — no further Spark job."""
     rows, cc = _components(pairs)
     if rows is not None:
-        sizes = Counter(comp for _node, comp in rows)
-        groups = sorted(
-            ((node, comp, sizes[comp]) for node, comp in rows), key=lambda r: (r[1], r[0])
-        )
-        return local_frame(
-            pairs.sparkSession, groups, "doc_id long, group_id long, n_docs long"
-        )
+        return _group_frame(pairs.sparkSession, rows)
     sizes = cc.groupBy("comp").agg(F.count("*").cast("long").alias("n_docs"))
     return (
         cc.join(sizes, "comp")
@@ -760,12 +872,24 @@ def near_dup_groups(
     components → group sizes.  ``group_id`` is the min doc_id of the
     group; a keep-one policy is ``filter(doc_id == group_id)``.
 
+    Placement follows :func:`ngram_jaccard_pairs`: a gram table of at
+    most ``_GRAM_DRIVER_ROWS`` (1,000,000) rows whose self-join
+    Σdf·(df−1)/2 fits one core's share of the direct budget (8M rows
+    by default, env ``NGRAM_DIRECT_ROWS_PER_CORE``) is joined in the
+    driver, and its surviving pairs go straight to the driver
+    union-find and group tail: the result is a ``LocalRelation`` and
+    the call runs no Spark job after collecting the gram table.  Other
+    tables take the Spark direct or prefix route and
+    :func:`connected_components`' own size gate.
+
     ``stage_dir`` (the grouping-scale path): stage the exploded gram
     table to parquet instead of the cluster cache — see
     :func:`ngram_jaccard_pairs`."""
-    pairs = ngram_jaccard_pairs(docs, text_col=text_col, id_col=id_col,
-                                n=n, threshold=threshold, stage_dir=stage_dir,
-                                sort=False)
+    pairs, placement = _ngram_pairs(docs, text_col, id_col, n, threshold, stage_dir,
+                                    sort=False, direct_rows_budget=None)
+    if placement == "driver":  # a LocalRelation: collect runs no job
+        edges = ((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+        return _group_frame(docs.sparkSession, _union_find(edges))
     return _groups_from_pairs(pairs)
 
 
@@ -784,58 +908,9 @@ def minhash_dup_groups(
     precision against the documented lower-bound semantics of
     ``n_shared_bands`` for pairs routed through over-cap buckets
     (star pairs count collisions with the representative only, so a
-    threshold > 1 can drop genuinely-similar over-cap pairs —
-    code-review r03b); re-verify with an exact measure instead if
+    threshold > 1 can drop genuinely-similar over-cap pairs); re-verify with an exact measure instead if
     precision matters."""
     pairs = minhash_candidates(
         docs, text_col=text_col, id_col=id_col, sort=False
     ).filter(F.col("n_shared_bands") >= min_shared_bands)
     return _groups_from_pairs(pairs)
-
-
-def ngram_jaccard_pairs_arrays(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 3, threshold: float = 0.8,
-) -> DataFrame:
-    """Array-based verification variant: identical candidate generation
-    (same complete prefix filter), but Jaccard computed with
-    ``array_intersect``/``array_union`` over whole gram arrays.  Kept
-    ONLY as the pytest cross-check for :func:`ngram_jaccard_pairs` —
-    at scale the arrays ride the verify shuffle once per candidate
-    pair (VERDICT r02 #4), so it is never the production path."""
-    from pyspark.sql import Window
-
-    grams = _gram_sets(docs, text_col, id_col, n)
-    ex = grams.select("doc_id", F.explode("grams").alias("gram"))
-    dfreq = ex.groupBy("gram").agg(F.count("*").alias("df"))
-    w_rank = Window.partitionBy("doc_id").orderBy("df", "gram")
-    w_doc = Window.partitionBy("doc_id")
-    prefix = (
-        ex.join(dfreq, "gram")
-        .withColumn("rk", F.row_number().over(w_rank))
-        .withColumn("n_grams", F.count("*").over(w_doc))
-        .filter(F.col("rk") <= F.floor((1.0 - (threshold - 1e-6)) * F.col("n_grams") + 1e-9) + 1)
-        .select("doc_id", "gram")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
-    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
-    jac = (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("ga", "gb"))
-                / F.size(F.array_union("ga", "gb")),
-                6,
-            ),
-        )
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return jac.filter(F.col("jaccard") >= threshold).orderBy("doc_a", "doc_b")

@@ -16,6 +16,42 @@ def _pairs(df):
     return sorted((r.doc_a, r.doc_b, r.n_shared_bands) for r in df.collect())
 
 
+def _grams(text, n=3):
+    """Word n-grams as ``dedup`` forms them: split on single spaces, and
+    a text of at most ``n`` words is one gram."""
+    w = text.split(" ")
+    if len(w) <= n:
+        return {" ".join(w)}
+    return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+
+
+def _round6(x):
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def _jaccard_oracle(rows, threshold, n=3):
+    """Every (doc_a, doc_b, jaccard) with doc_a < doc_b and the rounded
+    Jaccard of their n-gram sets ≥ ``threshold``, by brute force over all
+    pairs of (doc_id, text) ``rows``; NULL texts have no grams."""
+    gmap = {d: _grams(t, n) for d, t in rows if t is not None}
+    ids = sorted(gmap)
+    want = []
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            ga, gb = gmap[a], gmap[b]
+            j = _round6(len(ga & gb) / len(ga | gb))
+            if j >= threshold:
+                want.append((a, b, j))
+    return want
+
+
+def _docs_rows(docs):
+    return [(r.doc_id, r.text) for r in docs.select("doc_id", "text").collect()]
+
+
 def test_bucket_cap_does_not_change_normal_corpora(spark):
     """At sf0.01 no bucket exceeds the cap, so capped == uncapped."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -74,23 +110,7 @@ def test_ngram_prefix_filtering_complete(spark):
         for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
     )
 
-    # brute-force oracle with the same gram definition
-    def grams(text, n=3):
-        t = text.split(" ")
-        return {
-            " ".join(t[i : i + n]) for i in range(max(len(t) - n, 0) + 1)
-        }
-
-    gmap = {d: grams(t) for d, t in rows}
-    want = []
-    ids = sorted(gmap)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            inter = len(gmap[a] & gmap[b])
-            union = len(gmap[a] | gmap[b])
-            j = round(inter / union, 6)
-            if j >= 0.5:
-                want.append((a, b, j))
+    want = _jaccard_oracle(rows, 0.5)
     assert got == sorted(want)
     assert len(want) > 0
 
@@ -156,44 +176,124 @@ def test_simhash_block_cap_does_not_change_normal_corpora(spark):
     assert capped == uncapped
 
 
-def test_ngram_direct_route_matches_prefix_route(spark):
-    """r10: ngram_jaccard_pairs cost-routes between the direct gram
-    self-join (small Σdf²) and the prefix-filter fallback (hot-gram
-    corpora).  Force each route via direct_rows_budget and require
-    identical pairs on the real sf0.01 corpus — including the length
-    filter both routes now apply."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    key = lambda df: sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
-    direct = key(dedup.ngram_jaccard_pairs(docs, threshold=0.5, direct_rows_budget=1 << 60))
-    prefix = key(dedup.ngram_jaccard_pairs(docs, threshold=0.5, direct_rows_budget=0))
-    assert direct == prefix
-    assert len(direct) > 0
+def _edge_docs(spark, id_type="long"):
+    """NULL text, empty strings, one-word docs, an identical-document
+    flood and planted near-duplicates, with ``id_type`` doc ids."""
+    words = [f"w{i}" for i in range(30)]
+    rows = [(d, " ".join(words[(d * 3) % 18 : (d * 3) % 18 + 12])) for d in range(20)]
+    rows += [(100 + i, "same text body for every single copy here") for i in range(60)]
+    rows += [(200, None), (201, None), (202, ""), (203, ""), (204, "")]
+    rows += [(300, "solo"), (301, "solo"), (302, "other"), (303, "a b"), (304, "a b")]
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+def _run_placements(monkeypatch, fn):
+    """``fn()`` (an n-gram pipeline call) forced onto each placement:
+    the driver, Spark direct (the driver row gate patched shut) and
+    prefix (``fn(direct_rows_budget=0)``).  Returns {placement: frame};
+    a spy on ``_ngram_pairs`` asserts which placement ran."""
+    ran = []
+    inner = dedup._ngram_pairs
+
+    def spy(*a, **k):
+        out = inner(*a, **k)
+        ran.append(out[1])
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_ngram_pairs", spy)
+        got = {"driver": fn()}
+        with monkeypatch.context() as gate:
+            gate.setattr(dedup, "_GRAM_DRIVER_ROWS", -1)
+            got["direct"] = fn()
+        got["prefix"] = fn(direct_rows_budget=0)
+    assert ran == ["driver", "direct", "prefix"]
+    return got
+
+
+def _schema(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_ngram_direct_route_matches_prefix_route(spark, monkeypatch):
+    """ngram_jaccard_pairs places its count-join in the driver (small
+    gram table), runs it as a Spark self-join (the direct route) or
+    switches to the prefix filter (hot grams).  Forced onto each, on
+    sf0.01 and on the edge corpus with long and int doc ids, it returns
+    the all-pairs oracle's rows in the same order, with the same column
+    names and types on every placement — including the length filter
+    every placement applies."""
+    cases = {
+        "sf0.01": spark.read.parquet(f"{SF}/documents.parquet"),
+        "edge": _edge_docs(spark),
+        "edge_int_ids": _edge_docs(spark, "int"),
+    }
+    for case, docs in cases.items():
+        got = _run_placements(
+            monkeypatch, lambda **k: dedup.ngram_jaccard_pairs(docs, threshold=0.5, **k)
+        )
+        want = sorted(_jaccard_oracle(_docs_rows(docs), 0.5))
+        assert len(want) > 0, case
+        for placement, df in got.items():
+            assert _schema(df) == _schema(got["driver"]), (case, placement)
+            assert [tuple(r) for r in df.collect()] == want, (case, placement)
+
+
+def test_ngram_driver_join_chunks_agree(spark, monkeypatch):
+    """The driver count-join makes its pairs a chunk at a time; chunks
+    of a few pairs, cut inside gram groups, give the oracle's rows."""
+    docs = _edge_docs(spark)
+    want = sorted(_jaccard_oracle(_docs_rows(docs), 0.5))
+    monkeypatch.setattr(dedup, "_PAIR_CHUNK", 7)
+    got = [tuple(r) for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()]
+    assert got == want and len(want) > 0
 
 
 def test_ngram_count_verify_matches_array_verify(spark):
     """The production count-based Jaccard verify must equal the
-    array-based formulation it replaced (VERDICT r02 #4) on the real
-    sf0.01 corpus."""
+    brute-force set formulation on the real sf0.01 corpus."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     key = lambda df: sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
     got = key(dedup.ngram_jaccard_pairs(docs, threshold=0.5))
-    want = key(dedup.ngram_jaccard_pairs_arrays(docs, threshold=0.5))
+    want = sorted(_jaccard_oracle(_docs_rows(docs), 0.5))
     assert got == want
     assert len(got) > 0
 
 
-def test_ngram_verify_join_ships_no_arrays(spark):
-    """No array column may cross the verify joins: the plan between the
-    candidate join and the jaccard filter must carry only scalar
-    columns (the point of the count-based rewrite)."""
+def test_ngram_verify_join_ships_no_arrays(spark, monkeypatch):
+    """No array column may cross the verify joins of the Spark
+    placements: the plan between the candidate join and the jaccard
+    filter must carry only scalar columns (the point of the count-based
+    rewrite)."""
     from eaststorm_searchengine_spark.plans import inspect
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = inspect.formatted_plan(dedup.ngram_jaccard_pairs(docs, threshold=0.5))
-    # the gram-set arrays exist only below the explode; they must not
-    # appear in any join output schema (array_intersect/array_union
-    # would mark the array formulation)
-    assert "array_intersect" not in plan and "array_union" not in plan
+    monkeypatch.setattr(dedup, "_GRAM_DRIVER_ROWS", -1)
+    for budget in (None, 0):  # Spark direct, prefix
+        plan = inspect.formatted_plan(
+            dedup.ngram_jaccard_pairs(docs, threshold=0.5, direct_rows_budget=budget)
+        )
+        assert "Join" in plan
+        # the gram-set arrays exist only below the explode; they must not
+        # appear in any join output schema (array_intersect/array_union
+        # would mark the array formulation)
+        assert "array_intersect" not in plan and "array_union" not in plan
+
+
+def test_near_dup_groups_driver_placement_releases_cache(spark):
+    """A driver-placed near_dup_groups unpersists its gram table: the
+    session CacheManager holds no more entries after the call than
+    before it, the one-slot registry is empty, and the result is a
+    LocalRelation (no Exchange)."""
+    from eaststorm_searchengine_spark.plans import inspect
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.cachedData().size()
+    out = dedup.near_dup_groups(_edge_docs(spark), threshold=0.5)
+    assert "Exchange" not in inspect.formatted_plan(out)
+    assert out.count() > 0
+    assert cm.cachedData().size() <= before
+    assert dedup._GRAM_CACHE_SLOT == []
 
 
 def test_connected_components_vs_union_find(spark):
@@ -295,19 +395,7 @@ def test_ngram_prefix_filtering_complete_t08(spark):
         (r.doc_a, r.doc_b, r.jaccard)
         for r in dedup.ngram_jaccard_pairs(docs, threshold=0.8).collect()
     )
-
-    def grams(text, n=3):
-        t = text.split(" ")
-        return {" ".join(t[i : i + n]) for i in range(max(len(t) - n, 0) + 1)}
-
-    gmap = {d: grams(t) for d, t in rows}
-    want = []
-    ids = sorted(gmap)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            j = round(len(gmap[a] & gmap[b]) / len(gmap[a] | gmap[b]), 6)
-            if j >= 0.8:
-                want.append((a, b, j))
+    want = _jaccard_oracle(rows, 0.8)
     assert got == sorted(want)
     assert len(want) > 0
 
@@ -360,21 +448,22 @@ def test_star_cap_metrics_report_engagement(spark):
     assert m2["overcap_buckets"] >= dedup.N_BANDS
 
 
-def test_ngram_routes_agree_at_rounding_boundary(spark):
+def test_ngram_routes_agree_at_rounding_boundary(spark, monkeypatch):
     """J = 2/3 rounds (6 digits) onto t = 0.666667, so the direct route
     keeps the pair.  With the prefix length taken from the exact t, doc 1
     (3 grams) would index only its rare unshared gram and the prefix
-    route would miss the pair; taken from t − 1e-6 both routes agree."""
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "b c d e")], "doc_id long, text string"
-    )
-    key = lambda df: sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+    route would miss the pair; taken from t − 1e-6 every placement
+    agrees."""
+    rows = [(1, "a b c d e"), (2, "b c d e")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     t = 0.666667
-    direct = key(dedup.ngram_jaccard_pairs(docs, n=3, threshold=t, direct_rows_budget=1 << 60))
-    prefix = key(dedup.ngram_jaccard_pairs(docs, n=3, threshold=t, direct_rows_budget=0))
-    assert direct == [(1, 2, 0.666667)]
-    assert prefix == direct
-    assert key(dedup.ngram_jaccard_pairs_arrays(docs, n=3, threshold=t)) == direct
+    got = _run_placements(
+        monkeypatch, lambda **k: dedup.ngram_jaccard_pairs(docs, n=3, threshold=t, **k)
+    )
+    got = {p: sorted(tuple(r) for r in df.collect()) for p, df in got.items()}
+    assert got["driver"] == [(1, 2, 0.666667)]
+    assert got["direct"] == got["prefix"] == got["driver"]
+    assert _jaccard_oracle(rows, t) == got["driver"]
 
 
 def _planted_and_flood_docs(spark, kind):
@@ -396,8 +485,9 @@ def _planted_and_flood_docs(spark, kind):
 def test_group_tails_agree(spark, monkeypatch, op, kind):
     """The driver group tail (components solved by union-find, sizes
     and order computed in the driver) and the distributed tail (forced
-    with a zero CC driver threshold) return the same rows, column names
-    and types; the driver tail's plan has no Exchange."""
+    with a zero CC driver threshold, and for near_dup_groups with the
+    Spark pair placement) return the same rows, column names and types;
+    the driver tail's plan has no Exchange."""
     import functools
 
     from eaststorm_searchengine_spark.plans import inspect
@@ -409,6 +499,7 @@ def test_group_tails_agree(spark, monkeypatch, op, kind):
     monkeypatch.setattr(
         dedup, "_components", functools.partial(dedup._components, driver_threshold=0)
     )
+    monkeypatch.setattr(dedup, "_GRAM_DRIVER_ROWS", -1)
     dist_df = fn(docs)
     schema = lambda df: [(f.name, f.dataType) for f in df.schema.fields]
     assert schema(drv_df) == schema(dist_df)
