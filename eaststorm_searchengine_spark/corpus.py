@@ -29,6 +29,7 @@ from typing import Iterator
 import pandas as pd
 
 from . import textproc
+from .functions.frames import ensure_parallelism
 
 # Host pool (~50 hosts) incl. wiki-family and social hosts so the
 # PageRank adjustments (PageRank.java:14-37) have signal.
@@ -150,7 +151,7 @@ def synthesize_pages(spark, sf_dir: str):
     corpus size; no driver-side materialization)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
-    docs = _spread(docs)
+    docs = ensure_parallelism(docs)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -163,20 +164,11 @@ def synthesize_pages(spark, sf_dir: str):
     return docs.select("doc_id", "text", "lang").mapInPandas(gen, PAGES_SCHEMA)
 
 
-def _spread(docs):
-    """Single-file feedstock scans coalesce to 1-2 splits; spread so the
-    per-row HTML synthesis parallelizes."""
-    target = docs.sparkSession.sparkContext.defaultParallelism * 2
-    if docs.rdd.getNumPartitions() < target:
-        return docs.repartition(target)
-    return docs
-
-
 def pages_with_ids(spark, sf_dir: str):
     """pages + the stable int64 doc_id (same id space as documents)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
-    docs = _spread(docs)
+    docs = ensure_parallelism(docs)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,14 +9,11 @@ set-up.  An Arrow table instead becomes a JVM ``LocalRelation``: no
 Python RDD, no Python task, and ``collect()`` on it is served from the
 driver without a job.
 
-``spread_for_udf`` is the spread gate in front of the expensive
-per-row Python passes (signatures, gram synthesis, cosine scoring, IVF
-assignment).
+``ensure_parallelism`` and the size-gated ``spread_for_udf`` are the
+spread gates in front of the expensive per-row Python passes.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +34,23 @@ def local_frame(spark: SparkSession, rows: list, ddl_schema: str) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def spread_for_udf(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
+    """Small-input guard: a compact parquet input coalesces to a
+    handful of scan splits (maxPartitionBytes), which would run the
+    expensive per-row Python pass on 1-2 cores.  Repartition up to
+    cores×factor when the scan gives fewer — the raw-input shuffle is
+    cheap at this size.  At production scale (thousands of splits)
+    this is a no-op, so no 100-TB reshuffle ever happens."""
+    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+SPREAD_MIN_BYTES = 2 << 20  # spread_for_udf's size gate
+
+
+def spread_for_udf(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cores before an expensive
     per-row Python pass: a small parquet arrives as ONE scan partition,
     which serialized the whole UDF onto a single core (measured 8.3 s of
@@ -46,21 +59,18 @@ def spread_for_udf(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
 
     Two no-op guards keep this scale-adaptive rather than tuned to one
     shape: inputs that already have scan parallelism are left alone
-    (no shuffle), and inputs below ``min_bytes`` (plan-statistics
-    estimate; env ``EASTSTORM_SPREAD_MIN_BYTES``, default 2 MB) keep
-    their single-partition plan — at a few thousand rows the
-    repartition's fixed shuffle/stage cost exceeds the single-core UDF
-    time it saves (measured 1.3-2.6× regressions at the 5k-doc scale
-    before the gate)."""
+    (no shuffle), and inputs below ``SPREAD_MIN_BYTES`` (2 MB,
+    plan-statistics estimate) keep their single-partition plan — at a
+    few thousand rows the repartition's fixed shuffle/stage cost
+    exceeds the single-core UDF time it saves (measured 1.3-2.6×
+    regressions at the 5k-doc scale before the gate)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= par:
         return df
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("EASTSTORM_SPREAD_MIN_BYTES", str(2 << 20)))
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
-        size = min_bytes  # unknown → assume large (spread)
-    if size < min_bytes:
+        size = SPREAD_MIN_BYTES  # unknown → assume large (spread)
+    if size < SPREAD_MIN_BYTES:
         return df
     return df.repartition(par * 2)

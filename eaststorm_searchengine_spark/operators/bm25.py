@@ -11,11 +11,12 @@ Two executors, bitwise equal in tests, and no router between them:
   block, accumulate per-doc scores with ``np.add.at``, take the
   chunk's top-k with one lexsort.  The equality oracle for MaxScore.
 
-Distribution model: segment blocks are grouped by ``chunk`` (doc
-range); each chunk computes its local top-k independently (scores use
-global broadcast stats, so local ranking is globally consistent), and
-the global top-k is a tiny shuffle of ``n_chunks × k`` candidate rows —
-the same TakeOrdered pattern Spark plans for orderBy+limit
+Distribution model: segment blocks are grouped by ``(gen, chunk)``
+(a chunk key is unique only within a generation), one sorted block run
+per term over a disjoint doc set; each group computes its local top-k
+independently (scores use global broadcast stats, so local ranking is
+globally consistent), and the global top-k is a tiny shuffle of
+``n_chunks × k`` candidate rows — the same TakeOrdered pattern Spark plans for orderBy+limit
 (SURVEY.md §2.5).  Replaces the reference's driver-side HashMap ranker
 (``jobs/SearchServer.java:103-226``).
 """
@@ -36,7 +37,7 @@ from ..functions import sqltok
 from ..functions.frames import local_frame
 from ..functions.hashing import term_bucket
 from . import codec
-from .index_build import IndexPaths
+from .index_build import IndexPaths, _read_segments
 from .maxscore import _TermPostings, maxscore_topk
 
 # ``"wand"`` names the selective executor in older callers (bench
@@ -104,7 +105,7 @@ class BM25Index:
         # (directory listing + schema) is built once per index handle,
         # not once per query — the serving-path latency win any
         # long-running query server gets for free
-        self._segs_df = self.spark.read.parquet(self.paths.segments)
+        self._segs_df = _read_segments(self.spark, self.paths.segments)
         self._stats_df = self.spark.read.parquet(self.paths.term_stats)
         self._df_map: dict | bool | None = None  # lazy driver-side df cache
         self._df_cache: dict = {}  # big-vocab per-term memo (reset on reload)
@@ -191,7 +192,7 @@ class BM25Index:
                         s.catalog.refreshByPath(self.paths.segments)
                     except Exception:
                         pass
-                self._serve_segs_df = s.read.parquet(self.paths.segments)
+                self._serve_segs_df = _read_segments(s, self.paths.segments)
         return self._serve_segs_df
 
     # Cap on loading the whole vocabulary's (term, df) driver-side: a
@@ -338,7 +339,7 @@ class BM25Index:
             segs_src
             .filter(F.col("bucket").isin(buckets))  # partition pruning
             .filter(F.col("term").isin(present_terms))
-            .select("term", "chunk", "first_doc", "last_doc", "n",
+            .select("term", "gen", "chunk", "first_doc", "last_doc", "n",
                     "max_tf", "min_dl", "docs", "tfs", "dls")
         )
 
@@ -407,7 +408,7 @@ class BM25Index:
         # floor — the 32-way parallel scan+decode is load-bearing — so
         # the two-stage distributed plan below is the measured optimum,
         # not an overhead to cut.
-        candidates = segs.groupBy("chunk").applyInPandas(score_chunk, out_schema)
+        candidates = segs.groupBy("gen", "chunk").applyInPandas(score_chunk, out_schema)
         return self._rank(candidates, k, score_round, final_rank)
 
     def phrase_search(
@@ -443,7 +444,7 @@ class BM25Index:
             self._segs_df
             .filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(present_terms))
-            .select("term", "chunk", "first_doc", "n", "docs", "tfs", "dls", "pos")
+            .select("term", "gen", "chunk", "first_doc", "n", "docs", "tfs", "dls", "pos")
         )
         avgdl, n_docs, k1, b = self.avgdl, self.n_docs, sqltok.K1, sqltok.B
 
@@ -507,7 +508,7 @@ class BM25Index:
                 )
             return df_out
 
-        candidates = segs.groupBy("chunk").applyInPandas(match_chunk, out_schema)
+        candidates = segs.groupBy("gen", "chunk").applyInPandas(match_chunk, out_schema)
         return self._rank(candidates, k, score_round)
 
     def _rank(

@@ -843,7 +843,8 @@ def _group_frame(spark, rows: list[tuple[int, int]]) -> DataFrame:
 def _groups_from_pairs(pairs: DataFrame) -> DataFrame:
     """Shared tail of every grouping pipeline: pairs → connected
     components → (doc_id, group_id, n_docs), group_id = min doc_id,
-    ordered by (group_id, doc_id).  When the components resolve in the
+    ordered by (group_id, doc_id), ids bigint whatever the input's id
+    type (as :func:`_group_frame`).  When the components resolve in the
     driver, the sizes and the ordered rows are computed there too and
     come back as one LocalRelation — no further Spark job."""
     rows, cc = _components(pairs)
@@ -853,8 +854,8 @@ def _groups_from_pairs(pairs: DataFrame) -> DataFrame:
     return (
         cc.join(sizes, "comp")
         .select(
-            F.col("node").alias("doc_id"),
-            F.col("comp").alias("group_id"),
+            F.col("node").cast("long").alias("doc_id"),
+            F.col("comp").cast("long").alias("group_id"),
             "n_docs",
         )
         .orderBy("group_id", "doc_id")

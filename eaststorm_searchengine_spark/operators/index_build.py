@@ -7,20 +7,23 @@ shuffle into term-bucketed segment files.  Replaces the reference's
 eager string-fold index build (``jobs/Indexer.java:36-75``) with a
 shuffle-conscious DataFrame plan.
 
+``segments/`` is every store's single source of truth: besides the
+real terms it holds the reserved ``#doclens#`` postings, every
+document's (doc_id, tf=0, dl) in bucket 0, token-less documents
+included, encoded and re-chunked like any other term.
+
 One pipeline, two steps:
 
 1. **Fragment encode** (:func:`_make_fragment_gen`).  Each Arrow batch
    of documents is tokenized once and turned into finished compressed
-   block rows, plus one reserved ``#doclens#`` row carrying the batch's
-   (doc_id, dl) pairs — token-less documents included, so n_docs and
-   avgdl count them.
+   block rows, its ``#doclens#`` run included.
 2. **Canonical re-chunk** (:func:`_compact_segments`).  The compressed
    fragment blocks are shuffled on (bucket, chunk) and re-encoded per
    group; the output depends only on the posting set, not on how it
    was fragmented.
 
 Every entry point ends in the same metadata tail (:func:`_finalize`):
-doclens/ from the reserved rows, term_stats/ and lineage/ from the
+doclens/ from the reserved postings, term_stats/ and lineage/ from the
 segment metadata, and one stats.json key set (listed in
 :func:`build_index`).
 
@@ -37,6 +40,11 @@ Scale design (the 10^12-doc story):
 * **Term buckets give query-side pruning.**  Segments are written
   partitioned by ``bucket = xxhash64(term) % n_buckets``; a query reads
   only its terms' buckets (directory-level partition pruning).
+* **Generations keep writers apart.**  Every writer lands one
+  generation, ``segments/gen=<g>/bucket=<b>/``: builds and compactions
+  ``gen=0``, streamed micro-batch ``b`` ``gen=<b+1>``.  Chunk keys are
+  unique only within a generation, so queries and lineage key on
+  ``(gen, chunk)``; a store without ``gen=`` directories is gen 0.
 * **Block-max metadata.**  Each 128-posting block stores
   ``(max_tf, min_dl)``; the query computes the WAND upper bound
   ``idf · tfnorm(max_tf, min_dl, avgdl)`` with broadcast stats, so the
@@ -51,7 +59,8 @@ Entry points (all serve the identical query engine, equality-tested):
 * ``build_index_fast`` — the fragment encode alone, zero shuffle:
   fragment-layout segments; measured 0.94 scaling efficiency 2→8 cores
   at 1M docs.
-* ``compact_index`` — the re-chunk alone, over existing segment stores.
+* ``compact_index`` — ``build_index``'s re-chunk and tail over
+  existing segment stores.
 """
 
 from __future__ import annotations
@@ -66,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqltok
+from ..functions.frames import ensure_parallelism
 from . import codec
 from ..sources import fsio
 
@@ -132,23 +142,10 @@ SEGMENT_COLS = [
     "max_tf", "min_dl", "bytes", "docs", "tfs", "dls", "pos",
 ]
 
-# reserved pseudo-term carrying per-batch (doc_id, dl) pairs in the
-# fast path; can never collide with real tokens (tokens are [a-z]+)
+# reserved pseudo-term whose postings are every document's (doc_id,
+# tf=0, dl), all in bucket 0; can never collide with real tokens
+# (tokens are [a-z]+)
 DOCLEN_TERM = "#doclens#"
-
-
-def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
-    """Small-input guard: a compact parquet corpus coalesces to a
-    handful of scan splits (maxPartitionBytes), which would run the
-    expensive tokenize+partial-agg map stage on 1-2 cores.  Repartition
-    up to cores×factor when the scan gives fewer — the raw-input shuffle
-    is cheap at this size.  At production scale (thousands of splits)
-    this is a no-op, so no 100-TB reshuffle ever happens."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * min_factor
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 class IndexPaths:
@@ -161,6 +158,20 @@ class IndexPaths:
         self.stats = os.path.join(root, "stats.json")
         self.lineage = os.path.join(root, "lineage")
         self.commits = os.path.join(root, "_commits")
+
+
+def _read_segments(spark: SparkSession, path: str) -> DataFrame:
+    """A segment store with its ``gen`` column; a store written without
+    ``gen=`` directories reads as generation 0."""
+    seg = spark.read.parquet(path)
+    return seg if "gen" in seg.columns else seg.withColumn("gen", F.lit(0))
+
+
+def _write_gen0(seg: DataFrame, paths: IndexPaths) -> None:
+    """Replace segments/ with ``seg`` as generation 0."""
+    seg.withColumn("gen", F.lit(0)).write.mode("overwrite").partitionBy(
+        "gen", "bucket"
+    ).parquet(paths.segments)
 
 
 def _encode_sorted_runs(
@@ -275,26 +286,27 @@ def _run_concurrently(*fns) -> list:
 
 
 def _decode_doclen_rows(batches):
-    """mapInPandas generator: reserved #doclens# sentinel block rows →
-    (doc_id, dl) rows."""
+    """mapInPandas generator: reserved #doclens# block rows → (doc_id,
+    dl) rows."""
     for pdf in batches:
-        outs = []
-        for r in pdf.itertuples():
-            ids = codec.delta_decode(r.docs).astype(np.int64)
-            dls = codec.vb_decode(r.dls).astype(np.int64)
-            outs.append(pd.DataFrame({"doc_id": ids, "dl": dls}))
-        if outs:
-            yield pd.concat(outs)
+        ids = codec.delta_decode_concat(pdf["docs"].tolist(), pdf["n"].to_numpy(np.int64))
+        dls = codec.vb_decode_concat(pdf["dls"].tolist())
+        yield pd.DataFrame({"doc_id": ids.astype(np.int64), "dl": dls.astype(np.int64)})
+
+
+def _reserved_rows(seg: DataFrame) -> DataFrame:
+    """The reserved #doclens# rows of segment rows.  They all sit in
+    bucket 0, so on a stored segment store the bucket filter prunes
+    every other bucket directory."""
+    return seg.filter((F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM))
 
 
 def _doclen_rows(seg: DataFrame) -> DataFrame:
-    """The (doc_id, dl) pairs of fragment rows, decoded from their
-    reserved #doclens# rows.  Those rows are all written to bucket 0,
-    so on a stored segment store the bucket filter prunes every other
-    bucket directory."""
-    return seg.filter(
-        (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
-    ).select("docs", "dls").mapInPandas(_decode_doclen_rows, "doc_id long, dl long")
+    """The (doc_id, dl) pairs of segment rows, decoded from their
+    reserved #doclens# rows."""
+    return _reserved_rows(seg).select("n", "docs", "dls").mapInPandas(
+        _decode_doclen_rows, "doc_id long, dl long"
+    )
 
 
 def _write_doclens(dl: DataFrame, paths: IndexPaths) -> dict:
@@ -336,6 +348,7 @@ def _finalize(
     :func:`_write_doclens` already wrote), then stats.json.  Returns
     the stats dict.  ``chunk_bits`` is None for a fragment-layout store,
     whose chunks are batch first-doc ids rather than doc-id ranges.
+    lineage/ has one row per (gen, chunk).
 
     The scans are metadata-only (ints + term; the posting blobs are
     never read thanks to column pruning and the precomputed bytes
@@ -346,9 +359,9 @@ def _finalize(
     from pyspark.sql import Observation
 
     meta = (
-        spark.read.parquet(paths.segments)
+        _read_segments(spark, paths.segments)
         .filter(F.col("term") != DOCLEN_TERM)
-        .select("term", "bucket", "chunk", "n", "bytes")
+        .select("term", "bucket", "gen", "chunk", "n", "bytes")
     )
 
     def _term_stats_pipeline():
@@ -365,7 +378,7 @@ def _finalize(
 
     def _lineage_pipeline():
         # per-chunk (shuffle-partition) lineage + metrics — north_rule
-        meta.groupBy("chunk").agg(
+        meta.groupBy("gen", "chunk").agg(
             F.sum("n").cast("long").alias("postings"),
             F.countDistinct("term").alias("terms"),
             F.sum("bytes").cast("long").alias("bytes"),
@@ -420,32 +433,46 @@ def _finish_build(
     spark: SparkSession,
     paths: IndexPaths,
     frags: DataFrame,
-    chunk_bits: int,
+    chunk_bits: int | None,
     n_buckets: int,
     stem: bool,
     t0: float,
+    *,
+    persist: bool = True,
+    sources: int = 1,
 ) -> dict:
-    """Build tail shared by :func:`build_index` and
-    :func:`build_index_resumable`: fragment rows → doclens/, canonical
-    segments/ via :func:`_compact_segments`, then :func:`_finalize`.
-    doclens/ is written first because the re-chunk's group split needs
-    avgdl.  ``frags`` is read twice, so it is persisted for the two
-    writes."""
+    """Tail of every builder but the fast path, and of
+    :func:`compact_index`: segment rows → doclens/, canonical segments/
+    (generation 0) via :func:`_compact_segments`, then :func:`_finalize`.
+    doclens/ is written first: the re-chunk's group split and a None
+    ``chunk_bits`` need n_docs/avgdl.  ``frags`` is read twice, so a
+    computed input is persisted; a stored one (``persist=False``) is
+    not, and its doclens read prunes to bucket 0."""
     from pyspark.storagelevel import StorageLevel
 
-    frags = frags.persist(StorageLevel.MEMORY_AND_DISK)
+    if persist:
+        frags = frags.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         corpus = _write_doclens(_doclen_rows(frags), paths)
-        _compact_segments(
-            frags, chunk_bits,
-            n_sub=group_subsplits(
-                corpus["n_docs"], corpus["avgdl"], chunk_bits, n_buckets
+        if chunk_bits is None:
+            chunk_bits = adaptive_chunk_bits(
+                corpus["n_docs"], spark.sparkContext.defaultParallelism
+            )
+        _write_gen0(
+            _compact_segments(
+                frags, chunk_bits,
+                n_sub=group_subsplits(
+                    corpus["n_docs"], corpus["avgdl"], chunk_bits, n_buckets
+                ),
             ),
-        ).write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
+            paths,
+        )
     finally:
-        frags.unpersist()
+        if persist:
+            frags.unpersist()
     return _finalize(
-        spark, paths, t0, corpus, n_buckets=n_buckets, stem=stem, chunk_bits=chunk_bits
+        spark, paths, t0, corpus, n_buckets=n_buckets, stem=stem,
+        chunk_bits=chunk_bits, sources=sources,
     )
 
 
@@ -470,7 +497,9 @@ def build_index(
     skippable shape.
 
     Layout (every builder and ``refresh_metadata`` write the same):
-      segments/   parquet, partitioned by bucket (term-hash pruning)
+      segments/   parquet, partitioned by gen (writer generation; 0
+                  for a build) and bucket (term-hash pruning); holds
+                  the reserved #doclens# postings
       term_stats/ parquet (term, df, bucket)
       doclens/    parquet (doc_id, dl)
       lineage/    parquet per-chunk metrics (postings, terms, bytes)
@@ -493,8 +522,7 @@ def build_index(
     :func:`build_index_resumable` runs the same encode in checkpointed
     slices and the same tail."""
     t0 = time.time()
-    docs = ensure_parallelism(docs)
-    n_docs_est = docs.count()  # parquet metadata read — cheap
+    n_docs_est = docs.count()
     par = docs.sparkSession.sparkContext.defaultParallelism
     if chunk_bits is None:
         chunk_bits = adaptive_chunk_bits(n_docs_est, par)
@@ -575,15 +603,15 @@ from ..functions.hashing import term_bucket as _bucket_of  # noqa: E402
 
 def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: int):
     """mapInPandas generator: one Arrow batch of (doc_id, text|html) →
-    finished segment block rows + one reserved #doclens# row per batch.
+    finished segment block rows, the batch's #doclens# run included.
 
     Each batch is sorted by doc_id in-python, so every (term, batch) run
     is a sorted doc-id run, and runs across batches are disjoint (a doc
     lives in exactly one batch).  chunk = the batch's first doc_id —
-    necessarily unique across batches.  That is everything the query
-    engine needs (per-chunk independent scoring, within-chunk blocks
-    ordered by first_doc); no global ordering, and therefore no input
-    shuffle, is required."""
+    necessarily unique across the batches of one generation.  That is
+    everything the query engine needs (per-chunk independent scoring,
+    within-chunk blocks ordered by first_doc); no global ordering, and
+    therefore no input shuffle, is required."""
     from .. import textproc
     from ..stemmer import porter_stem
 
@@ -606,7 +634,6 @@ def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: in
                 continue
             pdf = pdf.sort_values("doc_id")
             ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            chunk = int(ids[0])
             # tokenize (python — parity-bound), then aggregate postings
             # fully vectorized (a per-token dict/setdefault aggregation
             # was ~35 % of generator time at 1M scale — profiled;
@@ -618,77 +645,55 @@ def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: in
                 tok_lists.append(toks)
                 dls[i] = len(toks)
             total_toks = int(dls.sum())
-            if total_toks:
-                flat = np.fromiter(
-                    chain.from_iterable(tok_lists), dtype=object, count=total_toks
-                )
-                codes, uniq = pd.factorize(flat)  # C-level string hash
-                # factorize maps None/NaN to code -1, which would
-                # silently attribute that posting to the LAST unique
-                # term below; textproc tokenizers never yield None
-                # today — keep that a loud invariant, not an assumption
-                if codes.size and codes.min() < 0:
-                    raise ValueError(
-                        "tokenizer yielded a null token; factorize "
-                        "aggregation requires non-null tokens"
-                    )
-                tok_doc = np.repeat(ids, dls)
-                tok_dl = np.repeat(dls, dls)
-                doc_start = np.repeat(np.cumsum(dls) - dls, dls)
-                tok_pos = np.arange(total_toks, dtype=np.int64) - doc_start + 1
-                # stable sort by term code: tokens were emitted in
-                # (doc asc, position asc) order, so within each code
-                # run docs stay ascending and positions ascending
-                # within each (term, doc) posting — exactly the run
-                # shape _encode_sorted_runs requires
-                order = np.argsort(codes, kind="stable")
-                s_codes = codes[order]
-                s_docs = tok_doc[order]
-                s_pos = tok_pos[order]
-                new_post = np.r_[
-                    True, (s_codes[1:] != s_codes[:-1]) | (s_docs[1:] != s_docs[:-1])
-                ]
-                p_start = np.flatnonzero(new_post)
-                p_tfs = np.diff(np.r_[p_start, total_toks])
-                uniq_arr = np.asarray(uniq, dtype=object)
-                uniq_buckets = np.fromiter(
-                    (_bucket_of(t, n_buckets) for t in uniq_arr),
-                    dtype=np.int64, count=uniq_arr.size,
-                )
-                start_codes = s_codes[p_start]
-                frame = _encode_sorted_runs(
-                    uniq_arr[start_codes],
-                    uniq_buckets[start_codes],
-                    np.full(p_start.size, chunk, dtype=np.int64),
-                    s_docs[p_start],
-                    p_tfs,
-                    tok_dl[order][p_start],
-                    (s_pos, p_tfs),
-                )
-            else:
-                frame = pd.DataFrame([], columns=SEGMENT_COLS)
-            # reserved doclens row for this batch
-            doclen_row = pd.DataFrame(
-                [
-                    {
-                        "bucket": 0,
-                        "term": DOCLEN_TERM,
-                        "chunk": chunk,
-                        "first_doc": int(ids[0]),
-                        "last_doc": int(ids[-1]),
-                        "n": int(ids.size),
-                        "max_tf": 0,
-                        "min_dl": 0,
-                        "bytes": 0,
-                        "docs": codec.delta_encode(ids.astype(np.uint64)),
-                        "tfs": b"",
-                        "dls": codec.vb_encode(dls.astype(np.uint64)),
-                        "pos": b"",
-                    }
-                ],
-                columns=SEGMENT_COLS,
+            flat = np.fromiter(
+                chain.from_iterable(tok_lists), dtype=object, count=total_toks
             )
-            yield pd.concat([frame, doclen_row], ignore_index=True)
+            codes, uniq = pd.factorize(flat)  # C-level string hash
+            # factorize maps None/NaN to code -1, which would
+            # silently attribute that posting to the LAST unique
+            # term below; textproc tokenizers never yield None
+            # today — keep that a loud invariant, not an assumption
+            if codes.size and codes.min() < 0:
+                raise ValueError(
+                    "tokenizer yielded a null token; factorize "
+                    "aggregation requires non-null tokens"
+                )
+            tok_doc = np.repeat(ids, dls)
+            tok_dl = np.repeat(dls, dls)
+            doc_start = np.repeat(np.cumsum(dls) - dls, dls)
+            tok_pos = np.arange(total_toks, dtype=np.int64) - doc_start + 1
+            # stable sort by term code: tokens were emitted in
+            # (doc asc, position asc) order, so within each code
+            # run docs stay ascending and positions ascending
+            # within each (term, doc) posting — exactly the run
+            # shape _encode_sorted_runs requires
+            order = np.argsort(codes, kind="stable")
+            s_codes = codes[order]
+            s_docs = tok_doc[order]
+            s_pos = tok_pos[order]
+            new_post = np.ones(total_toks, dtype=bool)
+            new_post[1:] = (s_codes[1:] != s_codes[:-1]) | (s_docs[1:] != s_docs[:-1])
+            p_start = np.flatnonzero(new_post)
+            p_tfs = np.diff(np.r_[p_start, total_toks])
+            uniq_arr = np.asarray(uniq, dtype=object)
+            uniq_buckets = np.fromiter(
+                (_bucket_of(t, n_buckets) for t in uniq_arr),
+                dtype=np.int64, count=uniq_arr.size,
+            )
+            start_codes = s_codes[p_start]
+            # the #doclens# run (every doc, tf 0, bucket 0) leads the
+            # term runs; its postings carry no positions
+            n = ids.size
+            tfs = np.r_[np.zeros(n, dtype=np.int64), p_tfs]
+            yield _encode_sorted_runs(
+                np.r_[np.full(n, DOCLEN_TERM, dtype=object), uniq_arr[start_codes]],
+                np.r_[np.zeros(n, dtype=np.int64), uniq_buckets[start_codes]],
+                np.full(tfs.size, ids[0], dtype=np.int64),
+                np.r_[ids, s_docs[p_start]],
+                tfs,
+                np.r_[dls, tok_dl[order][p_start]],
+                (s_pos, tfs),
+            )
 
     return gen
 
@@ -706,8 +711,8 @@ def build_index_fast(
     """Single-pass, ZERO-shuffle index build (fast path).
 
     Shape: scan → mapInPandas emits *finished compressed block rows*
-    (plus per-batch doclen rows) → one parquet write partitioned by
-    bucket.  Neither postings nor raw documents are ever shuffled: each
+    (the #doclens# runs included) → one parquet write of generation 0,
+    partitioned by bucket.  Neither postings nor raw documents are ever shuffled: each
     Arrow batch is sorted by doc_id in-python, which preserves every
     invariant the query engine needs (disjoint per-chunk doc sets,
     within-chunk blocks as sorted runs).  Term skew is structurally
@@ -729,7 +734,7 @@ def build_index_fast(
     frags = src.mapInPandas(
         _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
     )
-    frags.write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
+    _write_gen0(frags, paths)
 
     # doclens/ reads the reserved rows back, so its write overlaps
     # term_stats/ and lineage/ in the tail
@@ -740,6 +745,20 @@ def build_index_fast(
 
 
 # ---- segment compaction / index merge -----------------------------------
+
+def _gather_positions(
+    flat: np.ndarray, counts: np.ndarray, sel: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The flat position runs (``counts`` per posting) of the postings
+    ``sel`` picks (a mask or an index order), in that order, and their
+    counts."""
+    sc = counts[sel]
+    if not flat.size:
+        return flat, sc
+    out_start = np.cumsum(sc) - sc
+    src_off = (np.cumsum(counts) - counts)[sel]
+    return flat[np.repeat(src_off - out_start, sc) + np.arange(int(sc.sum()))], sc
+
 
 def _compact_segments(
     seg: DataFrame, chunk_bits: int, n_sub: int = 1
@@ -767,8 +786,12 @@ def _compact_segments(
     — independent of the bucket hash, so terms inside one bucket spread
     across sub-keys).  A term's run for a chunk still lands entirely in
     one group, so the emitted rows are identical for any ``n_sub``; only
-    the shuffle-group size changes."""
-    src = seg.filter(F.col("term") != DOCLEN_TERM).select(
+    the shuffle-group size changes.
+
+    The #doclens# postings are re-chunked like any other term.  A block
+    with an empty ``tfs`` stream (the reserved rows of stores written
+    before doc lengths were postings) decodes as tf 0."""
+    src = seg.select(
         "bucket", "term", "n", "docs", "tfs", "dls", "pos",
         F.explode(
             F.sequence(
@@ -787,7 +810,10 @@ def _compact_segments(
         hi = lo + (1 << chunk_bits)
         n_arr = pdf["n"].to_numpy(dtype=np.int64)
         docs = codec.delta_decode_concat(pdf["docs"].tolist(), n_arr).astype(np.int64)
-        tfs = codec.vb_decode_concat(pdf["tfs"].tolist()).astype(np.int64)
+        tf_bufs = pdf["tfs"].tolist()
+        has_tf = np.fromiter((len(t) > 0 for t in tf_bufs), dtype=bool, count=len(tf_bufs))
+        tfs = np.zeros(docs.size, dtype=np.int64)
+        tfs[np.repeat(has_tf, n_arr)] = codec.vb_decode_concat(tf_bufs)
         dls = codec.vb_decode_concat(pdf["dls"].tolist()).astype(np.int64)
         terms = np.repeat(pdf["term"].to_numpy(), n_arr)
         # flat positions with per-posting delta resets (the wire format
@@ -814,21 +840,8 @@ def _compact_segments(
         # blocks carry out-of-range postings)
         keep = (docs >= lo) & (docs < hi)
         if not keep.all():
-            # gather the kept postings' variable-length position runs
-            kc = counts[keep]
-            if flat_pos.size:
-                src_off = (np.cumsum(counts) - counts)[keep]
-                tot = int(kc.sum())
-                out_start = np.cumsum(kc) - kc
-                idx = (
-                    np.repeat(src_off, kc)
-                    + np.arange(tot, dtype=np.int64)
-                    - np.repeat(out_start, kc)
-                )
-                flat_pos = flat_pos[idx]
-            terms, docs, tfs, dls, counts = (
-                terms[keep], docs[keep], tfs[keep], dls[keep], kc,
-            )
+            flat_pos, counts = _gather_positions(flat_pos, counts, keep)
+            terms, docs, tfs, dls = terms[keep], docs[keep], tfs[keep], dls[keep]
         if docs.size == 0:
             return pd.DataFrame([], columns=SEGMENT_COLS)
         # (term lexicographic, doc asc) — the posting-level path's sort
@@ -836,20 +849,6 @@ def _compact_segments(
         rank = np.empty(len(uniq), dtype=np.int64)
         rank[np.argsort(uniq)] = np.arange(len(uniq))
         order = np.lexsort((docs, rank[codes]))
-        if flat_pos.size:
-            oc = counts[order]
-            src_off = (np.cumsum(counts) - counts)[order]
-            tot = int(oc.sum())
-            out_start = np.cumsum(oc) - oc
-            idx = (
-                np.repeat(src_off, oc)
-                + np.arange(tot, dtype=np.int64)
-                - np.repeat(out_start, oc)
-            )
-            flat_sorted = flat_pos[idx]
-        else:
-            oc = counts[order]
-            flat_sorted = flat_pos
         n = docs.size
         return _encode_sorted_runs(
             terms[order],
@@ -858,7 +857,7 @@ def _compact_segments(
             docs[order],
             tfs[order],
             dls[order],
-            (flat_sorted, oc),
+            _gather_positions(flat_pos, counts, order),
         )
 
     if n_sub > 1:
@@ -877,47 +876,48 @@ def compact_index(
     chunk_bits: int | None = None,
 ) -> dict:
     """Merge one or more segment stores into ONE canonical compacted
-    index — the north-star's "externally merged" step, Spark-first:
-    instead of a driver-side k-way file merge, the compressed blocks are
-    re-chunked on the canonical doc-range key
-    (``chunk = doc_id >> chunk_bits``) through the SAME salted
-    (bucket, chunk) shuffle ``build_index`` ends with — one shuffle, term skew bounded by the chunk salt, arbitrary
-    input layout (streaming ``stream_batch=*`` appends, fast-path
-    per-batch fragments, or other compacted stores).
+    index (generation 0) — the north-star's "externally merged" step:
+    :func:`build_index`'s tail over the union of the sources' segments,
+    so the compressed blocks, #doclens# postings included, are
+    re-chunked on ``chunk = doc_id >> chunk_bits`` through one salted
+    (bucket, chunk) shuffle, whatever the input layout (streamed
+    generations, fragments, compacted stores, or a mix).
 
-    Use cases: collapsing a long-running incremental-ingest segment
-    store's accumulated micro-batch fragments (streaming/incremental.py
-    appends one fragment set per trigger — reads slow down as fragment
-    counts grow), and merging indexes built over disjoint corpus
-    partitions.  Sources MUST cover disjoint doc-id sets (the
-    incremental contract); overlapping ids would produce duplicate
-    postings.
+    Use cases: collapsing an incremental-ingest store's micro-batch
+    generations (reads slow down as their count grows), and merging
+    indexes built over disjoint corpus partitions.  Sources MUST cover
+    disjoint doc-id sets; overlapping ids would duplicate postings.
+    Each source needs a stats.json (``refresh_metadata`` writes one for
+    a streamed store) whose analyzer and bucket count match the
+    others', and #doclens# rows if it holds postings; otherwise
+    ``ValueError``.
 
     Returns the new stats dict; the output serves the unchanged query
     engine (equality with a from-scratch single build is pytest-gated,
     tests/test_index.py)."""
     t0 = time.time()
-    paths = IndexPaths(out_dir)
-    # per-root reads unioned: multiple partitioned roots in one
-    # read.parquet trip CONFLICTING_DIRECTORY_STRUCTURES.  Project to
-    # SEGMENT_COLS per root BEFORE the union — a streaming store
-    # carries an extra stream_batch partition column that would
-    # otherwise fail unionByName against a plain store ('arbitrary
-    # input layout' includes mixing them)
-    seg = None
-    for r in src_roots:
-        part = spark.read.parquet(IndexPaths(r).segments).select(*SEGMENT_COLS)
-        seg = part if seg is None else seg.unionByName(part)
-    n_docs_est = 0
-    tokens_est = 0.0
     stems: set[bool] = set()
     bucket_counts: set[int] = set()
+    seg = None
     for r in src_roots:
-        st = json.loads(fsio.read_text(spark, IndexPaths(r).stats))
-        n_docs_est += int(st["n_docs"])
-        tokens_est += float(st.get("avgdl", 0.0)) * int(st["n_docs"])
+        paths = IndexPaths(r)
+        if not fsio.exists(spark, paths.stats):
+            raise ValueError(
+                f"compact_index: {r} has no stats.json; run refresh_metadata on it first"
+            )
+        st = json.loads(fsio.read_text(spark, paths.stats))
         stems.add(bool(st.get("stem", False)))
         bucket_counts.add(int(st.get("n_buckets", DEFAULT_BUCKETS)))
+        # projected per root before the union: a store written without
+        # generations (or with the older stream_batch level) carries
+        # other partition columns
+        part = spark.read.parquet(paths.segments).select(*SEGMENT_COLS)
+        if _reserved_rows(part).isEmpty() and not part.isEmpty():
+            raise ValueError(
+                f"compact_index: {r} holds postings but no {DOCLEN_TERM} rows (compacted "
+                "before doc lengths were postings): rebuild it, or re-ingest and refresh_metadata"
+            )
+        seg = part if seg is None else seg.unionByName(part)
     # merging indexes with different analyzers or bucket layouts would
     # silently mix incompatible vocabularies / break query-side bucket
     # pruning — refuse loudly
@@ -930,24 +930,7 @@ def compact_index(
             f"compact_index: sources have different n_buckets {sorted(bucket_counts)}: "
             f"{src_roots}"
         )
-    stem = stems.pop()
-    n_buckets = bucket_counts.pop()
-    if chunk_bits is None:
-        chunk_bits = adaptive_chunk_bits(
-            n_docs_est, spark.sparkContext.defaultParallelism
-        )
-    _compact_segments(
-        seg,
-        chunk_bits,
-        n_sub=group_subsplits(
-            n_docs_est, tokens_est / max(n_docs_est, 1), chunk_bits, n_buckets
-        ),
-    ).write.mode("overwrite").partitionBy("bucket").parquet(paths.segments)
-    dls = None
-    for r in src_roots:
-        part = spark.read.parquet(IndexPaths(r).doclens)
-        dls = part if dls is None else dls.unionByName(part)
-    return _finalize(
-        spark, paths, t0, dls, n_buckets=n_buckets, stem=stem,
-        chunk_bits=chunk_bits, sources=len(src_roots),
+    return _finish_build(
+        spark, IndexPaths(out_dir), seg, chunk_bits, bucket_counts.pop(), stems.pop(),
+        t0, persist=False, sources=len(src_roots),
     )

@@ -3,23 +3,23 @@
 The reference has no streaming (SURVEY.md §2.8 — its crawler is a
 batch-iterative loop), but the fragment segment layout makes streaming
 ingestion natural: new documents are new doc-id batches, and a batch's
-blocks are self-contained segment rows — appending them never rewrites
-existing data (the same property Lucene exploits with per-segment
-flushes).
+blocks (its #doclens# postings included) are self-contained segment
+rows — appending them never rewrites existing data (the same property
+Lucene exploits with per-segment flushes).
 
 Shape: ``readStream`` (file source on the pages/documents directory) →
 ``foreachBatch`` → the same fragment generator as the batch fast path →
-parquet append partitioned by bucket.  ``refresh_metadata`` rebuilds
-doclens / term_stats / lineage / stats.json from the segment store
-(idempotent; run after a trigger or on a schedule).  Query engine is
-unchanged — a ``BM25Index`` opened after refresh sees all ingested docs.
+one generation, ``segments/gen=<batch_id + 1>/``, partitioned by
+bucket (builds and compactions own ``gen=0``).  ``refresh_metadata``
+rebuilds doclens / term_stats / lineage / stats.json from the segment
+store alone: idempotent, at any point (after a trigger or a
+compaction, or on a schedule).  A ``BM25Index`` opened after refresh
+sees all ingested docs.
 
 Exactly-once notes: the parquet file-source + checkpointLocation give
-exactly-once batch replay; segment rows are keyed by (chunk=first_doc)
-so a replayed batch appends duplicate chunks — to stay idempotent under
-retries each micro-batch writes to ``segments/stream_batch=<id>/``,
-which overwrite-replaces on replay (the standard idempotent-sink
-pattern for foreachBatch).
+exactly-once batch replay, and a replayed batch overwrite-replaces its
+own generation directory (the standard idempotent-sink pattern for
+foreachBatch), so it never appends duplicate postings.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def _append_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
         ib._make_fragment_gen(text_col, from_html, False, n_buckets),
         ib.SEGMENT_SCHEMA,
     )
-    # idempotent per-micro-batch sink: overwrite this batch's directory.
+    # idempotent per-micro-batch sink: overwrite this batch's generation.
     # repartition("bucket") first so each fragment lands as ONE file per
     # (batch, bucket) — the LSM sorted-run shape: without it every
     # map partition wrote its own file per bucket (~13x the files; the
@@ -52,7 +52,7 @@ def _append_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     # than compacted).  The per-batch shuffle is small (one micro-batch
     # of encoded blocks) and buys bounded read amplification: fragments
     # x n_buckets files, independent of ingest parallelism.
-    out = os.path.join(paths.segments, f"stream_batch={batch_id}")
+    out = os.path.join(paths.segments, f"gen={batch_id + 1}")
     (
         frags.repartition("bucket")
         .write.mode("overwrite")
@@ -96,8 +96,8 @@ def start_incremental_index(
 
 def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DEFAULT_BUCKETS) -> dict:
     """Rebuild doclens / term_stats / lineage / stats.json from the
-    segment store (idempotent).  Streamed batches are encoded
-    unstemmed, in the fragment layout."""
+    segment store's generations (idempotent).  Streamed batches are
+    encoded unstemmed, in the fragment layout."""
     t0 = time.time()
     paths = ib.IndexPaths(index_dir)
     dl = ib._doclen_rows(spark.read.parquet(paths.segments))
@@ -107,7 +107,7 @@ def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DE
 # ---------------------------------------------------------------------------
 # Auto-compaction policy
 #
-# A long-running ingest appends one fragment set per micro-batch; reads
+# A long-running ingest appends one generation per micro-batch; reads
 # degrade with fragment count (measured: batch-of-12 serving 12.6 s
 # on a 50-fragment store vs 1.13 s compacted — 42k files vs ~800).  The
 # cure (compact_index) exists; this is the POLICY that applies it, the
@@ -135,23 +135,20 @@ MAX_SEGMENT_FILES = 8192
 
 def fragment_stats(index_dir: str) -> dict:
     """Cheap driver-side metadata scan of a segment store: number of
-    micro-batch fragment sets (``stream_batch=*`` directories; a plain
-    batch-built store counts as one) and total parquet data files."""
+    generations holding data (``gen=*`` directories; a store written
+    without them counts one per ``stream_batch=*`` directory, or one)
+    and total parquet data files."""
     paths = ib.IndexPaths(index_dir)
-    fragments = set()
+    gens = set()
     n_files = 0
     for root, _dirs, files in os.walk(paths.segments):
         pq = sum(1 for f in files if f.endswith(".parquet"))
         if pq == 0:
             continue  # partition-dir skeleton / _SUCCESS only
-        rel = os.path.relpath(root, paths.segments)
-        frag = next(
-            (p for p in rel.split(os.sep) if p.startswith("stream_batch=")),
-            "",
-        )
-        fragments.add(frag)
+        top = os.path.relpath(root, paths.segments).split(os.sep)[0]
+        gens.add("" if top.startswith("bucket=") else top)
         n_files += pq
-    return {"n_fragments": len(fragments), "n_files": n_files}
+    return {"n_fragments": len(gens), "n_files": n_files}
 
 
 def should_compact(
@@ -175,9 +172,12 @@ def auto_compact(
     """Compact ``index_dir`` in place iff the policy triggers.
 
     Returns the new stats dict when compaction ran, ``None`` when the
-    store is healthy.  The ingest stream must be idle (between
-    ``availableNow`` drains, or with the query stopped): compaction
-    reads the whole segment store and replaces it.  The swap is
+    store is healthy.  Order: drain the ingest stream (between
+    ``availableNow`` drains, or with the query stopped), then
+    ``refresh_metadata`` (compaction reads the store's stats.json),
+    then compact: compaction reads the whole segment store and replaces
+    it with generation 0, and ingest resumes with the next batch id's
+    generation.  The swap is
     directory-rename atomic for readers holding the OLD file index —
     live handles re-open through stats.json mtime detection
     (BM25Index._refresh_if_rebuilt)."""

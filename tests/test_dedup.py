@@ -468,26 +468,29 @@ def test_ngram_routes_agree_at_rounding_boundary(spark, monkeypatch):
 
 def _planted_and_flood_docs(spark, kind):
     """``planted``: sliding 12-word windows (many pairs straddling
-    t=0.5, components of several sizes) plus unrelated singletons;
+    t=0.5, components of several sizes) plus unrelated singletons,
+    ``planted_int`` the same with an ``int`` doc_id column;
     ``flood``: identical documents plus unrelated ones."""
-    if kind == "planted":
+    if kind.startswith("planted"):
         words = [f"w{i}" for i in range(30)]
         rows = [(d, " ".join(words[(d * 3) % 18 : (d * 3) % 18 + 12])) for d in range(40)]
         rows += [(100 + d, f"unique{d} " * 8) for d in range(5)]
     else:
         rows = [(i, "same text body for every single copy here") for i in range(300)]
         rows += [(900 + i, " ".join(f"u{i}w{j}" for j in range(12))) for i in range(5)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    id_type = "int" if kind == "planted_int" else "long"
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
 
 
-@pytest.mark.parametrize("kind", ["planted", "flood"])
+@pytest.mark.parametrize("kind", ["planted", "flood", "planted_int"])
 @pytest.mark.parametrize("op", ["near_dup_groups", "minhash_dup_groups"])
 def test_group_tails_agree(spark, monkeypatch, op, kind):
     """The driver group tail (components solved by union-find, sizes
     and order computed in the driver) and the distributed tail (forced
     with a zero CC driver threshold, and for near_dup_groups with the
-    Spark pair placement) return the same rows, column names and types;
-    the driver tail's plan has no Exchange."""
+    Spark pair placement) return the same rows, column names and types,
+    also for an ``int`` doc_id column; the driver tail's plan has no
+    Exchange."""
     import functools
 
     from eaststorm_searchengine_spark.plans import inspect

@@ -163,3 +163,38 @@ def test_streaming_doclens_match_builders(spark, tmp_path):
     assert _same_rows(dl("term"), dl("stream"))
     assert (st_s["n_docs"], st_s["avgdl"]) == (st_b["n_docs"], st_b["avgdl"]) == (len(ROWS), 1.5)
     assert set(st_s) == set(st_b)
+
+
+def test_every_writer_lands_one_generation(spark, tmp_path):
+    """Every writer's segment files sit under
+    ``segments/gen=<g>/bucket=<b>/``: builds and compactions write
+    generation 0, streamed micro-batch b writes generation b + 1."""
+    import os
+    import re
+
+    from eaststorm_searchengine_spark.streaming import incremental
+
+    docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    root = {k: str(tmp_path / k) for k in ("term", "resumable", "fast", "compacted", "stream")}
+    build_index(spark, docs, root["term"])
+    build_index_resumable(spark, docs, root["resumable"])
+    build_index_fast(spark, docs, root["fast"])
+    compact_index(spark, [root["fast"]], root["compacted"])
+    for b in range(2):
+        incremental._append_batch(
+            docs.filter(docs.doc_id % 2 == b), b, root["stream"], "doc_id", "text", False, 16
+        )
+
+    def generations(name):
+        seg = os.path.join(root[name], "segments")
+        gens = set()
+        for d, _dirs, files in os.walk(seg):
+            if any(f.endswith(".parquet") for f in files):
+                rel = os.path.relpath(d, seg)
+                assert re.fullmatch(r"gen=\d+/bucket=\d+", rel), (name, rel)
+                gens.add(rel.split("/")[0])
+        return gens
+
+    for name in ("term", "resumable", "fast", "compacted"):
+        assert generations(name) == {"gen=0"}, name
+    assert generations("stream") == {"gen=1", "gen=2"}

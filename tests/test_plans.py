@@ -168,7 +168,7 @@ def test_field_indexes_single_pass_one_shuffle(spark):
     pages = corpus_mod.synthesize_pages(spark, SF)
     plan = inspect.formatted_plan(indexers.field_indexes(pages))
     # the corpus synthesis itself carries one RoundRobin repartition
-    # (the small-input _spread guard, a no-op at scale) — the gate is
+    # (the small-input ensure_parallelism guard, a no-op at scale) — the gate is
     # on HASH exchanges: exactly one, keyed (field, term)
     hash_ex = sorted(set(re.findall(r"hashpartitioning\([^)]*\)", plan)))
     assert len(hash_ex) == 1, f"hash exchanges {hash_ex}:\n{plan[:2000]}"
