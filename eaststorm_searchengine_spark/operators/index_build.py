@@ -12,15 +12,21 @@ real terms it holds the reserved ``#doclens#`` postings, every
 document's (doc_id, tf=0, dl) in bucket 0, token-less documents
 included, encoded and re-chunked like any other term.
 
-One pipeline, two steps:
+One encoder, two routes.  Every posting is encoded by
+:func:`_make_fragment_gen`: each encode unit of documents is tokenized
+once and turned into finished compressed block rows, its ``#doclens#``
+run included.  :func:`build_index` picks the unit by whether one
+doc-range chunk fits one Arrow batch
+(``spark.sql.execution.arrow.maxRecordsPerBatch``):
 
-1. **Fragment encode** (:func:`_make_fragment_gen`).  Each Arrow batch
-   of documents is tokenized once and turned into finished compressed
-   block rows, its ``#doclens#`` run included.
-2. **Canonical re-chunk** (:func:`_compact_segments`).  The compressed
+1. **Chunk-aligned single pass** (it fits).  The docs are partitioned
+   one chunk per partition, and the unit is the chunk: its rows are
+   the canonical rows, written straight to segments/.
+2. **Fragment encode → canonical re-chunk** (it does not, and every
+   other writer's path).  The unit is one Arrow batch; the compressed
    fragment blocks are shuffled on (bucket, chunk) and re-encoded per
-   group; the output depends only on the posting set, not on how it
-   was fragmented.
+   group (:func:`_compact_segments`).  The output depends only on the
+   posting set, not on how it was fragmented.
 
 Every entry point ends in the same metadata tail (:func:`_finalize`):
 doclens/ from the reserved postings, term_stats/ and lineage/ from the
@@ -52,10 +58,12 @@ Scale design (the 10^12-doc story):
 
 Entry points (all serve the identical query engine, equality-tested):
 
-* ``build_index`` — range-partition → fragment encode → re-chunk.
-* ``build_index_resumable`` — the same, with the fragment encode run as
-  checkpointed doc-id-range slices staged under ``postings/``; its
-  segments/, doclens/ and term_stats/ are row-equal to ``build_index``'s.
+* ``build_index`` — chunk-partition → chunk encode when a chunk fits
+  a batch, else range-partition → fragment encode → re-chunk.
+* ``build_index_resumable`` — the second route, with the fragment
+  encode run as checkpointed doc-id-range slices staged under
+  ``postings/``; its segments/, doclens/ and term_stats/ are row-equal
+  to ``build_index``'s.
 * ``build_index_fast`` — the fragment encode alone, zero shuffle:
   fragment-layout segments; measured 0.94 scaling efficiency 2→8 cores
   at 1M docs.
@@ -162,9 +170,10 @@ class IndexPaths:
 
 def _read_segments(spark: SparkSession, path: str) -> DataFrame:
     """A segment store with its ``gen`` column; a store written without
-    ``gen=`` directories reads as generation 0."""
-    seg = spark.read.parquet(path)
-    return seg if "gen" in seg.columns else seg.withColumn("gen", F.lit(0))
+    ``gen=`` directories reads as generation 0.  The schema is known,
+    so the read runs no schema-inference job."""
+    seg = spark.read.schema(SEGMENT_SCHEMA + ", gen int").parquet(path)
+    return seg.withColumn("gen", F.coalesce("gen", F.lit(0)))
 
 
 def _write_gen0(seg: DataFrame, paths: IndexPaths) -> None:
@@ -441,9 +450,10 @@ def _finish_build(
     persist: bool = True,
     sources: int = 1,
 ) -> dict:
-    """Tail of every builder but the fast path, and of
-    :func:`compact_index`: segment rows → doclens/, canonical segments/
-    (generation 0) via :func:`_compact_segments`, then :func:`_finalize`.
+    """Tail of :func:`build_index`'s re-chunk route,
+    :func:`build_index_resumable` and :func:`compact_index`: segment
+    rows → doclens/, canonical segments/ (generation 0) via
+    :func:`_compact_segments`, then :func:`_finalize`.
     doclens/ is written first: the re-chunk's group split and a None
     ``chunk_bits`` need n_docs/avgdl.  ``frags`` is read twice, so a
     computed input is persisted; a stored one (``persist=False``) is
@@ -509,28 +519,71 @@ def build_index(
                   build_sec, sources (segment stores merged; 1 for a
                   build)
 
-    Shape: the heavy bytes move ONCE.  The raw docs are
-    range-partitioned by doc_id (one shuffle of the corpus), the fast
-    path's single tokenize+aggregate+encode pass turns each sorted
-    batch into finished compressed fragment blocks, and the canonical
-    term-clustered (bucket, chunk) layout comes from re-chunking those
-    COMPRESSED blocks through :func:`_compact_segments` — the second
-    exchange carries index bytes, not exploded postings.  Staging and
-    shuffling exploded posting rows (term, doc_id, tf, positions-list,
-    …) instead measured 11.5 s of a 20.7 s isolated build at 500k docs
-    for the tokenize+write of the staged form alone.
-    :func:`build_index_resumable` runs the same encode in checkpointed
-    slices and the same tail."""
+    Shape: the heavy bytes move ONCE, and which route moves them
+    depends on whether one doc-range chunk fits one Arrow batch
+    (:func:`_chunk_fits_batch`: at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents, ≤ 0
+    meaning unlimited — the memory the fragment encode holds anyway).
+
+    * **Chunk-aligned single pass** (a chunk fits a batch).  The raw
+      docs are partitioned by chunk ``doc_id >> chunk_bits`` (one
+      partition per chunk, no sampling job) and sorted by doc_id; the
+      chunk-mode encode (:func:`_make_fragment_gen`) turns each chunk
+      straight into its canonical block rows, written as generation 0.
+      Every posting is encoded once, and the only shuffle carries the
+      raw docs.
+    * **Fragments → re-chunk** (a chunk spans several batches).  The
+      raw docs are range-partitioned by doc_id, each sorted batch
+      becomes finished compressed fragment blocks, and the canonical
+      term-clustered (bucket, chunk) layout comes from re-chunking
+      those COMPRESSED blocks through :func:`_compact_segments` — the
+      second exchange carries index bytes, not exploded postings.
+      Staging and shuffling exploded posting rows (term, doc_id, tf,
+      positions-list, …) instead measured 11.5 s of a 20.7 s isolated
+      build at 500k docs for the tokenize+write of the staged form
+      alone.
+
+    Both routes write the same segments/, doclens/, term_stats/ and
+    lineage/ rows (pytest-gated).  :func:`build_index_resumable` runs
+    the fragment encode in checkpointed slices and the second route's
+    tail."""
     t0 = time.time()
     n_docs_est = docs.count()
     par = docs.sparkSession.sparkContext.defaultParallelism
     if chunk_bits is None:
         chunk_bits = adaptive_chunk_bits(n_docs_est, par)
+    paths = IndexPaths(out_dir)
+    if _chunk_fits_batch(spark, n_docs_est, chunk_bits):
+        # one partition per chunk when the ids are dense
+        parts = max(1, -(-n_docs_est >> chunk_bits))
+        src = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col))
+        src = src.repartitionById(
+            parts, F.pmod(F.shiftright("doc_id", chunk_bits), F.lit(parts)).cast("int")
+        ).sortWithinPartitions("doc_id")
+        _write_gen0(
+            src.mapInPandas(
+                _make_fragment_gen(text_col, from_html, stem, n_buckets, chunk_bits),
+                SEGMENT_SCHEMA,
+            ),
+            paths,
+        )
+        return _finalize(
+            spark, paths, t0, _doclen_rows(_read_segments(spark, paths.segments)),
+            n_buckets=n_buckets, stem=stem, chunk_bits=chunk_bits,
+        )
     frags = _range_fragments(
         docs, id_col, text_col, from_html, stem, n_buckets,
         parts=max(par * 2, n_docs_est // (1 << chunk_bits) + 1),
     )
-    return _finish_build(spark, IndexPaths(out_dir), frags, chunk_bits, n_buckets, stem, t0)
+    return _finish_build(spark, paths, frags, chunk_bits, n_buckets, stem, t0)
+
+
+def _chunk_fits_batch(spark: SparkSession, n_docs: int, chunk_bits: int) -> bool:
+    """Whether one doc-range chunk holds no more documents than one
+    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``; ≤ 0
+    is unlimited): :func:`build_index`'s single-pass gate."""
+    cap = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    return cap <= 0 or min(n_docs, 1 << chunk_bits) <= cap
 
 
 def build_index_resumable(
@@ -601,17 +654,31 @@ def build_index_resumable(
 from ..functions.hashing import term_bucket as _bucket_of  # noqa: E402
 
 
-def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: int):
-    """mapInPandas generator: one Arrow batch of (doc_id, text|html) →
-    finished segment block rows, the batch's #doclens# run included.
+def _make_fragment_gen(
+    text_col: str, from_html: bool, stem: bool, n_buckets: int,
+    chunk_bits: int | None = None,
+):
+    """mapInPandas generator: Arrow batches of (doc_id, text|html) →
+    finished segment block rows, each encode unit's #doclens# run
+    included.  Within a unit, term runs are in lexicographic order and
+    doc ids ascend within each run.
 
-    Each batch is sorted by doc_id in-python, so every (term, batch) run
-    is a sorted doc-id run, and runs across batches are disjoint (a doc
-    lives in exactly one batch).  chunk = the batch's first doc_id —
-    necessarily unique across the batches of one generation.  That is
-    everything the query engine needs (per-chunk independent scoring,
-    within-chunk blocks ordered by first_doc); no global ordering, and
-    therefore no input shuffle, is required."""
+    Fragment mode (``chunk_bits`` None): the unit is one Arrow batch,
+    sorted by doc_id in-python, so every (term, batch) run is a sorted
+    doc-id run, and runs across batches are disjoint (a doc lives in
+    exactly one batch).  chunk = the batch's first doc_id — necessarily
+    unique across the batches of one generation.  That is everything
+    the query engine needs (per-chunk independent scoring, within-chunk
+    blocks ordered by first_doc); no global ordering, and therefore no
+    input shuffle, is required.
+
+    Chunk mode (``chunk_bits`` set): the input arrives sorted by doc_id,
+    each chunk's docs in one partition.  The unit is one doc-range chunk
+    ``doc_id >> chunk_bits``, regrouped from consecutive batches (a chunk
+    may span batches, a batch may end one chunk and start the next), and
+    that is its chunk key, so the rows are exactly
+    :func:`_compact_segments`' canonical rows.  It holds one chunk at a
+    time: as much memory as fragment mode when a chunk fits a batch."""
     from .. import textproc
     from ..stemmer import porter_stem
 
@@ -626,76 +693,97 @@ def _make_fragment_gen(text_col: str, from_html: bool, stem: bool, n_buckets: in
             toks = [porter_stem(t) for t in toks]
         return toks
 
-    def gen(batches):
+    def encode(pdf: pd.DataFrame, chunk: int) -> pd.DataFrame:
         from itertools import chain
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("doc_id")
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            # tokenize (python — parity-bound), then aggregate postings
-            # fully vectorized (a per-token dict/setdefault aggregation
-            # was ~35 % of generator time at 1M scale — profiled;
-            # factorize + one stable int argsort avoids it)
-            tok_lists = []
-            dls = np.empty(ids.size, dtype=np.int64)
-            for i, raw in enumerate(pdf[text_col]):
-                toks = tokenizer(raw)
-                tok_lists.append(toks)
-                dls[i] = len(toks)
-            total_toks = int(dls.sum())
-            flat = np.fromiter(
-                chain.from_iterable(tok_lists), dtype=object, count=total_toks
+        pdf = pdf.sort_values("doc_id")
+        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        # tokenize (python — parity-bound), then aggregate postings
+        # fully vectorized (a per-token dict/setdefault aggregation
+        # was ~35 % of generator time at 1M scale — profiled;
+        # factorize + one stable int argsort avoids it)
+        tok_lists = []
+        dls = np.empty(ids.size, dtype=np.int64)
+        for i, raw in enumerate(pdf[text_col]):
+            toks = tokenizer(raw)
+            tok_lists.append(toks)
+            dls[i] = len(toks)
+        total_toks = int(dls.sum())
+        flat = np.fromiter(
+            chain.from_iterable(tok_lists), dtype=object, count=total_toks
+        )
+        # C-level string hash; sort=True numbers the terms in
+        # lexicographic order, the canonical run order
+        codes, uniq = pd.factorize(flat, sort=True)
+        # factorize maps None/NaN to code -1, which would
+        # silently attribute that posting to the LAST unique
+        # term below; textproc tokenizers never yield None
+        # today — keep that a loud invariant, not an assumption
+        if codes.size and codes.min() < 0:
+            raise ValueError(
+                "tokenizer yielded a null token; factorize "
+                "aggregation requires non-null tokens"
             )
-            codes, uniq = pd.factorize(flat)  # C-level string hash
-            # factorize maps None/NaN to code -1, which would
-            # silently attribute that posting to the LAST unique
-            # term below; textproc tokenizers never yield None
-            # today — keep that a loud invariant, not an assumption
-            if codes.size and codes.min() < 0:
-                raise ValueError(
-                    "tokenizer yielded a null token; factorize "
-                    "aggregation requires non-null tokens"
-                )
-            tok_doc = np.repeat(ids, dls)
-            tok_dl = np.repeat(dls, dls)
-            doc_start = np.repeat(np.cumsum(dls) - dls, dls)
-            tok_pos = np.arange(total_toks, dtype=np.int64) - doc_start + 1
-            # stable sort by term code: tokens were emitted in
-            # (doc asc, position asc) order, so within each code
-            # run docs stay ascending and positions ascending
-            # within each (term, doc) posting — exactly the run
-            # shape _encode_sorted_runs requires
-            order = np.argsort(codes, kind="stable")
-            s_codes = codes[order]
-            s_docs = tok_doc[order]
-            s_pos = tok_pos[order]
-            new_post = np.ones(total_toks, dtype=bool)
-            new_post[1:] = (s_codes[1:] != s_codes[:-1]) | (s_docs[1:] != s_docs[:-1])
-            p_start = np.flatnonzero(new_post)
-            p_tfs = np.diff(np.r_[p_start, total_toks])
-            uniq_arr = np.asarray(uniq, dtype=object)
-            uniq_buckets = np.fromiter(
-                (_bucket_of(t, n_buckets) for t in uniq_arr),
-                dtype=np.int64, count=uniq_arr.size,
-            )
-            start_codes = s_codes[p_start]
-            # the #doclens# run (every doc, tf 0, bucket 0) leads the
-            # term runs; its postings carry no positions
-            n = ids.size
-            tfs = np.r_[np.zeros(n, dtype=np.int64), p_tfs]
-            yield _encode_sorted_runs(
-                np.r_[np.full(n, DOCLEN_TERM, dtype=object), uniq_arr[start_codes]],
-                np.r_[np.zeros(n, dtype=np.int64), uniq_buckets[start_codes]],
-                np.full(tfs.size, ids[0], dtype=np.int64),
-                np.r_[ids, s_docs[p_start]],
-                tfs,
-                np.r_[dls, tok_dl[order][p_start]],
-                (s_pos, tfs),
-            )
+        tok_doc = np.repeat(ids, dls)
+        tok_dl = np.repeat(dls, dls)
+        doc_start = np.repeat(np.cumsum(dls) - dls, dls)
+        tok_pos = np.arange(total_toks, dtype=np.int64) - doc_start + 1
+        # stable sort by term code: tokens were emitted in
+        # (doc asc, position asc) order, so within each code
+        # run docs stay ascending and positions ascending
+        # within each (term, doc) posting — exactly the run
+        # shape _encode_sorted_runs requires
+        order = np.argsort(codes, kind="stable")
+        s_codes = codes[order]
+        s_docs = tok_doc[order]
+        s_pos = tok_pos[order]
+        new_post = np.ones(total_toks, dtype=bool)
+        new_post[1:] = (s_codes[1:] != s_codes[:-1]) | (s_docs[1:] != s_docs[:-1])
+        p_start = np.flatnonzero(new_post)
+        p_tfs = np.diff(np.r_[p_start, total_toks])
+        uniq_arr = np.asarray(uniq, dtype=object)
+        uniq_buckets = np.fromiter(
+            (_bucket_of(t, n_buckets) for t in uniq_arr),
+            dtype=np.int64, count=uniq_arr.size,
+        )
+        start_codes = s_codes[p_start]
+        # the #doclens# run (every doc, tf 0, bucket 0) leads the
+        # term runs ('#' sorts before every token); its postings
+        # carry no positions
+        n = ids.size
+        tfs = np.r_[np.zeros(n, dtype=np.int64), p_tfs]
+        return _encode_sorted_runs(
+            np.r_[np.full(n, DOCLEN_TERM, dtype=object), uniq_arr[start_codes]],
+            np.r_[np.zeros(n, dtype=np.int64), uniq_buckets[start_codes]],
+            np.full(tfs.size, chunk, dtype=np.int64),
+            np.r_[ids, s_docs[p_start]],
+            tfs,
+            np.r_[dls, tok_dl[order][p_start]],
+            (s_pos, tfs),
+        )
 
-    return gen
+    def fragment_gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield encode(pdf, int(pdf["doc_id"].min()))
+
+    def chunk_gen(batches):
+        held, cur = [], None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ch = pdf["doc_id"].to_numpy(dtype=np.int64) >> chunk_bits
+            cuts = np.flatnonzero(ch[1:] != ch[:-1]) + 1
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(pdf)]):
+                if held and ch[lo] != cur:
+                    yield encode(pd.concat(held), cur)
+                    held = []
+                cur = int(ch[lo])
+                held.append(pdf.iloc[lo:hi])
+        if held:
+            yield encode(pd.concat(held), cur)
+
+    return fragment_gen if chunk_bits is None else chunk_gen
 
 
 def build_index_fast(
@@ -720,10 +808,11 @@ def build_index_fast(
     stopword's postings are just more block rows spread across all
     batches — the classic MapReduce/Lucene per-segment indexing shape.
 
-    ``build_index`` and ``build_index_resumable`` run this same encode
-    and then re-chunk it into the canonical term-clustered (bucket,
-    chunk) layout; all of them serve the identical query engine
-    (equality tested).
+    ``build_index_resumable`` (and ``build_index`` when a chunk spans
+    several batches) run this same encode and then re-chunk it into the
+    canonical term-clustered (bucket, chunk) layout; ``build_index``'s
+    single pass runs it per chunk.  All of them serve the identical
+    query engine (equality tested).
     """
     t0 = time.time()
     paths = IndexPaths(out_dir)
@@ -739,7 +828,7 @@ def build_index_fast(
     # doclens/ reads the reserved rows back, so its write overlaps
     # term_stats/ and lineage/ in the tail
     return _finalize(
-        spark, paths, t0, _doclen_rows(spark.read.parquet(paths.segments)),
+        spark, paths, t0, _doclen_rows(_read_segments(spark, paths.segments)),
         n_buckets=n_buckets, stem=stem,
     )
 
@@ -911,7 +1000,7 @@ def compact_index(
         # projected per root before the union: a store written without
         # generations (or with the older stream_batch level) carries
         # other partition columns
-        part = spark.read.parquet(paths.segments).select(*SEGMENT_COLS)
+        part = _read_segments(spark, paths.segments).select(*SEGMENT_COLS)
         if _reserved_rows(part).isEmpty() and not part.isEmpty():
             raise ValueError(
                 f"compact_index: {r} holds postings but no {DOCLEN_TERM} rows (compacted "

@@ -52,3 +52,12 @@ def exists(spark: SparkSession, path: str) -> bool:
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, hpath = _fs(spark, path)
     fs.mkdirs(hpath)
+
+
+def list_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the entries directly under ``path``; [] when it does
+    not exist."""
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(hpath)]

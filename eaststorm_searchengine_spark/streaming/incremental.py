@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import index_build as ib
+from ..sources import fsio
 
 
 def _append_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -73,7 +74,22 @@ def start_incremental_index(
     n_buckets: int = ib.DEFAULT_BUCKETS,
     available_now: bool = True,
 ):
-    """Start (and with ``available_now`` drain) the ingestion stream."""
+    """Start (and with ``available_now`` drain) the ingestion stream.
+
+    ``index_dir`` must be new or a store with generations: a segments/
+    written without ``gen=`` directories would sit beside the streamed
+    ``gen=<b+1>`` ones, and the next read of the store would fail on
+    the conflicting partition columns, so it raises ``ValueError``."""
+    levels = {
+        n.split("=", 1)[0]
+        for n in fsio.list_names(spark, ib.IndexPaths(index_dir).segments)
+        if "=" in n
+    }
+    if levels - {"gen"}:
+        raise ValueError(
+            f"{index_dir}: segments/ has no gen= level (written before generations); "
+            "compact_index an older fragment store first, or rebuild an older compacted one"
+        )
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 4)
@@ -100,7 +116,7 @@ def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DE
     encoded unstemmed, in the fragment layout."""
     t0 = time.time()
     paths = ib.IndexPaths(index_dir)
-    dl = ib._doclen_rows(spark.read.parquet(paths.segments))
+    dl = ib._doclen_rows(ib._read_segments(spark, paths.segments))
     return ib._finalize(spark, paths, t0, dl, n_buckets=n_buckets, stem=False)
 
 

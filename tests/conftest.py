@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -21,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """``with arrow_batch_rows(n):`` runs its body with
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` set to ``n``, the
+    bound ``build_index`` gates its single pass on."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    @contextlib.contextmanager
+    def rows(n: int):
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return rows

@@ -113,6 +113,62 @@ def test_builders_agree_row_for_row(spark, tmp_path, corpus):
     assert {(st["k1"], st["b"]) for st in stats.values()} == {(K1, B)}
 
 
+@pytest.mark.parametrize(
+    "corpus,chunk_bits,ids,single_rows,rechunk_rows",
+    [
+        ("edge", None, "doc_id", 10000, 2),
+        ("sf0.001", None, "doc_id", 10000, 64),
+        # 50 chunks of 10 docs (64-id span) whose ids all send them to
+        # one partition: 64-row batches split chunks and carry several
+        ("sf0.001", 6, "doc_id div 10 * 512 + doc_id % 10", 64, 16),
+    ],
+)
+def test_build_routes_agree(
+    spark, tmp_path, monkeypatch, arrow_batch_rows,
+    corpus, chunk_bits, ids, single_rows, rechunk_rows,
+):
+    """build_index's two routes — the chunk-aligned single pass (a chunk
+    fits one Arrow batch) and fragments → re-chunk (it does not) — write
+    row-equal segments/, doclens/, term_stats/ and lineage/ and the
+    same stats.json but build_sec.  A spy on the re-chunk proves which
+    route ran."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from eaststorm_searchengine_spark.operators import index_build as ib
+
+    if corpus == "edge":
+        docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    else:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs = docs.withColumn("doc_id", F.expr(ids))
+    calls = []
+    compact = ib._compact_segments
+    monkeypatch.setattr(
+        ib, "_compact_segments", lambda *a, **kw: calls.append(1) or compact(*a, **kw)
+    )
+    root = {k: str(tmp_path / k) for k in ("single", "rechunk")}
+    stats = {}
+    for name, rows in (("single", single_rows), ("rechunk", rechunk_rows)):
+        with arrow_batch_rows(rows):
+            stats[name] = build_index(spark, docs, root[name], chunk_bits=chunk_bits)
+        assert len(calls) == (name == "rechunk"), name
+
+    for sub in ("segments", "doclens", "term_stats", "lineage"):
+        a, b = (spark.read.parquet(f"{root[k]}/{sub}") for k in ("single", "rechunk"))
+        if sub == "segments":
+            a, b = a.select(*SEGMENT_COLS, "gen"), b.select(*SEGMENT_COLS, "gen")
+        assert not a.isEmpty() and _same_rows(a, b), (corpus, sub)
+    for st in stats.values():
+        del st["build_sec"]
+    assert stats["single"] == stats["rechunk"]
+    on_disk = [json.load(open(f"{root[k]}/stats.json")) for k in ("single", "rechunk")]
+    assert [{k: v for k, v in st.items() if k != "build_sec"} for st in on_disk] == [
+        stats["single"], stats["rechunk"]
+    ]
+
+
 def test_resumable_honours_from_html_and_stem(spark, tmp_path):
     """build_index_resumable extracts and stems like build_index: on
     HTML pages with from_html=True and stem=True its segment rows equal

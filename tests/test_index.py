@@ -414,12 +414,16 @@ def test_group_subsplits_rule():
     assert group_subsplits(10**12, 300.0, 10, 16) == 1
 
 
-def test_build_index_with_forced_subsplits_serves_identically(spark, tmp_path, monkeypatch):
+def test_build_index_with_forced_subsplits_serves_identically(
+    spark, tmp_path, monkeypatch, arrow_batch_rows
+):
     """End-to-end wiring of ADVICE r06 #1: force group_subsplits > 1
     through the REAL build_index caller (tiny MAX_GROUP_POSTINGS) and
     assert the index byte-equals a default build — segments, stats and
-    served results.  A spy on the re-chunk proves the build really ran
-    with sub-splits (the cap must be read at call time)."""
+    served results.  Arrow batches smaller than a chunk force the
+    re-chunk route (the default build here is the single pass); a spy
+    on the re-chunk proves the build really ran with sub-splits (the
+    cap must be read at call time)."""
     from eaststorm_searchengine_spark.operators import index_build as ib
     from eaststorm_searchengine_spark.operators.bm25 import BM25Index
 
@@ -437,7 +441,8 @@ def test_build_index_with_forced_subsplits_serves_identically(spark, tmp_path, m
 
     monkeypatch.setattr(ib, "_compact_segments", spy)
     root_b = str(tmp_path / "idx_subsplit")
-    ib.build_index(spark, docs, root_b)
+    with arrow_batch_rows(64):
+        ib.build_index(spark, docs, root_b)
     assert len(n_subs) == 1 and n_subs[0] > 1, n_subs
 
     def seg_rows(root):
@@ -452,3 +457,46 @@ def test_build_index_with_forced_subsplits_serves_identically(spark, tmp_path, m
     a = [tuple(r) for r in BM25Index(spark, root_a).search(q, k=10, score_round=4).collect()]
     b = [tuple(r) for r in BM25Index(spark, root_b).search(q, k=10, score_round=4).collect()]
     assert a == b and len(a) > 0
+
+
+def test_chunk_mode_regroups_chunks_across_batches():
+    """The chunk-mode encode emits one unit per doc-range chunk however
+    the chunk arrives: split over several Arrow batches, or sharing a
+    batch with the tail of the previous chunk.  Each unit equals the
+    fragment encode of that chunk's docs as one batch, keyed
+    ``doc_id >> chunk_bits``."""
+    from eaststorm_searchengine_spark.operators.index_build import _make_fragment_gen
+
+    rng = np.random.default_rng(7)
+    words = np.array(["alpha", "beta", "gamma", "delta", "eps", "zeta"], dtype=object)
+    ids = np.arange(0, 120, 3, dtype=np.int64)  # 40 docs, chunks of 16 ids
+    texts = [" ".join(rng.choice(words, size=rng.integers(0, 300))) for _ in ids]
+    pdf = pd.DataFrame({"doc_id": ids, "text": texts})
+    chunk_of = ids >> 4
+
+    def rows(out, rekey=False):
+        out = pd.concat(out, ignore_index=True)
+        if rekey:
+            out["chunk"] = out["chunk"].to_numpy() >> 4
+        return sorted(
+            tuple(bytes(v) if isinstance(v, bytes) else v for v in r)
+            for r in out[SEGMENT_COLS].itertuples(index=False)
+        )
+
+    per_chunk = [pdf[chunk_of == c] for c in np.unique(chunk_of)]
+    # chunk 0 (six docs) over three batches, the third also holding
+    # the head of chunk 1; an empty batch in between
+    split = [pdf.iloc[0:2], pdf.iloc[2:4], pdf.iloc[0:0], pdf.iloc[4:9], pdf.iloc[9:25],
+             pdf.iloc[25:]]
+    chunked = _make_fragment_gen("text", False, False, 4, chunk_bits=4)
+    units = list(chunked(iter(split)))
+    assert len(units) == len(per_chunk) == 8
+    assert [int(u["chunk"].iloc[0]) for u in units] == list(np.unique(chunk_of))
+    for u in units:
+        for col in ("first_doc", "last_doc"):
+            assert (u[col].to_numpy() >> 4 == u["chunk"].to_numpy()).all()
+        runs = list(dict.fromkeys(u["term"]))
+        assert runs == sorted(runs) and runs[0] == DOCLEN_TERM
+    assert rows(units) == rows(chunked(iter(per_chunk)))
+    fragments = _make_fragment_gen("text", False, False, 4)
+    assert rows(units) == rows(fragments(iter(per_chunk)), rekey=True)

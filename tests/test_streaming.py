@@ -368,3 +368,34 @@ def test_older_fragment_store_serves_and_compacts(spark, tmp_path):
         )
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), sub
     assert _search(spark, f"{root}/old_compacted", q) == _search(spark, f"{root}/new", q)
+
+
+@pytest.mark.parametrize("layout", ["bucket=0", "stream_batch=0/bucket=0"])
+def test_stream_refuses_store_without_generations(spark, tmp_path, layout):
+    """Streaming into a store whose segments/ has no ``gen=`` level
+    (written before generations) raises ValueError before the stream
+    starts, and leaves the store as it was: a ``gen=<b+1>`` directory
+    beside ``bucket=*`` would make every later read of the store fail
+    on conflicting partition columns."""
+    import os
+
+    import pandas as pd
+
+    from eaststorm_searchengine_spark.operators.index_build import _make_fragment_gen
+
+    docs = pd.DataFrame({"doc_id": [0, 1], "text": ["alpha beta", "beta gamma"]})
+    rows = next(_make_fragment_gen("text", False, False, 1)(iter([docs])))
+    seg = tmp_path / "idx" / "segments"
+    os.makedirs(seg / layout)
+    rows.drop(columns="bucket").to_parquet(seg / layout / "part-0.parquet", index=False)
+    docs.to_parquet(tmp_path / "in.parquet", index=False)
+    with pytest.raises(ValueError, match="no gen= level"):
+        incremental.start_incremental_index(
+            spark,
+            input_dir=str(tmp_path / "in.parquet"),
+            index_dir=str(tmp_path / "idx"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            schema="doc_id long, text string",
+        )
+    assert sorted(os.listdir(seg)) == [layout.split("/")[0]]
+    assert not (tmp_path / "ckpt").exists()
