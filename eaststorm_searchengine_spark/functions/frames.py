@@ -34,14 +34,18 @@ def local_frame(spark: SparkSession, rows: list, ddl_schema: str) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def ensure_parallelism(df: DataFrame, min_factor: int = 2) -> DataFrame:
+ENSURE_PARALLELISM_FACTOR = 2
+
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small-input guard: a compact parquet input coalesces to a
     handful of scan splits (maxPartitionBytes), which would run the
     expensive per-row Python pass on 1-2 cores.  Repartition up to
-    cores×factor when the scan gives fewer — the raw-input shuffle is
-    cheap at this size.  At production scale (thousands of splits)
-    this is a no-op, so no 100-TB reshuffle ever happens."""
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    cores × ``ENSURE_PARALLELISM_FACTOR`` when the scan gives fewer —
+    the raw-input shuffle is cheap at this size.  At production scale
+    (thousands of splits) this is a no-op, so no 100-TB reshuffle ever
+    happens."""
+    target = df.sparkSession.sparkContext.defaultParallelism * ENSURE_PARALLELISM_FACTOR
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -1,27 +1,29 @@
-"""Shared TakeOrdered-shaped local prune.
+"""The per-query top-k tail: one order for the local prune and the rank
+window.
 
-Every per-query top-k tail in the engine (BM25 DataFrame scorer, the
-three ANN paths, the composite ranker) ends in a global rank window
-partitioned by query — a single-reducer sort per query that would scale
-with the corpus.  The cure is the same everywhere: each partition first
-keeps its LOCAL per-group top-k under the exact total order the global
-window uses.  Correctness: any row in the global top-k is necessarily
-within its own partition's top-k under the same total order, so the
-prune is a superset of the final result; the tie-break order being
-defined in ONE place is the point of this module (code-review r04 —
-three hand-copied variants had to stay in sync by discipline).
+Every per-query top-k in the engine (the BM25 window merge and
+DataFrame scorer, the three ANN paths, the composite ranker) ends in a
+global rank window partitioned by query — a single-reducer sort per
+query that would scale with the corpus.  :func:`rank_topk` is that
+tail, written once: an optional TakeOrdered-shaped prune
+(:func:`local_group_topk`, each partition keeps its LOCAL per-group
+top-k) followed by the ``row_number`` window and the ``rank <= k`` cut.
+Any row in the global top-k is necessarily within its own partition's
+top-k under the same total order, so the prune is a superset of the
+answer — exactly while the prune and the window take their order from
+ONE argument list, which is why both live here.  Callers whose input is
+already bounded (chunk-local top-k candidates) skip the prune.
 
-Two semantics corners (code-review r04b, both execution-confirmed):
+Two semantics corners of the prune:
 
 * NaN / NULL order keys are REJECTED, not reordered: Spark sorts NaN
   as the largest double and NULLs by nulls-first/last rules, pandas
   puts both last — and the Arrow return path converts pandas NaN back
   to NULL anyway, so a NaN score cannot round-trip this prune
   faithfully no matter how it sorts.  Callers must exclude NaN/NULL
-  keys before pruning (the ANN tails drop NaN cosines as
-  undefined-similarity, same rationale as their zero-norm NULLs); a
-  violation raises with the offending column instead of silently
-  reordering or nulling scores.
+  keys before pruning (the ANN scorer drops non-finite cosines as
+  undefined-similarity); a violation raises with the offending column
+  instead of silently reordering or nulling scores.
 * Batches: ``mapInPandas`` yields one frame per ARROW BATCH, not per
   partition.  Pruning each batch independently would only bound the
   window input at k × n_batches; the generator instead folds batches
@@ -33,9 +35,26 @@ Two semantics corners (code-review r04b, both execution-confirmed):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 from .. import worker_guard
+
+
+def frame_topk(
+    pdf: pd.DataFrame,
+    group_col: str,
+    order_cols: list[str],
+    ascending: list[bool],
+    k: int,
+) -> pd.DataFrame:
+    """pandas per-``group_col`` top-``k`` of one frame under
+    (``order_cols``, ``ascending``), sorted by group then that order."""
+    return (
+        pdf.sort_values([group_col, *order_cols], ascending=[True, *ascending])
+        .groupby(group_col, sort=False)
+        .head(k)
+    )
 
 
 def local_group_topk(
@@ -48,10 +67,7 @@ def local_group_topk(
     """Per-partition, per-``group_col`` top-``k`` under
     (``order_cols``, ``ascending``) — mapInPandas, no shuffle, schema
     preserved.  Order columns must be NaN/NULL-free (see module
-    docstring); feed the result to the global rank window with the
-    SAME ordering."""
-    schema = df.schema
-    cols = list(df.columns)
+    docstring)."""
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         for c in order_cols:
@@ -61,11 +77,7 @@ def local_group_topk(
                     "filter them out before the prune (they cannot round-trip "
                     "the Arrow boundary and would sort differently than Spark)"
                 )
-        return (
-            pdf.sort_values([group_col, *order_cols], ascending=[True, *ascending])
-            .groupby(group_col, sort=False)
-            .head(k)[cols]
-        )
+        return frame_topk(pdf, group_col, order_cols, ascending, k)
 
     def gen(batches):
         worker_guard.install()
@@ -78,4 +90,27 @@ def local_group_topk(
         if acc is not None:
             yield acc
 
-    return df.mapInPandas(gen, schema)
+    return df.mapInPandas(gen, df.schema)
+
+
+def rank_topk(
+    df: DataFrame,
+    group_col: str,
+    order_cols: list[str],
+    ascending: list[bool],
+    k: int,
+    prune: bool = True,
+) -> DataFrame:
+    """``df`` plus a long ``rank`` column (``row_number`` per
+    ``group_col`` under (``order_cols``, ``ascending``)), cut at
+    ``rank <= k``.  ``prune`` runs :func:`local_group_topk` under the
+    same order first; pass ``False`` when ``df`` already holds few rows
+    per group."""
+    if prune:
+        df = local_group_topk(df, group_col, order_cols, ascending, k)
+    w = Window.partitionBy(group_col).orderBy(
+        *[F.asc(c) if a else F.desc(c) for c, a in zip(order_cols, ascending)]
+    )
+    return df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )

@@ -30,12 +30,13 @@ import threading
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqltok
 from ..functions.frames import local_frame
 from ..functions.hashing import term_bucket
+from ..functions.topk import frame_topk, rank_topk
 from . import codec
 from .index_build import IndexPaths, _read_segments
 from .maxscore import _TermPostings, maxscore_topk
@@ -501,11 +502,7 @@ class BM25Index:
                     out_rows.append({"query_id": qid, "doc_id": d, "score": score})
             df_out = pd.DataFrame(out_rows, columns=["query_id", "doc_id", "score"])
             if len(df_out) > k:  # local top-k per chunk
-                df_out = (
-                    df_out.sort_values(["query_id", "score", "doc_id"],
-                                       ascending=[True, False, True])
-                    .groupby("query_id").head(k)
-                )
+                df_out = frame_topk(df_out, "query_id", ["score", "doc_id"], [False, True], k)
             return df_out
 
         candidates = segs.groupBy("gen", "chunk").applyInPandas(match_chunk, out_schema)
@@ -551,12 +548,9 @@ class BM25Index:
             return local_frame(
                 self.spark, out, "query_id int, rank long, doc_id long, score double"
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
+        # ≤ n_chunks × k candidates per query arrive: no prune needed
         ranked = (
-            candidates.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
+            rank_topk(candidates, "query_id", ["score", "doc_id"], [False, True], k, prune=False)
             .select("query_id", "rank", "doc_id", "score")
             .orderBy("query_id", "rank")
         )
@@ -676,13 +670,8 @@ def bm25_score_dataframe(
     # global rank window (any global top-k row is in its partition's
     # top-k under the same total order) — the window then ranks
     # ≤ k × n_partitions rows per query, not every matching doc
-    from ..functions.topk import local_group_topk
-
-    pruned = local_group_topk(scored, "query_id", ["score", "doc_id"], [False, True], k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        rank_topk(scored, "query_id", ["score", "doc_id"], [False, True], k)
         .select("query_id", "rank", "doc_id", "score")
         .orderBy("query_id", "rank")
     )

@@ -394,6 +394,9 @@ _GRAM_CACHE_LOCK = threading.Lock()
 # computes the join statistic (and, when the join is small, the join
 # itself); the same value as connected_components' driver_threshold
 _GRAM_DRIVER_ROWS = 1_000_000
+# the direct-join budget is this many in-flight rows per core
+# (× defaultParallelism); ``direct_rows_budget=`` overrides the product
+NGRAM_DIRECT_ROWS_PER_CORE = 8_000_000
 # pairs the driver count-join makes at a time (~25 MB of numpy arrays;
 # at 2,000 Zipf docs, 7.2M candidate pairs, the call peaks ~170 MB over
 # its input, mostly the length-filtered pair keys)
@@ -551,8 +554,8 @@ def ngram_jaccard_pairs(
       doc's rarest grams; length-filtered candidates are verified with
       the count-based join (no gram arrays cross a shuffle).
 
-    The budget defaults to 8M rows × defaultParallelism (env
-    ``NGRAM_DIRECT_ROWS_PER_CORE``).  The statistic is data, not a
+    The budget defaults to ``NGRAM_DIRECT_ROWS_PER_CORE`` (8M) rows ×
+    defaultParallelism.  The statistic is data, not a
     scale switch: computed in the driver when the table was collected,
     else by one Spark aggregate of the gram-frequency table.
 
@@ -576,8 +579,6 @@ def _ngram_pairs(
 ) -> tuple[DataFrame, str]:
     """:func:`ngram_jaccard_pairs` body → (pairs, placement), placement
     one of ``"driver"``, ``"direct"`` (Spark) or ``"prefix"``."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql.types import IntegralType
     from pyspark.storagelevel import StorageLevel
@@ -606,7 +607,7 @@ def _ngram_pairs(
             _GRAM_CACHE_SLOT.append(ex)
     par = spark.sparkContext.defaultParallelism
     if direct_rows_budget is None:
-        direct_rows_budget = int(os.environ.get("NGRAM_DIRECT_ROWS_PER_CORE", "8000000")) * par
+        direct_rows_budget = NGRAM_DIRECT_ROWS_PER_CORE * par
     lo = threshold - 1e-6  # see "Boundary completeness" above
     id_type = ex.schema["doc_id"].dataType
     est_direct_rows = None
@@ -875,8 +876,8 @@ def near_dup_groups(
 
     Placement follows :func:`ngram_jaccard_pairs`: a gram table of at
     most ``_GRAM_DRIVER_ROWS`` (1,000,000) rows whose self-join
-    Σdf·(df−1)/2 fits one core's share of the direct budget (8M rows
-    by default, env ``NGRAM_DIRECT_ROWS_PER_CORE``) is joined in the
+    Σdf·(df−1)/2 fits one core's share of the direct budget
+    (``NGRAM_DIRECT_ROWS_PER_CORE``, 8M rows) is joined in the
     driver, and its surviving pairs go straight to the driver
     union-find and group tail: the result is a ``LocalRelation`` and
     the call runs no Spark job after collecting the gram table.  Other

@@ -151,11 +151,6 @@ def synth_y4m(doc_id: int) -> tuple[bytes, dict]:
     }
 
 
-# back-compat aliases (round-1 API)
-synth_image = synth_fake_image
-synth_audio = synth_fake_audio
-
-
 def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic media table derived from documents (one blob per
     doc; real PNG/PGM/BMP/WAV formats rotated with the synthetic

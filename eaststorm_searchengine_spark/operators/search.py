@@ -24,17 +24,20 @@ HashMap iteration order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import textproc
 from ..functions.frames import local_frame
+from ..functions.topk import rank_topk
 from ..functions.udfs import extract_title_udf, host_udf
 
 WEIGHT_TITLE = 1.5
 WEIGHT_URL = 1.0
 WEIGHT_PAGERANK = 5000.0
 TOTAL_DOCS_ESTIMATE = 30000.0
+LIMIT_INTERMEDIATE = 60  # top 60 before the title boosts (``:183``)
+LIMIT_FINAL = 50  # top 50 after them (``:226``)
 _JWS = " \t\n\x0b\f\r"
 
 
@@ -58,8 +61,6 @@ def composite_search(
     url_idx: DataFrame,
     pageranks: DataFrame,
     pages: DataFrame,
-    limit_intermediate: int = 60,
-    limit_final: int = 50,
 ) -> DataFrame:
     """→ (query_id, rank, url, score, title)."""
     qrows = []
@@ -104,15 +105,9 @@ def composite_search(
     # sees ≤ 60 × n_partitions candidate rows per query instead of the
     # full scored set — the per-query single-reducer sort stops scaling
     # with the corpus (same pattern as the BM25 chunk top-k)
-    from ..functions.topk import local_group_topk
-
-    pruned = local_group_topk(
-        scored, "query_id", ["score", "url"], [False, True], limit_intermediate
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("url"))
-    top60 = pruned.withColumn("r0", F.row_number().over(w)).filter(
-        F.col("r0") <= limit_intermediate
-    )
+    top60 = rank_topk(
+        scored, "query_id", ["score", "url"], [False, True], LIMIT_INTERMEDIATE
+    ).drop("rank")
 
     # blank titles (empty OR all Java whitespace, incl. Unicode
     # separators) fall back to the url like the reference's t.isBlank()
@@ -141,10 +136,9 @@ def composite_search(
             .otherwise(F.lit(0.0)),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("url"))
+    # ≤ 60 rows per query arrive: no prune needed
     return (
-        boosted.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= limit_final)
+        rank_topk(boosted, "query_id", ["score", "url"], [False, True], LIMIT_FINAL, prune=False)
         .select("query_id", "rank", "url", "score", "title")
         .orderBy("query_id", "rank")
     )

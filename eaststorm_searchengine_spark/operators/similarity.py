@@ -20,11 +20,12 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import worker_guard
 from ..functions.frames import local_frame, spread_for_udf
+from ..functions.topk import rank_topk
 
 
 def _stack(vecs: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
@@ -39,36 +40,6 @@ def _stack(vecs: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
     return ok, np.vstack(vecs[ok]).astype(np.float64)
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared ANN rank tail: (query_id, vec_id, cosine) → global top-k
-    per query, TakeOrdered-shaped.  Every partition first keeps its
-    LOCAL per-query top-k (mapInPandas, no shuffle — any global top-k
-    row is necessarily in its partition's top-k under the same total
-    order), so the global rank window sees ≤ k × n_partitions rows per
-    query instead of the full scored set; the per-query single-reducer
-    sort stops scaling with the corpus.  Tie-break everywhere: cosine
-    desc, vec_id asc.
-
-    NaN cosines (a NaN component in some input vector) are EXCLUDED
-    like the zero-norm NULLs: an undefined similarity should not
-    outrank every defined one (Spark's raw window would put NaN at
-    rank 1), and a NaN score cannot round-trip the prune's Arrow
-    boundary anyway."""
-    from ..functions.topk import local_group_topk
-
-    scored = scored.filter(
-        F.col("cosine").isNotNull() & ~F.isnan(F.col("cosine"))
-    )
-    pruned = local_group_topk(scored, "query_id", ["cosine", "vec_id"], [False, True], k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-        .orderBy("query_id", "rank")
-    )
-
-
 _TOPK_DDL = "query_id int, rank long, vec_id long, cosine double"
 _PAIRS_DDL = "vec_a long, vec_b long, cosine double"
 
@@ -81,7 +52,8 @@ def _score_topk(
     probe: Callable[[pd.DataFrame, np.ndarray], np.ndarray] | None = None,
 ) -> DataFrame:
     """The exact batch scorer behind every top-k path: ``src`` rows
-    (vec_id, vec, …) → global top-k per query via ``_rank_topk``.
+    (vec_id, vec, …) → global top-k per query via ``rank_topk``
+    (cosine desc, vec_id asc).
 
     One BLAS matmul per Arrow batch against the query matrix, which
     rides in the closure: a JVM-side cosine (``F.aggregate`` folds over
@@ -122,7 +94,11 @@ def _score_topk(
 
     scored = src.mapInPandas(score, "query_id int, vec_id long, cosine double")
     scored = scored.withColumn("cosine", F.round("cosine", score_round))
-    return _rank_topk(scored, k)
+    return (
+        rank_topk(scored, "query_id", ["cosine", "vec_id"], [False, True], k)
+        .select("query_id", "rank", "vec_id", "cosine")
+        .orderBy("query_id", "rank")
+    )
 
 
 def cosine_topk(
@@ -540,7 +516,6 @@ class IVFIndex:
         vec_col: str = "embedding",
         seed: int = 42,
         fit_sample_cap: int = 100_000,
-        materialize: bool = True,
     ) -> None:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import IntegerType
@@ -618,13 +593,10 @@ class IVFIndex:
         self.lists = base.filter(F.size("vec") == dim).select(
             "vec_id", "vec", assign(F.col("unit")).alias("list_id")
         )
-        self._persisted = materialize
-        if materialize:
-            # persist + force the one assignment pass at build time;
-            # the one-shot wrapper skips this (no orphaned CacheManager
-            # entry per call — the dedup gram-cache lesson)
-            self.lists = self.lists.persist(StorageLevel.MEMORY_AND_DISK)
-            self.lists.count()
+        # persist + force the one assignment pass at build time
+        self.lists = self.lists.persist(StorageLevel.MEMORY_AND_DISK)
+        self.lists.count()
+        self._persisted = True
 
     def unpersist(self) -> None:
         if self.lists is not None and self._persisted:
@@ -662,32 +634,3 @@ class IVFIndex:
             src, query_vectors, k, score_round,
             lambda pdf, ok: probe[pdf["list_id"].to_numpy()[ok]],
         )
-
-
-def ivf_cosine_topk(
-    embeddings: DataFrame,
-    query_vectors: list[tuple[int, list[float]]],
-    k: int = 10,
-    n_centroids: int = 128,
-    n_probe: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_round: int = 6,
-    seed: int = 42,
-    fit_sample_cap: int = 100_000,
-) -> DataFrame:
-    """One-shot IVF ANN: build an :class:`IVFIndex` and query it once.
-    Callers issuing repeated queries should hold an :class:`IVFIndex`
-    instead — this convenience wrapper pays the full fit+assignment
-    chain per call (and leaves the assignment unmaterialized so the
-    single downstream job computes it inline)."""
-    idx = IVFIndex(
-        embeddings,
-        n_centroids=n_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-        fit_sample_cap=fit_sample_cap,
-        materialize=False,
-    )
-    return idx.topk(query_vectors, k=k, n_probe=n_probe, score_round=score_round)

@@ -5,6 +5,7 @@ ties between bitwise-identical IVF centers are not ulp risk.
 
 These exercise the pure-numpy aux generator directly (no Spark)."""
 
+import os
 import sys
 
 import numpy as np
@@ -12,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E  # noqa: E402
 from eaststorm_searchengine_spark.operators.similarity import (  # noqa: E402
     _hyperplanes,

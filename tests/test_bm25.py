@@ -7,6 +7,7 @@
 """
 
 import math
+import os
 import shutil
 
 import numpy as np
@@ -30,7 +31,8 @@ from eaststorm_searchengine_spark.operators.index_build import (
 from eaststorm_searchengine_spark.operators.maxscore import maxscore_topk
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/_tmp"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp")
 
 
 def _python_bm25(rows, query, k=10):

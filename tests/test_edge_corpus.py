@@ -3,6 +3,7 @@ counted in corpus stats (n_docs, avgdl) and serve correct BM25 — every
 build path, checked against the DuckDB oracle — and every builder must
 produce the same index tables row for row."""
 
+import os
 import shutil
 
 import duckdb
@@ -18,7 +19,8 @@ from eaststorm_searchengine_spark.operators.index_build import (
     compact_index,
 )
 
-TMP = "/root/repo/_tmp/t_edge"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_edge")
 SF = "/root/testdata/sf0.001"
 
 ROWS = [

@@ -24,7 +24,8 @@ from eaststorm_searchengine_spark.operators.index_build import (
 )
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/_tmp"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp")
 
 
 def _python_postings(rows):

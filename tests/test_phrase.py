@@ -2,6 +2,7 @@
 matching + BM25 ranking over the phrase terms."""
 
 import math
+import os
 import shutil
 
 import pytest
@@ -12,7 +13,8 @@ from eaststorm_searchengine_spark.operators.bm25 import BM25Index, bm25_idf
 from eaststorm_searchengine_spark.operators.index_build import build_index_fast
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/_tmp/t_phrase_idx"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_phrase_idx")
 
 
 @pytest.fixture(scope="module")

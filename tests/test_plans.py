@@ -2,6 +2,7 @@
 (pushdown, pruning, broadcast, codegen) hold — not just correct
 results, but the plans we'd want at 100 TB."""
 
+import os
 import shutil
 
 import pytest
@@ -12,12 +13,14 @@ from eaststorm_searchengine_spark.operators.bm25 import bm25_score_dataframe
 from eaststorm_searchengine_spark.operators.index_build import build_index_fast
 from eaststorm_searchengine_spark.plans import inspect
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="module")
 def idx_root(spark):
-    root = "/root/repo/_tmp/t_plans_idx"
+    root = os.path.join(REPO, "_tmp", "t_plans_idx")
     shutil.rmtree(root, ignore_errors=True)
     build_index_fast(spark, spark.read.parquet(f"{SF}/documents.parquet"), root)
     return root
@@ -176,14 +179,15 @@ def test_field_indexes_single_pass_one_shuffle(spark):
 
 
 def test_local_group_topk_equals_window_only_randomized(spark):
-    """Randomized equivalence: pruned + window == window-only, across
+    """Randomized equivalence: pruned + window == window-only, and
+    ``rank_topk`` with and without its prune == window-only, across
     seeds with heavy score ties (the boundary case where an
     order-inconsistent prune would diverge)."""
     import numpy as np
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from eaststorm_searchengine_spark.functions.topk import local_group_topk
+    from eaststorm_searchengine_spark.functions.topk import local_group_topk, rank_topk
 
     for seed in range(5):
         rng = np.random.RandomState(seed)
@@ -205,8 +209,12 @@ def test_local_group_topk_equals_window_only_randomized(spark):
                 .collect()
             )
 
+        want = rank(df)
         pruned = local_group_topk(df, "q", ["score", "id"], [False, True], k)
-        assert rank(pruned) == rank(df), (seed, k)
+        assert rank(pruned) == want, (seed, k)
+        for prune in (True, False):
+            got = rank_topk(df, "q", ["score", "id"], [False, True], k, prune=prune)
+            assert sorted(tuple(r) for r in got.collect()) == want, (seed, k, prune)
 
 
 def test_single_query_driver_merge_is_one_job(spark, idx_root):

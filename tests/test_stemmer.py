@@ -1,11 +1,14 @@
 """Porter stemmer: classic vectors from the 1980 paper + a stemmed
 index end-to-end check (north-star analyzer option)."""
 
+import os
 import shutil
 
 import pytest
 
 from eaststorm_searchengine_spark.stemmer import porter_stem
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # examples straight from Porter (1980), "An algorithm for suffix stripping"
 VECTORS = [
@@ -57,7 +60,7 @@ def test_stemmed_index_end_to_end(spark):
         (3, "nothing relevant here"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    root = "/root/repo/_tmp/t_stem_idx"
+    root = os.path.join(REPO, "_tmp", "t_stem_idx")
     shutil.rmtree(root, ignore_errors=True)
     stats = build_index_fast(spark, docs, root, stem=True)
     assert stats["stem"] is True

@@ -1,6 +1,7 @@
 """Streaming incremental indexing: two ingest waves through
 Structured Streaming == one batch build, rank-identically."""
 
+import os
 import shutil
 
 import pytest
@@ -11,7 +12,8 @@ from eaststorm_searchengine_spark.operators.index_build import build_index_fast
 from eaststorm_searchengine_spark.streaming import incremental
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/_tmp/t_stream"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_stream")
 
 
 def test_streaming_equals_batch(spark):
@@ -138,7 +140,7 @@ def test_auto_compaction_policy(spark):
     compaction that triggers only past the threshold, serves identical
     results, and is picked up by a live handle through rebuild
     detection."""
-    root = "/root/repo/_tmp/t_autocompact"
+    root = os.path.join(REPO, "_tmp", "t_autocompact")
     shutil.rmtree(root, ignore_errors=True)
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"

@@ -2,13 +2,15 @@
 arrival wins, later copies within the watermark are dropped — across
 micro-batches AND across restarts from the checkpoint."""
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
 from eaststorm_searchengine_spark.streaming import dedup as SD
 
-TMP = "/root/repo/_tmp/t_stream_dedup"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_stream_dedup")
 SCHEMA = "doc_id long, text string, ts timestamp"
 
 

@@ -3,6 +3,7 @@ batch once the watermark passes; late data dropped) and
 applyInPandasWithState sessionization (restartable across runs;
 closed sessions == the batch sessionizer's)."""
 
+import os
 import shutil
 
 import pytest
@@ -12,7 +13,8 @@ from eaststorm_searchengine_spark.operators import analytics
 from eaststorm_searchengine_spark.streaming import windows as W
 
 SF = "/root/testdata/sf0.001"
-TMP = "/root/repo/_tmp/t_stream_win"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_stream_win")
 EVENTS_SCHEMA = "event_id long, user_id long, event_type string, ts timestamp, value double"
 
 

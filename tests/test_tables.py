@@ -1,11 +1,13 @@
 """TableIO seam: write/read/exists/drop round-trips; iceberg cleanly
 gated when the runtime jar is absent."""
 
+import os
 import pytest
 
 from eaststorm_searchengine_spark.sources.tables import TableIO, iceberg_available
 
-TMP = "/root/repo/_tmp/t_tables"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(REPO, "_tmp", "t_tables")
 
 
 def test_parquet_roundtrip(spark):
