@@ -207,8 +207,8 @@ def synthesize_zipf_docs(spark, n_docs: int, vocab: int = 50_000,
     every term matches most documents — the structural worst case for
     block-max WAND (uniform idf, nothing skippable).  Real webtext is
     Zipf-distributed; this corpus reproduces that shape so the engine's
-    decode-skip behavior can be measured through the real segment store
-    (VERDICT r04 #5).  Token ``zipf_word(r)`` has Zipf(1.5) rank r; each
+    decode-skip behavior can be measured through the real segment store.
+    Token ``zipf_word(r)`` has Zipf(1.5) rank r; each
     doc is seeded by its doc_id, so the corpus is identical at any
     partitioning/parallelism.
     """
@@ -234,7 +234,7 @@ def synthesize_skew_docs(spark, n_docs: int, vocab: int = 10_000,
                          tokens_per_doc: int = 60, hot_fraction: float = 0.0,
                          seed: int = 11):
     """Deterministic uniform-vocabulary corpus for the skew flood bench
-    (VERDICT r05 #6) → (doc_id, text).  Every doc carries exactly
+    → (doc_id, text).  Every doc carries exactly
     ``tokens_per_doc`` tokens drawn uniformly from an alphabetic vocab
     (doc_id-seeded — identical at any partitioning).  With
     ``hot_fraction`` > 0, that fraction of documents get the single hot
@@ -289,8 +289,8 @@ def replicate_with_ids(df, replicas: int, n_rows: int, id_col: str = "doc_id"):
     """Replicate a corpus with disjoint id ranges in ONE pass: a
     broadcast cross-join against the replica index, instead of an
     N-arm union whose every branch re-runs the upstream synthesis
-    (code-review r05: the loop was copy-pasted in bench.py and
-    scaling.py and re-synthesized the base corpus once per replica)."""
+    (the loop was once copy-pasted in bench.py and scaling.py and
+    re-synthesized the base corpus once per replica)."""
     from pyspark.sql import functions as F
 
     reps = df.sparkSession.range(replicas).select(F.col("id").alias("__rep"))

@@ -88,7 +88,7 @@ def pagerank_link_hosts_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     adjacency (PageRank.java:284-355 + :53-63): one Arrow pass emitting
     the deduped target-host list directly, instead of shipping full
     normalized URLs across the boundary and re-parsing them in a second
-    UDF (the r4 two-pass shape that regressed the bench).  Host grammar
+    UDF (the two-pass shape that regressed the bench).  Host grammar
     is the same URI.getHost-parity ``extract_host`` the page's own host
     uses.  Output order: first-seen (downstream sorts)."""
 
@@ -192,14 +192,14 @@ def field_terms_udf(html: pd.Series, url: pd.Series, text: pd.Series) -> pd.Seri
 def link_hosts_udf(links: pd.Series) -> pd.Series:
     """Per-link-array host extraction with the SAME URI.getHost-parity
     parser the page's own host uses (textproc.extract_host) — the
-    PageRank adjacency must not mix two host grammars (code-review r04:
-    F.parse_url keeps e.g. underscore reg-names that URI.getHost
+    PageRank adjacency must not mix two host grammars
+    (F.parse_url keeps e.g. underscore reg-names that URI.getHost
     rejects, silently changing out-degrees).  Null/empty hosts are
     dropped here."""
     # `arr if arr is not None else []`, NOT `arr or []`: Arrow delivers
     # array<string> elements as numpy arrays in some plans (e.g. after
     # a checkpoint/cache boundary), and bool(ndarray) with 2+ elements
-    # raises — confirmed by execution in code-review r04b
+    # raises — confirmed by execution
     return links.map(
         lambda arr: [
             h

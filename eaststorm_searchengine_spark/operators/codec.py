@@ -115,7 +115,7 @@ def vb_decode(buf: bytes) -> np.ndarray:
 
 
 def vb_decode_concat(bufs: list) -> np.ndarray:
-    """Decode MANY varbyte buffers in ONE vectorized pass (r7).
+    """Decode MANY varbyte buffers in ONE vectorized pass.
 
     The wire format is self-delimiting (terminator bit per value), so
     decoding the concatenation equals concatenating the decodes —

@@ -18,7 +18,7 @@ Scale shape: each iteration is one equi-join of the frontier against
 the corpus plus one anti-join keyed on url; ``localCheckpoint``
 truncates lineage per iteration exactly like the PageRank loop
 (pagerank.py).  The frontier side is broadcast only while it is small
-(VERDICT r02 #5: a real BFS frontier grows to tens of millions of
+(a real BFS frontier grows to tens of millions of
 urls within a few hops — a forced broadcast would OOM the executors;
 past the threshold the join falls back to a plain shuffle join and
 AQE re-plans from runtime sizes).  Crawled-set growth is the only

@@ -31,7 +31,10 @@ doc-range chunk fits one Arrow batch
 Every entry point ends in the same metadata tail (:func:`_finalize`):
 doclens/ from the reserved postings, term_stats/ and lineage/ from the
 segment metadata, and one stats.json key set (listed in
-:func:`build_index`).
+:func:`build_index`).  A store of at most ``_META_DRIVER_ROWS``
+segment rows (counted on its write) gets the three tables from one
+scan job, grouped and decoded in the driver; only a larger store, or a
+refresh that has no count, runs the three concurrent Spark pipelines.
 
 Scale design (the 10^12-doc story):
 
@@ -65,8 +68,9 @@ Entry points (all serve the identical query engine, equality-tested):
   ``postings/``; its segments/, doclens/ and term_stats/ are row-equal
   to ``build_index``'s.
 * ``build_index_fast`` — the fragment encode alone, zero shuffle:
-  fragment-layout segments; measured 0.94 scaling efficiency 2→8 cores
-  at 1M docs.
+  fragment-layout segments.  Not the cheapest build: on 4 vCPUs it
+  measured 1.34× (4,000 HTML pages) and 1.46× (20k text docs) the
+  process CPU of ``build_index``'s single pass.
 * ``compact_index`` — ``build_index``'s re-chunk and tail over
   existing segment stores.
 """
@@ -176,11 +180,17 @@ def _read_segments(spark: SparkSession, path: str) -> DataFrame:
     return seg.withColumn("gen", F.coalesce("gen", F.lit(0)))
 
 
-def _write_gen0(seg: DataFrame, paths: IndexPaths) -> None:
-    """Replace segments/ with ``seg`` as generation 0."""
-    seg.withColumn("gen", F.lit(0)).write.mode("overwrite").partitionBy(
-        "gen", "bucket"
-    ).parquet(paths.segments)
+def _write_gen0(seg: DataFrame, paths: IndexPaths) -> int:
+    """Replace segments/ with ``seg`` as generation 0.  Returns the
+    rows written: an Observation counts them on the write, so no
+    counting job runs."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    seg.withColumn("gen", F.lit(0)).observe(obs, F.count("*").alias("rows")).write.mode(
+        "overwrite"
+    ).partitionBy("gen", "bucket").parquet(paths.segments)
+    return int(obs.get["rows"])
 
 
 def _encode_sorted_runs(
@@ -263,10 +273,10 @@ def _encode_sorted_runs(
 def _run_concurrently(*fns) -> list:
     """Submit independent Spark jobs from concurrent driver threads and
     wait for all; first exception (if any) re-raises, else returns the
-    results in order.  Used to collapse
-    the finalize tail's sequential small-job latency — each job's fixed
-    scheduling cost overlaps instead of summing (the build's Amdahl
-    floor, profiled at ~3.6 s of sequential tail @ 8 cores)."""
+    results in order.  The Spark metadata tail (:func:`_spark_tail`,
+    stores above ``_META_DRIVER_ROWS`` rows) runs its three pipelines
+    this way, so each job's fixed scheduling cost overlaps instead of
+    summing."""
     # InheritableThread, not threading.Thread: under
     # PySpark's default pinned-thread mode each plain Python thread
     # maps to a dedicated JVM thread that is NOT reclaimed on exit —
@@ -339,11 +349,22 @@ def _write_doclens(dl: DataFrame, paths: IndexPaths) -> dict:
     }
 
 
+# Segment stores of at most this many rows (the reserved #doclens#
+# rows included) end in the driver metadata tail, larger ones in the
+# Spark tail; the same bound as dedup's _GRAM_DRIVER_ROWS.  The driver
+# holds every row's term and five ints, tens of MB at the bound.  On
+# 4 vCPUs, a 676k-row store (200k Zipf docs, fragment layout) took
+# 2.5-3.8 s CPU / 0.9-1.2 s wall in the driver tail and 5.9-15.2 s /
+# 1.6-4.0 s in the Spark tail (3 runs each).
+_META_DRIVER_ROWS = 1_000_000
+
+
 def _finalize(
     spark: SparkSession,
     paths: IndexPaths,
     t0: float,
-    doclens: DataFrame | dict,
+    corpus: dict | None,
+    seg_rows: int | None,
     *,
     n_buckets: int,
     stem: bool,
@@ -351,26 +372,59 @@ def _finalize(
     sources: int = 1,
 ) -> dict:
     """The metadata tail every builder and the streaming refresh end
-    with, after segments/ is written: term_stats/ and lineage/ from the
-    segment metadata, doclens/ when ``doclens`` is a (doc_id, dl)
-    DataFrame (a dict is the corpus statistics of a doclens/ that
-    :func:`_write_doclens` already wrote), then stats.json.  Returns
-    the stats dict.  ``chunk_bits`` is None for a fragment-layout store,
-    whose chunks are batch first-doc ids rather than doc-id ranges.
-    lineage/ has one row per (gen, chunk).
+    with, after segments/ is written: doclens/ decoded from the
+    reserved #doclens# rows (unless ``corpus`` holds the corpus
+    statistics of a doclens/ that :func:`_write_doclens` already
+    wrote), term_stats/ and lineage/ from the segment metadata, then
+    stats.json.  Returns the stats dict.  ``chunk_bits`` is None for a
+    fragment-layout store, whose chunks are batch first-doc ids rather
+    than doc-id ranges.  lineage/ has one row per (gen, chunk).
 
-    The scans are metadata-only (ints + term; the posting blobs are
-    never read thanks to column pruning and the precomputed bytes
-    column).  The writes are independent given segments/, so they run
-    from concurrent driver threads, and n_terms and the corpus
+    ``seg_rows`` is the row count of segments/ when the caller has it
+    without a job (None otherwise).  A store of at most
+    ``_META_DRIVER_ROWS`` rows takes :func:`_driver_tail`, any other
+    :func:`_spark_tail`; both write the same rows with the same
+    schemas."""
+    if seg_rows is not None and seg_rows <= _META_DRIVER_ROWS:
+        n_terms, corpus = _driver_tail(spark, paths, corpus)
+    else:
+        n_terms, corpus = _spark_tail(spark, paths, corpus)
+    stats = {
+        "n_docs": corpus["n_docs"],
+        "avgdl": corpus["avgdl"],
+        "total_tokens": corpus["total_tokens"],
+        "n_terms": n_terms,
+        "n_buckets": n_buckets,
+        "block": BLOCK,
+        "chunk_bits": chunk_bits,
+        "layout": "fragment" if chunk_bits is None else "compacted",
+        "stem": stem,
+        "k1": sqltok.K1,
+        "b": sqltok.B,
+        "build_sec": time.time() - t0,
+        "sources": sources,
+    }
+    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
+    return stats
+
+
+def _spark_tail(
+    spark: SparkSession, paths: IndexPaths, corpus: dict | None
+) -> tuple[int, dict]:
+    """:func:`_finalize`'s tables as three Spark pipelines over
+    segments/; returns (n_terms, corpus statistics).
+
+    The term_stats/ and lineage/ scans are metadata-only (ints + term;
+    column pruning and the precomputed bytes column keep the posting
+    blobs unread).  The writes are independent given segments/, so they
+    run from concurrent driver threads, and n_terms and the corpus
     statistics ride their writes through Observations: the tail costs
     one job latency, not one per write plus two aggregations."""
     from pyspark.sql import Observation
 
-    meta = (
-        _read_segments(spark, paths.segments)
-        .filter(F.col("term") != DOCLEN_TERM)
-        .select("term", "bucket", "gen", "chunk", "n", "bytes")
+    seg = _read_segments(spark, paths.segments)
+    meta = seg.filter(F.col("term") != DOCLEN_TERM).select(
+        "term", "bucket", "gen", "chunk", "n", "bytes"
     )
 
     def _term_stats_pipeline():
@@ -396,30 +450,82 @@ def _finalize(
         ).parquet(paths.lineage)
 
     def _doclens_pipeline():
-        if isinstance(doclens, dict):
-            return doclens
-        return _write_doclens(doclens, paths)
+        if corpus is not None:
+            return corpus
+        return _write_doclens(_doclen_rows(seg), paths)
 
     n_terms, _, corpus = _run_concurrently(
         _term_stats_pipeline, _lineage_pipeline, _doclens_pipeline
     )
-    stats = {
-        "n_docs": corpus["n_docs"],
-        "avgdl": corpus["avgdl"],
-        "total_tokens": corpus["total_tokens"],
-        "n_terms": n_terms,
-        "n_buckets": n_buckets,
-        "block": BLOCK,
-        "chunk_bits": chunk_bits,
-        "layout": "fragment" if chunk_bits is None else "compacted",
-        "stem": stem,
-        "k1": sqltok.K1,
-        "b": sqltok.B,
-        "build_sec": time.time() - t0,
-        "sources": sources,
-    }
-    fsio.write_text(spark, paths.stats, json.dumps(stats, indent=2))
-    return stats
+    return n_terms, corpus
+
+
+def _driver_tail(
+    spark: SparkSession, paths: IndexPaths, corpus: dict | None
+) -> tuple[int, dict]:
+    """:func:`_spark_tail`'s tables from one Spark job: a ``toArrow``
+    scan of every segment row's metadata, plus the docs/dls streams of
+    the reserved rows alone when doclens/ is still to write, so no
+    other posting blob reaches the driver.  The driver groups and
+    decodes, and writes each table as one parquet file through the
+    Hadoop FileSystem API (:func:`_write_table`).
+
+    Spark's ``avg`` sums the lengths as exact doubles, so avgdl is
+    ``total_tokens / n_docs``, bitwise the Spark tail's value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols: list = ["term", "bucket", "gen", "chunk", "n", "bytes"]
+    if corpus is None:
+        reserved = (F.col("bucket") == 0) & (F.col("term") == DOCLEN_TERM)
+        cols += [F.when(reserved, F.col(c)).alias(c) for c in ("docs", "dls")]
+    tbl = _read_segments(spark, paths.segments).select(*cols).toArrow()
+
+    meta = tbl.filter(pc.not_equal(tbl["term"], DOCLEN_TERM))
+    # a term's rows all sit in its one bucket, so min is Spark's first
+    ts = meta.group_by("term").aggregate([("n", "sum"), ("bucket", "min")])
+    _write_table(spark, paths.term_stats, pa.table({
+        "term": ts["term"].cast(pa.string()),
+        "df": ts["n_sum"].cast(pa.int64()),
+        "bucket": ts["bucket_min"].cast(pa.int32()),
+    }))
+    ln = meta.group_by(["gen", "chunk"]).aggregate(
+        [("n", "sum"), ("term", "count_distinct"), ("bytes", "sum")]
+    )
+    _write_table(spark, paths.lineage, pa.table({
+        "gen": ln["gen"].cast(pa.int32()),
+        "chunk": ln["chunk"].cast(pa.int64()),
+        "postings": ln["n_sum"].cast(pa.int64()),
+        "terms": ln["term_count_distinct"].cast(pa.int64()),
+        "bytes": ln["bytes_sum"].cast(pa.int64()),
+        "status": pa.array(["complete"] * ln.num_rows, pa.string()),
+    }))
+    if corpus is None:
+        res = tbl.filter(pc.is_valid(tbl["docs"])).select(["n", "docs", "dls"])
+        dl = next(_decode_doclen_rows([res.to_pandas()]))
+        _write_table(spark, paths.doclens, pa.Table.from_pandas(dl, preserve_index=False))
+        n_docs, total = len(dl), int(dl["dl"].sum())
+        corpus = {
+            "n_docs": n_docs,
+            "avgdl": total / n_docs if n_docs else 0.0,
+            "total_tokens": total,
+        }
+    return ts.num_rows, corpus
+
+
+def _write_table(spark: SparkSession, path: str, table) -> None:
+    """Replace the parquet directory ``path`` with one file holding the
+    Arrow ``table``, written through the Hadoop FileSystem API (no
+    Spark job).  The old directory is deleted first, so no stale part
+    file survives beside the new one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fsio.delete(spark, path)
+    data = buf.getvalue().to_pybytes()
+    fsio.write_bytes(spark, os.path.join(path, "part-00000.parquet"), data)
 
 
 def _range_fragments(
@@ -468,7 +574,7 @@ def _finish_build(
             chunk_bits = adaptive_chunk_bits(
                 corpus["n_docs"], spark.sparkContext.defaultParallelism
             )
-        _write_gen0(
+        seg_rows = _write_gen0(
             _compact_segments(
                 frags, chunk_bits,
                 n_sub=group_subsplits(
@@ -481,7 +587,7 @@ def _finish_build(
         if persist:
             frags.unpersist()
     return _finalize(
-        spark, paths, t0, corpus, n_buckets=n_buckets, stem=stem,
+        spark, paths, t0, corpus, seg_rows, n_buckets=n_buckets, stem=stem,
         chunk_bits=chunk_bits, sources=sources,
     )
 
@@ -560,7 +666,7 @@ def build_index(
         src = src.repartitionById(
             parts, F.pmod(F.shiftright("doc_id", chunk_bits), F.lit(parts)).cast("int")
         ).sortWithinPartitions("doc_id")
-        _write_gen0(
+        seg_rows = _write_gen0(
             src.mapInPandas(
                 _make_fragment_gen(text_col, from_html, stem, n_buckets, chunk_bits),
                 SEGMENT_SCHEMA,
@@ -568,7 +674,7 @@ def build_index(
             paths,
         )
         return _finalize(
-            spark, paths, t0, _doclen_rows(_read_segments(spark, paths.segments)),
+            spark, paths, t0, None, seg_rows,
             n_buckets=n_buckets, stem=stem, chunk_bits=chunk_bits,
         )
     frags = _range_fragments(
@@ -648,7 +754,7 @@ def build_index_resumable(
 
 
 # ---------------------------------------------------------------------------
-# Fast path: map-side fragment build (the MapReduce-indexer shape)
+# Map-side fragment build (the MapReduce-indexer shape)
 # ---------------------------------------------------------------------------
 
 from ..functions.hashing import term_bucket as _bucket_of  # noqa: E402
@@ -796,7 +902,7 @@ def build_index_fast(
     stem: bool = False,
     from_html: bool = False,
 ) -> dict:
-    """Single-pass, ZERO-shuffle index build (fast path).
+    """Single-pass, ZERO-shuffle index build in the fragment layout.
 
     Shape: scan → mapInPandas emits *finished compressed block rows*
     (the #doclens# runs included) → one parquet write of generation 0,
@@ -813,6 +919,10 @@ def build_index_fast(
     canonical term-clustered (bucket, chunk) layout; ``build_index``'s
     single pass runs it per chunk.  All of them serve the identical
     query engine (equality tested).
+
+    Zero shuffle does not make it the cheapest build: on 4 vCPUs it
+    measured 1.34× (4,000 HTML pages) and 1.46× (20k text docs) the
+    process CPU of ``build_index``'s single pass.
     """
     t0 = time.time()
     paths = IndexPaths(out_dir)
@@ -823,14 +933,8 @@ def build_index_fast(
     frags = src.mapInPandas(
         _make_fragment_gen(text_col, from_html, stem, n_buckets), SEGMENT_SCHEMA
     )
-    _write_gen0(frags, paths)
-
-    # doclens/ reads the reserved rows back, so its write overlaps
-    # term_stats/ and lineage/ in the tail
-    return _finalize(
-        spark, paths, t0, _doclen_rows(_read_segments(spark, paths.segments)),
-        n_buckets=n_buckets, stem=stem,
-    )
+    seg_rows = _write_gen0(frags, paths)
+    return _finalize(spark, paths, t0, None, seg_rows, n_buckets=n_buckets, stem=stem)
 
 
 # ---- segment compaction / index merge -----------------------------------

@@ -483,7 +483,7 @@ FEATURE_DIM = 16
 def _pool(arr: np.ndarray, quant: float | None = None) -> list[float]:
     """Fixed-dim pooled intensity features — the ONE pooling contract
     every modality (whole image/audio/video and per-frame) shares
-    (code-review r04b: it was defined twice and could drift).
+    (one definition, so the modalities cannot drift apart).
 
     With ``quant``, samples are first snapped back to their native
     integer grid (every decoder emits ``k/Q`` floats: Q=765 for the
@@ -492,7 +492,7 @@ def _pool(arr: np.ndarray, quant: float | None = None) -> list[float]:
     ``k/128 − 1`` is ``(256k − 32768)/32768``), pooled with exact int64
     sums, and scaled by ONE final division — so every feature is a
     bit-reproducible double that the pure-SQL oracle recomputes from
-    the raw pre-encode samples (r5: this is what makes media_features
+    the raw pre-encode samples (this is what makes media_features
     DuckDB-checkable).  float32 decode error is ≤ ~2e-4 on the ×Q
     grid, far inside rint's 0.5 tolerance."""
     if quant is not None:
@@ -527,7 +527,7 @@ def media_features(media: DataFrame) -> DataFrame:
                     _, arr = decode_audio(bytes(content))
                 # unknown kinds decode via the audio branch above; .get
                 # keeps them on the legacy float pooling instead of a
-                # KeyError inside the task (code-review r05)
+                # KeyError inside the task
                 feats.append(_pool(arr, _POOL_QUANT.get(kind)))
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "kind": pdf["kind"], "features": feats}

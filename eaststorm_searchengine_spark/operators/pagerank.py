@@ -63,8 +63,8 @@ def build_host_graph(pages: DataFrame) -> DataFrame:
     parser (``extract_host``, fused into ``pagerank_link_hosts_udf``) —
     an earlier version parsed targets with ``F.parse_url(.., 'HOST')``,
     which accepts reg-names URI.getHost rejects (e.g. underscores),
-    silently changing out-degrees vs the reference (code-review r04).
-    r5: extraction and host-parse are ONE Arrow pass (the r4 two-UDF
+    silently changing out-degrees vs the reference.
+    Extraction and host-parse are ONE Arrow pass (an earlier two-UDF
     chain shipped full URL strings between passes and regressed the
     bench 1.97→5.7 s)."""
     from ..functions.udfs import pagerank_link_hosts_udf
@@ -82,7 +82,7 @@ def _pagerank_driver(
     spark, links: DataFrame, n_hosts: int, max_iterations: int
 ) -> DataFrame:
     """Driver-side fixpoint for SMALL graphs — the same small-side
-    escape hatch as connected_components' union-find (r10): a handful
+    escape hatch as connected_components' union-find: a handful
     of hosts pays ~2 Spark jobs per iteration in pure scheduling
     latency, while the identical arithmetic runs in microseconds
     driver-side.  Semantics replicated exactly: per-iteration HALF_UP
@@ -140,7 +140,7 @@ def pagerank(
     previous iteration.  The static out-degree rides in the rank frame
     (``nd``), so the dangling sum needs no join.
 
-    Size gate (r10): graphs of at most ``driver_edge_threshold`` edges
+    Size gate: graphs of at most ``driver_edge_threshold`` edges
     AND at most ``driver_edge_threshold`` hosts resolve driver-side
     (:func:`_pagerank_driver`) — identical fixpoint, no per-iteration
     job latency.  The host bound matters because the driver holds one

@@ -84,7 +84,7 @@ _LONG_MIN = -(1 << 63)
 
 def _java_round_ms(raw: str) -> int:
     """``Math.round(Double.parseDouble(raw) * 1000.0)`` parity,
-    including the hostile corners (ADVICE r02 #1): ``Infinity`` →
+    including the hostile corners: ``Infinity`` →
     Long.MAX_VALUE, ``NaN`` → 0 — Python's ``math.floor(inf + 0.5)``
     would raise OverflowError and crash the driver-side robots gate.
     Returns -1 (= "absent") for strings Java's parseDouble rejects;

@@ -22,15 +22,27 @@ def _fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Create/overwrite ``path`` with UTF-8 ``text`` (atomic enough for
-    single-writer metadata: Hadoop create+close)."""
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create/overwrite ``path`` with ``data`` (atomic enough for
+    single-writer metadata: Hadoop create+close; missing parent
+    directories are created)."""
     fs, hpath = _fs(spark, path)
     out = fs.create(hpath, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create/overwrite ``path`` with UTF-8 ``text``."""
+    write_bytes(spark, path, text.encode("utf-8"))
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Remove ``path`` and everything under it; nothing when absent."""
+    fs, hpath = _fs(spark, path)
+    fs.delete(hpath, True)
 
 
 def read_text(spark: SparkSession, path: str) -> str:

@@ -133,7 +133,7 @@ class TableIO:
         updates into a staging dir, then the staged dir is swapped
         into place ATOMICALLY via Linux ``renameat2(RENAME_EXCHANGE)``
         (one syscall; a concurrent READER sees either the old or the
-        new table, never an absent path — ADVICE r02 #4).  On
+        new table, never an absent path).  On
         filesystems/kernels without RENAME_EXCHANGE the swap degrades
         to two renames (still under the lock); a reader racing that
         fallback can observe a brief absence — documented limitation;

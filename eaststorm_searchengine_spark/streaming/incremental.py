@@ -8,7 +8,7 @@ rows — appending them never rewrites existing data (the same property
 Lucene exploits with per-segment flushes).
 
 Shape: ``readStream`` (file source on the pages/documents directory) →
-``foreachBatch`` → the same fragment generator as the batch fast path →
+``foreachBatch`` → the same fragment generator as ``build_index_fast`` →
 one generation, ``segments/gen=<batch_id + 1>/``, partitioned by
 bucket (builds and compactions own ``gen=0``).  ``refresh_metadata``
 rebuilds doclens / term_stats / lineage / stats.json from the segment
@@ -113,11 +113,12 @@ def start_incremental_index(
 def refresh_metadata(spark: SparkSession, index_dir: str, n_buckets: int = ib.DEFAULT_BUCKETS) -> dict:
     """Rebuild doclens / term_stats / lineage / stats.json from the
     segment store's generations (idempotent).  Streamed batches are
-    encoded unstemmed, in the fragment layout."""
+    encoded unstemmed, in the fragment layout.  No write here counts
+    the store's rows, so the tail is the Spark one."""
     t0 = time.time()
-    paths = ib.IndexPaths(index_dir)
-    dl = ib._doclen_rows(ib._read_segments(spark, paths.segments))
-    return ib._finalize(spark, paths, t0, dl, n_buckets=n_buckets, stem=False)
+    return ib._finalize(
+        spark, ib.IndexPaths(index_dir), t0, None, None, n_buckets=n_buckets, stem=False
+    )
 
 
 # ---------------------------------------------------------------------------

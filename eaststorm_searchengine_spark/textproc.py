@@ -534,8 +534,8 @@ def extract_host(url: str | None) -> str | None:
     (e.g. underscores); urlparse accepts them, so mirror the rejection
     explicitly.  Bracketed IPv6 literals ARE returned by
     ``URI.getHost()`` — brackets included (RFC 2732) — so re-add the
-    brackets urlparse strips rather than rejecting the ':' characters
-    (ADVICE r02 #2).  Case: URI.getHost() preserves the host's case;
+    brackets urlparse strips rather than rejecting the ':' characters.
+    Case: URI.getHost() preserves the host's case;
     this engine NORMALIZES to lowercase for every host (reg-name and
     IPv6 alike) because its callers group/join on the host and DNS
     names are case-insensitive — a deliberate, uniform divergence."""

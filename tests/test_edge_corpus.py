@@ -171,6 +171,111 @@ def test_build_routes_agree(
     ]
 
 
+META_DTYPES = {
+    "doclens": [("doc_id", "bigint"), ("dl", "bigint")],
+    "term_stats": [("term", "string"), ("df", "bigint"), ("bucket", "int")],
+    "lineage": [
+        ("gen", "int"), ("chunk", "bigint"), ("postings", "bigint"),
+        ("terms", "bigint"), ("bytes", "bigint"), ("status", "string"),
+    ],
+}
+
+
+@pytest.mark.parametrize("corpus", ["edge", "sf0.001"])
+@pytest.mark.parametrize(
+    "writer", ["single", "rechunk", "resumable", "fast", "compacted", "refresh"]
+)
+def test_metadata_tails_agree(
+    spark, tmp_path, monkeypatch, arrow_batch_rows, corpus, writer
+):
+    """Every writer, run once with ``_META_DRIVER_ROWS`` at 0 and once
+    far above the store's row count, writes row-equal doclens/,
+    term_stats/ and lineage/ with the same schemas, and the same
+    stats.json but build_sec.  A spy on the two tails proves which one
+    ran: the driver tail under the large bound, the Spark tail under
+    0, and always the Spark tail for refresh_metadata, which has no
+    row count."""
+    import json
+
+    from eaststorm_searchengine_spark.operators import index_build as ib
+    from eaststorm_searchengine_spark.streaming import incremental
+
+    if corpus == "edge":
+        docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    else:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+    fast_src = str(tmp_path / "fast_src")
+    if writer == "compacted":
+        build_index_fast(spark, docs, fast_src)
+
+    def write(root):
+        if writer == "single":
+            return build_index(spark, docs, root)
+        if writer == "rechunk":
+            with arrow_batch_rows(2):
+                return build_index(spark, docs, root)
+        if writer == "resumable":
+            return build_index_resumable(spark, docs, root)
+        if writer == "fast":
+            return build_index_fast(spark, docs, root)
+        if writer == "compacted":
+            return compact_index(spark, [fast_src], root)
+        for b in range(2):
+            incremental._append_batch(
+                docs.filter(docs.doc_id % 2 == b), b, root, "doc_id", "text", False, 16
+            )
+        return incremental.refresh_metadata(spark, root)
+
+    ran = []
+    for tail in ("_driver_tail", "_spark_tail"):
+        fn = getattr(ib, tail)
+        monkeypatch.setattr(
+            ib, tail, lambda *a, _t=tail, _f=fn, **kw: ran.append(_t) or _f(*a, **kw)
+        )
+    stats = {}
+    for route, bound in (("spark", 0), ("driver", 10**9)):
+        monkeypatch.setattr(ib, "_META_DRIVER_ROWS", bound)
+        ran.clear()
+        stats[route] = write(str(tmp_path / route))
+        want = "spark" if writer == "refresh" else route
+        assert ran == [f"_{want}_tail"], (route, ran)
+
+    for sub, dtypes in META_DTYPES.items():
+        a, b = (spark.read.parquet(str(tmp_path / r / sub)) for r in ("spark", "driver"))
+        assert a.dtypes == b.dtypes == dtypes, sub
+        assert not a.isEmpty() and _same_rows(a, b), sub
+    on_disk = [json.load(open(tmp_path / r / "stats.json")) for r in ("spark", "driver")]
+    for st in [*stats.values(), *on_disk]:
+        del st["build_sec"]
+    assert stats["spark"] == stats["driver"] == on_disk[0] == on_disk[1]
+
+
+def test_rebuild_in_place_leaves_no_stale_metadata(spark, tmp_path, monkeypatch):
+    """A build into an existing index directory with fewer documents
+    replaces doclens/, term_stats/ and lineage/: the driver tail's one
+    file per table leaves none of the Spark tail's part files beside
+    it, and a live BM25Index serves the rebuild."""
+    from eaststorm_searchengine_spark.operators import index_build as ib
+
+    root = str(tmp_path / "idx")
+    docs = spark.createDataFrame(ROWS, "doc_id long, text string")
+    with monkeypatch.context() as m:
+        m.setattr(ib, "_META_DRIVER_ROWS", 0)
+        build_index(spark, docs, root)
+    idx = BM25Index(spark, root)
+    query = [(1, "alpha delta")]
+    assert {r.doc_id for r in idx.search(query, k=10).collect()} == {0, 4, 5}
+
+    fewer = docs.filter(docs.doc_id >= 5)
+    assert build_index(spark, fewer, root)["n_docs"] == 3
+    dl = {(r.doc_id, r.dl) for r in spark.read.parquet(f"{root}/doclens").collect()}
+    assert dl == {(5, 2), (6, 1), (7, 1)}
+    terms = {r.term for r in spark.read.parquet(f"{root}/term_stats").collect()}
+    assert terms == {"alpha", "delta", "epsilon", "gamma"}
+    assert {r.doc_id for r in idx.search(query, k=10).collect()} == {5}
+    assert idx.n_docs == 3
+
+
 def test_resumable_honours_from_html_and_stem(spark, tmp_path):
     """build_index_resumable extracts and stems like build_index: on
     HTML pages with from_html=True and stem=True its segment rows equal
